@@ -8,15 +8,24 @@ funnels every row through ONE partition: a non-starter at 100 TB.
 
 Technique (SURVEY.md §4 custom-work item 1): split the data into
 order-aligned buckets, number rows *within* each bucket in parallel,
-then add per-bucket offsets computed from a tiny (num_buckets-row)
-count aggregate broadcast back. Two narrow passes, no global sort
-bottleneck, ids are dense and start at ``start``.
+then add per-bucket offsets (the cumulative row counts of the buckets
+before it). No global sort bottleneck, ids are dense and start at
+``start``.
+
+The freezing strategies (``checkpoint`` / ``persist``) collect the
+per-bucket counts DURING the freeze (an Observation on the freezing
+job, ≤ num_buckets rows) and fold the offsets in as an
+``element_at(<array literal>, bucket + 1)`` projection: the ids are a
+plain projection over the frozen blocks, so every downstream action
+re-reads those blocks and nothing else — no counts subplan, no offsets
+join. The lazy ``sample`` strategy keeps a counts aggregate + broadcast
+offsets join unless parquet footers prove the counts.
 
 The correctness hazard all strategies guard: the per-bucket counts and
-the final numbering are separate Spark jobs, and every row must land in
-the same bucket with the same within-bucket rank in both — either by
-freezing the bucketed data once (``checkpoint`` / ``persist``) or by
-deriving the bucket from the row's own values (``sample``).
+the final numbering must see every row in the same bucket with the same
+within-bucket rank — either by freezing the bucketed data once
+(``checkpoint`` / ``persist``) or by deriving the bucket from the row's
+own values (``sample``).
 """
 
 from __future__ import annotations
@@ -24,11 +33,12 @@ from __future__ import annotations
 import functools
 import operator
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 #: first-order-column dtypes with an order-preserving numeric projection,
-#: enabling single-job approx_percentile boundaries in strategy="sample".
+#: enabling single-job approx_percentile boundaries in strategy="sample"
+#: and statistics-derived (``first_col_range``) buckets in every strategy.
 _NUMERIC_BOUNDARY_TYPES = {
     "tinyint",
     "smallint",
@@ -58,6 +68,7 @@ def with_dense_ids(
     release: list | None = None,
     first_col_range: tuple | None = None,
     rowgroup_stats: list | None = None,
+    totals: list | None = None,
 ) -> DataFrame:
     """Assign dense ids ``start, start+1, ...`` in ``order_cols`` order.
 
@@ -68,19 +79,19 @@ def with_dense_ids(
 
     Strategies (pick by what the *input* costs to recompute):
 
-    - ``"checkpoint"`` (default, safe everywhere): range-shuffle, stamp
-      ``spark_partition_id``, eagerly ``localCheckpoint`` ONCE. The
-      blocks are ContextCleaner-managed (no global-CacheManager entry
-      to leak) and double as a cache for downstream consumers. Cost:
-      one full write of the frame to block storage.
+    - ``"checkpoint"`` (default, safe everywhere): bucket, rank within
+      bucket, eagerly ``localCheckpoint`` ONCE; the per-bucket counts
+      ride that job. The blocks are ContextCleaner-managed (no
+      global-CacheManager entry to leak) and double as a cache for
+      downstream consumers: the result is a projection over them.
+      Cost: one full write of the frame to block storage.
     - ``"persist"``: same shape, but the frozen intermediate is
       ``persist()``-ed (deserialized memory — cheapest to fill and
-      re-read) and appended to the required ``release`` list; the
-      CALLER must ``unpersist()`` those handles after its final action
-      on the result (SQL persists pin global CacheManager entries until
-      explicitly released). Fastest for a multi-consumer pipeline
-      period; unusable when nobody can release (e.g. a query handed to
-      an external runner).
+      re-read), filled by one count job, and appended to the required
+      ``release`` list; the CALLER must ``unpersist()`` those handles
+      after its final action on the result (SQL persists pin global
+      CacheManager entries until explicitly released). Unusable when
+      nobody can release (e.g. a query handed to an external runner).
     - ``"sample"``: never materializes anything. Order-aligned buckets
       are derived from the row's own ``order_cols`` values against
       boundary keys collected once (one tiny column-pruned job), so
@@ -90,13 +101,6 @@ def with_dense_ids(
       counts pass prunes to ``order_cols``) and shuffled once, but
       never written to block storage. Requires ``order_cols`` to be a
       null-free unique key (recomputation must not reorder ties).
-      ``first_col_range=(lo, hi)`` (numeric/date first column only)
-      supplies the value range from table STATISTICS — e.g. parquet
-      footer min/max, catalog stats — so even the boundary job is
-      skipped: uniform boundaries are derived driver-side and the
-      operator runs zero jobs beyond the two data passes. Balance then
-      depends on the first column being roughly uniform over the range;
-      correctness never does.
       ``rowgroup_stats=[(num_rows, min, max, null_count), ...]`` (per
       parquet row group of the first order column) fuses footer ROW
       COUNTS in too: bucket count is sized to ``_TARGET_ROWS_PER_BUCKET``
@@ -104,11 +108,28 @@ def with_dense_ids(
       inputs still fan out to the full width), and when no row group
       straddles a bucket boundary the per-bucket counts are EXACT from
       the footers alone — the counts pass disappears and the offsets
-      frame is a driver-side literal: ONE data pass total.
+      are a driver-side literal: ONE data pass total.
+
+    ``first_col_range=(lo, hi)`` (numeric/date/timestamp first column
+    only) supplies the first column's value range from what the caller
+    already knows — table STATISTICS such as parquet footer min/max, or
+    a range it built itself (a period's time window, ``[1, n]`` of an
+    earlier dense numbering). Buckets are then uniform boundaries over
+    it, derived driver-side: no sampling job (the ``checkpoint`` /
+    ``persist`` range shuffle otherwise runs its whole input once more
+    to sample bounds) and no boundary job (``sample``). Balance depends
+    on the column being roughly uniform over the range; correctness
+    never does.
+
+    ``totals`` (``checkpoint`` / ``persist`` only): a list the number of
+    rows numbered is appended to — known driver-side once the freeze
+    has run, so the caller needs no count job.
     """
     if num_partitions is None:
         num_partitions = df.sparkSession.sparkContext.defaultParallelism
     if strategy == "sample":
+        if totals is not None:
+            raise ValueError("totals needs a freezing strategy (checkpoint/persist)")
         return _dense_ids_by_sampled_bounds(
             df, order_cols, id_col, start, num_partitions, first_col_range,
             rowgroup_stats,
@@ -118,24 +139,108 @@ def with_dense_ids(
     if strategy not in ("checkpoint", "persist"):
         raise ValueError(f"unknown strategy {strategy!r}")
 
+    numbered, counts = _freeze_ranked(
+        _bucketed(df, order_cols, num_partitions, first_col_range),
+        [],
+        order_cols,
+        strategy,
+        release,
+    )
+    per_bucket = dict(counts)
+    if totals is not None:
+        totals.append(sum(per_bucket.values()))
+    return _number_buckets(
+        numbered,
+        "__pid",
+        order_cols,
+        id_col,
+        start,
+        has_rank=True,
+        literal_counts=[per_bucket.get(b, 0) for b in range(_n_buckets(per_bucket))],
+    )
+
+
+def _bucketed(
+    df: DataFrame,
+    order_cols: list[str],
+    num_partitions: int,
+    first_col_range: tuple | None,
+) -> DataFrame:
+    """``df`` plus an order-aligned bucket id ``__pid``: uniform bounds
+    over a caller-known ``first_col_range``, else a sampled range
+    shuffle's partition id."""
+    if first_col_range is not None:
+        first = order_cols[0]
+        proxy, to_num = _numeric_proxy(dict(df.dtypes)[first], first)
+        if proxy is None:
+            raise ValueError(
+                f"first_col_range needs a numeric/date/timestamp first order column, got {first!r}"
+            )
+        lo, hi = (to_num(v) for v in first_col_range)
+        return df.withColumn(
+            "__pid", _bucket_expr(proxy, _uniform_bounds(lo, hi, num_partitions))
+        )
     ranged = df.repartitionByRange(num_partitions, *[F.col(c) for c in order_cols])
-    ranged = ranged.withColumn("__pid", F.spark_partition_id())
-    w = Window.partitionBy("__pid").orderBy(*[F.col(c).asc() for c in order_cols])
-    # Freeze ONCE, before branching: AQE may coalesce the range-shuffle
-    # into a different partition layout per job, and upstream shuffles
-    # make input row order (hence the range sampler's boundaries)
-    # nondeterministic — spark_partition_id must be observed once, not
-    # recomputed (otherwise ids duplicate/skip).
-    numbered = ranged.withColumn("__rn", F.row_number().over(w))
+    return ranged.withColumn("__pid", F.spark_partition_id())
+
+
+def _freeze_ranked(
+    df: DataFrame,
+    group_cols: list[str],
+    order_cols: list[str],
+    strategy: str,
+    release: list | None,
+) -> tuple[DataFrame, list[tuple]]:
+    """Rank rows within (``__pid``, *group_cols) as ``__rn``, freeze
+    ONCE, and return the frozen frame with its per-(bucket, *group)
+    row counts ``[(bucket, *group, n), ...]``.
+
+    Freeze before branching: AQE may coalesce a range shuffle into a
+    different partition layout per job, and upstream shuffles make input
+    row order (hence the range sampler's boundaries) nondeterministic —
+    ``spark_partition_id`` must be observed once, not recomputed
+    (otherwise ids duplicate/skip). The counts ride the freezing job as
+    an Observation: a full-frame count in the SAME window spec as the
+    rank (one Window operator, no extra sort), reported once per bucket
+    by its first row."""
+    keys = ["__pid", *group_cols]
+    w = Window.partitionBy(*keys).orderBy(*[F.col(c).asc() for c in order_cols])
+    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    obs = Observation()
+    numbered = (
+        df.withColumn("__rn", F.row_number().over(w))
+        .withColumn("__cnt", F.count(F.lit(1)).over(whole))
+        .observe(
+            obs,
+            F.collect_list(
+                F.when(F.col("__rn") == 1, F.struct(*keys, "__cnt"))
+            ).alias("counts"),
+        )
+        .drop("__cnt")
+    )
     if strategy == "persist":
         numbered = numbered.persist()
         release.append(numbered)
+        numbered.count()
     else:
         numbered = numbered.localCheckpoint(eager=True)
+    return numbered, [tuple(r) for r in obs.get["counts"]]
 
-    return _number_buckets(
-        numbered, "__pid", order_cols, id_col, start, has_rank=True
-    )
+
+def _n_buckets(per_bucket) -> int:
+    """Offset-array length: buckets 0..max seen (≥ 1 so an empty input
+    still types as array<bigint>)."""
+    return max(per_bucket, default=0) + 1
+
+
+def _offset_array(counts: list[int], base: int):
+    """``array(base, base + c0, base + c0 + c1, ...)`` as ONE SQL
+    literal expression (one py4j call, not one ``F.lit`` per bucket)."""
+    offs, acc = [], base
+    for c in counts:
+        offs.append(acc)
+        acc += c
+    return F.expr(f"array({', '.join(f'{o}L' for o in offs)})")
 
 
 def _number_buckets(
@@ -147,17 +252,19 @@ def _number_buckets(
     has_rank: bool = False,
     literal_counts: list[int] | None = None,
 ) -> DataFrame:
-    """row_number within bucket + broadcast cumulative bucket offsets.
+    """row_number within bucket + cumulative bucket offsets.
 
-    ``has_rank`` is an explicit contract (the checkpoint path computes
-    ``__rn`` before freezing) — never inferred from the column list, so
-    a caller frame that happens to carry a ``__rn`` column can't smuggle
-    stale ranks in. The output stays LAZY: downstream actions re-run
-    only a broadcast join against the ≤num_buckets-row offsets frame.
+    ``has_rank`` is an explicit contract (the freezing strategies
+    compute ``__rn`` before freezing) — never inferred from the column
+    list, so a caller frame that happens to carry a ``__rn`` column
+    can't smuggle stale ranks in.
 
-    ``literal_counts[i]`` = exact row count of bucket i (e.g. proven
-    from parquet row-group footers): the counts job is skipped entirely
-    and the offsets frame is a driver-side literal.
+    ``literal_counts[i]`` = exact row count of bucket i (observed by
+    the freeze, or proven from parquet row-group footers): the offsets
+    are an ``element_at`` over a driver-side array literal, so the ids
+    are a pure projection — no counts job, no join. Without them the
+    output stays LAZY: downstream actions re-run a counts aggregate and
+    a broadcast join against the ≤num_buckets-row offsets frame.
     """
     if has_rank:
         numbered = df
@@ -165,29 +272,12 @@ def _number_buckets(
         w = Window.partitionBy(bucket_col).orderBy(*[F.col(c).asc() for c in order_cols])
         numbered = df.withColumn("__rn", F.row_number().over(w))
     if literal_counts is not None:
-        if len(literal_counts) == 1:
-            # lone bucket: the offset is the constant 0 — no join at all
-            return (
-                numbered.withColumn(
-                    id_col, (F.col("__rn") + F.lit(start - 1)).cast("long")
-                )
-                .drop(bucket_col, "__rn")
-            )
-        acc, rows = 0, []
-        for i, c in enumerate(literal_counts):
-            rows.append((i, acc))
-            acc += c
-        offsets = df.sparkSession.createDataFrame(
-            rows, f"{bucket_col} int, __off long"
+        off = F.element_at(
+            _offset_array(literal_counts, start - 1), F.col(bucket_col) + 1
         )
-        return (
-            numbered.join(F.broadcast(offsets), bucket_col)
-            .withColumn(
-                id_col,
-                (F.col("__rn") + F.col("__off") + F.lit(start - 1)).cast("long"),
-            )
-            .drop(bucket_col, "__rn", "__off")
-        )
+        return numbered.withColumn(
+            id_col, (F.col("__rn") + off).cast("long")
+        ).drop(bucket_col, "__rn")
     counts = numbered.groupBy(bucket_col).agg(F.count(F.lit(1)).alias("__cnt"))
     # ≤num_buckets rows from here on: coalesce(1) makes the cumsum
     # window's AllTuples requirement already-satisfied (CoalesceExec
@@ -212,62 +302,117 @@ def with_dense_ids_grouped(
     starts: dict,
     id_col: str = "id",
     num_partitions: int | None = None,
+    first_col_range: tuple | None = None,
+    totals: dict | None = None,
 ) -> DataFrame:
-    """SEVERAL independent dense-id sequences from ONE range shuffle
-    and ONE freeze: group g's rows get ``starts[g], starts[g]+1, ...``
-    in ``order_cols`` order. Output-equivalent to calling
+    """SEVERAL independent dense-id sequences from ONE bucketing and
+    ONE freeze: group g's rows get ``starts[g], starts[g]+1, ...`` in
+    ``order_cols`` order. Output-equivalent to calling
     ``with_dense_ids`` once per group over the filtered subsets
     (property-pinned), but the (often wide) frame is materialized to
     checkpoint blocks ONCE instead of once per group — the sync
-    pipeline's mint/transfer fact split pays one checkpoint of
-    ``rows_wa`` here where two half-frame checkpoints (same total
-    bytes, twice the jobs and shuffles) used to run.
+    pipeline's mint/transfer fact split pays one checkpoint here where
+    two half-frame checkpoints (same total bytes, twice the jobs and
+    shuffles) used to run.
 
-    Shape: the same order-aligned range shuffle as ``with_dense_ids``
-    (group membership does NOT partition the shuffle — ids of every
-    group stay globally order-aligned), ranks from a window over
-    (bucket, group), per-(bucket, group) counts, and per-group
-    cumulative offsets + seed folded in through one broadcast join.
-    ``group_col`` values must all be keys of ``starts``."""
+    Shape: the same order-aligned buckets as ``with_dense_ids`` (group
+    membership does NOT partition the buckets — ids of every group stay
+    globally order-aligned; ``first_col_range`` works as there), ranks
+    from a window over (bucket, group), per-(bucket, group) counts
+    observed by the freeze, and one offsets array per group (its seed
+    folded in) picked by group and indexed by bucket. ``group_col``
+    values must all be keys of ``starts``; ``totals``, when given, is
+    filled with the row count per group."""
     if num_partitions is None:
         num_partitions = df.sparkSession.sparkContext.defaultParallelism
-    ranged = df.repartitionByRange(
-        num_partitions, *[F.col(c) for c in order_cols]
+    numbered, counts = _freeze_ranked(
+        _bucketed(df, order_cols, num_partitions, first_col_range),
+        [group_col],
+        order_cols,
+        "checkpoint",
+        None,
     )
-    ranged = ranged.withColumn("__pid", F.spark_partition_id())
-    w = Window.partitionBy("__pid", group_col).orderBy(
-        *[F.col(c).asc() for c in order_cols]
+    per = {g: {} for g in starts}
+    for b, g, n in counts:
+        per[g][b] = n
+    nb = _n_buckets({b for b, _, _ in counts})
+    if totals is not None:
+        totals.update({g: sum(per[g].values()) for g in starts})
+    offsets = F.create_map(
+        *[
+            x
+            for g, s in starts.items()
+            for x in (
+                F.lit(g),
+                _offset_array([per[g].get(b, 0) for b in range(nb)], s - 1),
+            )
+        ]
     )
-    # same freeze-once contract as with_dense_ids: counts and final
-    # numbering must observe one bucketing, not one per job
-    numbered = ranged.withColumn("__rn", F.row_number().over(w))
-    numbered = numbered.localCheckpoint(eager=True)
-    counts = numbered.groupBy("__pid", group_col).agg(
-        F.count(F.lit(1)).alias("__cnt")
+    off = F.element_at(offsets[F.col(group_col)], F.col("__pid") + 1)
+    return numbered.withColumn(id_col, (F.col("__rn") + off).cast("long")).drop(
+        "__pid", "__rn"
     )
-    w_off = Window.partitionBy(group_col).orderBy("__pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = (
-        counts.coalesce(1)  # ≤ num_buckets × |groups| rows (see _number_buckets)
-        .withColumn("__off", F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)))
-        .select("__pid", group_col, "__off")
-    )
-    seed = F.create_map(
-        *[x for g, s in starts.items() for x in (F.lit(g), F.lit(s))]
-    )
-    return (
-        numbered.join(F.broadcast(offsets), ["__pid", group_col])
-        .withColumn(
-            id_col,
-            (
-                F.col("__rn")
-                + F.col("__off")
-                + seed[F.col(group_col)]
-                - 1
-            ).cast("long"),
-        )
-        .drop("__pid", "__rn", "__off")
+
+
+def _numeric_proxy(dtype: str, first: str):
+    """``(proxy column, to_num)`` for an order-preserving numeric
+    projection of column ``first`` (``to_num`` maps a Python value of
+    the column — e.g. a footer statistic — into the proxy's domain), or
+    ``(None, None)`` when the dtype has none."""
+    if dtype not in _NUMERIC_BOUNDARY_TYPES:
+        return None, None
+    if dtype == "date":
+
+        def to_num(v):
+            import datetime
+
+            return (
+                (v - datetime.date(1970, 1, 1)).days
+                if isinstance(v, datetime.date)
+                else v
+            )
+
+        return F.unix_date(F.col(first)), to_num
+    if dtype.startswith("timestamp"):
+
+        def to_num(v):
+            # Footer stats arrive as datetimes; the proxy compares
+            # against unix_micros under the UTC-pinned session, so
+            # naive stats must be interpreted as UTC — a bare
+            # .timestamp() would apply the HOST timezone and shift
+            # every bucket boundary by the UTC offset, silently
+            # corrupting the footer-proved literal bucket counts
+            # (duplicate/gapped ids) on any non-UTC machine.
+            import datetime
+
+            if isinstance(v, datetime.datetime):
+                if v.tzinfo is None:
+                    v = v.replace(tzinfo=datetime.timezone.utc)
+                return int(v.timestamp() * 1_000_000)
+            return v
+
+        return F.unix_micros(F.col(first).cast("timestamp")), to_num
+    return F.col(first), lambda v: v
+
+
+def _uniform_bounds(lo, hi, num_buckets: int) -> list:
+    """Boundary keys splitting ``[lo, hi]`` into ``num_buckets`` equal
+    widths (fewer when the range is too narrow)."""
+    if num_buckets <= 1 or hi <= lo:
+        return []
+    width = (hi - lo) / num_buckets
+    return sorted({int(lo + i * width) for i in range(1, num_buckets)})
+
+
+def _bucket_expr(proxy, bounds: list):
+    """bucket(v) = #bounds <= v, as a plain ``+``-chain of WHENs
+    (whole-stage-codegen'd), NOT a higher-order ``F.aggregate`` lambda
+    (interpreted per row — measured ~7× slower on 150k rows)."""
+    if not bounds:
+        return F.lit(0)
+    return functools.reduce(
+        operator.add,
+        [F.when(proxy >= F.lit(b), 1).otherwise(0) for b in bounds],
     )
 
 
@@ -290,51 +435,14 @@ def _dense_ids_by_sampled_bounds(
     count + collect-sample of the composite key. Either way the bucket
     is a pure expression over the row's own values — deterministic
     under recomputation with no persist, no checkpoint, and no reliance
-    on ``spark_partition_id``. The boundary comparisons are emitted as
-    a plain ``+``-chain of WHENs (whole-stage-codegen'd), NOT a
-    higher-order ``F.aggregate`` lambda (interpreted per row — measured
-    ~7× slower on 150k rows).
+    on ``spark_partition_id``.
     """
     first = order_cols[0]
-    dtype = dict(df.dtypes)[first]
+    proxy, to_num = _numeric_proxy(dict(df.dtypes)[first], first)
 
     bucket = None
     literal_counts = None
-    if dtype in _NUMERIC_BOUNDARY_TYPES:
-        if dtype == "date":
-            proxy = F.unix_date(F.col(first))
-
-            def to_num(v):
-                import datetime
-
-                return (
-                    (v - datetime.date(1970, 1, 1)).days
-                    if isinstance(v, datetime.date)
-                    else v
-                )
-        elif dtype.startswith("timestamp"):
-            proxy = F.unix_micros(F.col(first).cast("timestamp"))
-
-            def to_num(v):
-                # Footer stats arrive as datetimes; the proxy compares
-                # against unix_micros under the UTC-pinned session, so
-                # naive stats must be interpreted as UTC — a bare
-                # .timestamp() would apply the HOST timezone and shift
-                # every bucket boundary by the UTC offset, silently
-                # corrupting the footer-proved literal bucket counts
-                # (duplicate/gapped ids) on any non-UTC machine.
-                import datetime
-
-                if isinstance(v, datetime.datetime):
-                    if v.tzinfo is None:
-                        v = v.replace(tzinfo=datetime.timezone.utc)
-                    return int(v.timestamp() * 1_000_000)
-                return v
-        else:
-            proxy = F.col(first)
-
-            def to_num(v):
-                return v
+    if proxy is not None:
         rg = None
         if rowgroup_stats:
             rg = [
@@ -358,8 +466,7 @@ def _dense_ids_by_sampled_bounds(
         if first_col_range is not None:
             # table statistics supplied: uniform boundaries, ZERO jobs
             lo, hi = (to_num(v) for v in first_col_range)
-            width = (hi - lo) / num_partitions
-            bounds = sorted({int(lo + i * width) for i in range(1, num_partitions)})
+            bounds = _uniform_bounds(lo, hi, num_partitions)
         elif num_partitions > 1:
             fractions = [i / num_partitions for i in range(1, num_partitions)]
             row = df.select(
@@ -369,10 +476,7 @@ def _dense_ids_by_sampled_bounds(
         else:
             bounds = []
         if bounds:
-            bucket = functools.reduce(
-                operator.add,
-                [F.when(proxy >= F.lit(b), 1).otherwise(0) for b in bounds],
-            )
+            bucket = _bucket_expr(proxy, bounds)
         if rg is not None:
             # EXACT per-bucket counts from footers alone, possible iff no
             # row group straddles a boundary (trivially true for a single

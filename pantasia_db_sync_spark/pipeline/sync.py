@@ -7,8 +7,8 @@ driver-side state with a distributed equivalent:
 | reference mechanism                         | here                                   |
 |---------------------------------------------|----------------------------------------|
 | IdIndex dicts (natkey→id)                   | broadcast left-anti joins on the dims  |
-| next-id counters (A5 max-id probe)          | max(id)+1 scalar + dense-rank offsets  |
-| ordered row loop, later-rows-overwrite (D3) | per-key argmax windows over `seq`      |
+| next-id counters (A5 max-id probe)          | max(id)+1 seed + literal bucket offsets|
+| ordered row loop, later-rows-overwrite (D3) | per-key argmax (max_by) over `seq`     |
 | per-period SQL + fetchall                   | pushed-down period predicate, no collect|
 | insert lists + per-table bulk INSERT        | append-only fact partitions, versioned dims |
 | tip/period loop (G1/G2)                     | data-derived tips + period iteration   |
@@ -16,7 +16,7 @@ driver-side state with a distributed equivalent:
 Row order: the reference relies on `ORDER BY b3.time asc` and
 result-set order within equal times (Postgres-plan-dependent). We fix a
 deterministic total order `seq` = (tx_time, tx_id, ma_id, leg, sub_id)
-assigned with the per-partition-offset technique — no single-partition
+assigned with the per-bucket-offset technique — no single-partition
 global window (SURVEY.md §4 item 1).
 """
 
@@ -52,6 +52,42 @@ def pg_escape_udf(names):  # binary series → Postgres encode(...,'escape') tex
     return pd.Series([pg_escape(bytes(b)) if b is not None else None for b in names])
 
 
+def _attach_ids(
+    frame: DataFrame,
+    key: str,
+    id_col: str,
+    dim_ids: DataFrame | None,
+    new_ids: DataFrame,
+    inner: bool = False,
+) -> DataFrame:
+    """``frame`` plus ``id_col``: the surrogate id of its ``key`` in the
+    dimension (``dim_ids``: (key, id_col) rows, None before the first
+    commit) or among this period's new rows (``new_ids``, same shape;
+    its keys are disjoint from the dimension's by the anti-join that
+    minted them). NULL when neither holds the key, or, with ``inner``,
+    the row is dropped — an inner join against ``dim ∪ new``.
+
+    Two joins rather than one against the union: the dimension is a
+    parquet scan the planner sizes (broadcast while small, shuffled
+    beyond), but the new rows are checkpoint blocks whose size estimate
+    is inherited from the plan that built them — astronomically large
+    after the extraction's joins — so a join against the union never
+    plans a static broadcast, and AQE shuffles both sides before
+    switching to one. The per-period side is broadcast outright."""
+    out = frame.join(
+        F.broadcast(new_ids.withColumnRenamed(id_col, "__new_id")), key, "left"
+    )
+    if dim_ids is None:
+        out = out.withColumnRenamed("__new_id", id_col)
+    else:
+        out = (
+            out.join(dim_ids.withColumnRenamed(id_col, "__dim_id"), key, "left")
+            .withColumn(id_col, F.coalesce("__new_id", "__dim_id"))
+            .drop("__new_id", "__dim_id")
+        )
+    return out.where(F.col(id_col).isNotNull()) if inner else out
+
+
 class SyncEngine:
     def __init__(
         self,
@@ -64,7 +100,6 @@ class SyncEngine:
         retention_keep_last: int | None = None,
         compact_every: int | None = None,
         cluster_facts_by: str | list[str] | None = None,
-        dim_id_strategy: str = "checkpoint",
     ) -> None:
         self.spark = spark
         self.source_dir = source_dir
@@ -89,22 +124,23 @@ class SyncEngine:
         # rows to the sync hot path; turn it on when read patterns are
         # time-ranged (the analytics default at 100 TB).
         self.cluster_facts_by = cluster_facts_by
-        # dense-id strategy for the three SMALL per-period dim frames
-        # (new wallets/collections/assets). "checkpoint" (default)
-        # freezes each; "sample" derives order-aligned buckets with no
-        # materialization (operators/surrogate.py) — their inputs are
-        # cheap re-aggregations of the frozen records checkpoint, and
-        # the min(seq)-style order keys are unique by construction
-        # (each seq belongs to exactly one group's row set).
-        self.dim_id_strategy = dim_id_strategy
         # per-run carry-forward (see process_period): None = must probe
         self._seeds: dict[str, int] | None = None
-        self._dim_totals: dict[str, int] | None = None
+        self._src_schemas: dict = {}
 
     # --- sources -------------------------------------------------------------
 
     def src(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.source_dir, f"{name}.parquet"))
+        """Source table ``name``. Its schema is inferred once per engine
+        and passed on every later read: parquet schema inference runs a
+        Spark job per read, and each period's extraction reads nine."""
+        path = os.path.join(self.source_dir, f"{name}.parquet")
+        schema = self._src_schemas.get(name)
+        if schema is None:
+            df = self.spark.read.parquet(path)
+            self._src_schemas[name] = df.schema
+            return df
+        return self.spark.read.schema(schema).parquet(path)
 
     # --- tips & periods (G1/G2) ----------------------------------------------
 
@@ -305,41 +341,37 @@ class SyncEngine:
         return (m or 0) + 1
 
     def process_period(self, lo: datetime, hi: datetime, commit_id: int) -> dict[str, int]:
-        from pyspark.sql import Observation
-
         spark = self.spark
         records = self.extract(lo, hi)
         # Stake derivation (the one irreducible Python UDF, H1) is folded
-        # in BEFORE the cache so bech32 runs exactly once per row — the
+        # in BEFORE the freeze so bech32 runs exactly once per row — the
         # wallet aggregation and the per-row key probe both reuse it.
         records = records.withColumn(
             "stake_derived", staking_address_udf("address")
         ).withColumn("wallet_key", F.coalesce("stake_derived", "address"))
-        # (An Observation for the record count was tried and reverted:
-        # repartitionByRange inside with_dense_ids evaluates its child
-        # twice per job — sampling pass + shuffle pass — so an upstream
-        # observe node double-fires. records.count() on the checkpoint
-        # blocks below is one cheap job; all OTHER stats ride existing
-        # write actions as Observations.)
-        # with_dense_ids (default "checkpoint" strategy) freezes its
-        # numbered intermediate once, so no extra .cache() is needed:
-        # every downstream job reads those checkpoint blocks plus a
-        # cheap broadcast join for the offsets. Measured (round 3): the
-        # "persist" strategy is 2.1x SLOWER here (31s vs 14.7s at bench
-        # scale 1.0) — deserialized caching of these wide JSON-heavy
-        # frames costs more than block-serialized checkpoints, the same
-        # effect as the rows_wa note below.
+        # Every surrogate id of the period is numbered ONCE against
+        # driver-side offsets (operators/surrogate.py): each numbering
+        # freezes its input to checkpoint blocks, its per-bucket counts
+        # ride that freeze, and the ids are a projection over the blocks
+        # — so the six writes below are scans + projections + the
+        # per-period joins, never a re-run of an upstream numbering.
+        # The counts also land here, on the driver: they ARE the period
+        # stats and the next period's seeds.
         #
-        # The records frame is frozen BEFORE the dense-id range shuffle
-        # too (round 5): repartitionByRange evaluates its child twice —
-        # a boundary-sampling pass plus the shuffle pass — and here the
-        # child is the full extraction INCLUDING both pandas UDFs
-        # (bech32 + pg_escape) and the CIP-25 JSON parse. Freezing
-        # first means both passes read checkpoint blocks instead of
-        # re-running the Python stages; measured 34.5s -> 22.5s
-        # (+55% rec/s) on the 10x-scale sync.
-        records = records.localCheckpoint(eager=True)
-        records = with_dense_ids(records, SEQ_ORDER, id_col="seq", start=1)
+        # `seq` buckets come from the period's own time window (tx_time
+        # is in (lo, hi] by the extraction predicate), so there is no
+        # range-sampling pass: the extraction — both pandas UDFs
+        # (bech32 + pg_escape) and the CIP-25 JSON parse — runs once,
+        # in the map side of the numbering's one shuffle, and is frozen
+        # with the ranks. `seq` is then dense in [1, n], which gives
+        # every later numbering ordered by seq / first_seq exact bucket
+        # bounds too. `n` collects the rows each numbering minted.
+        n: dict[str, list[int]] = {t: [] for t in ("records", *DIM_TABLES[:3])}
+        records = with_dense_ids(
+            records, SEQ_ORDER, id_col="seq", first_col_range=(lo, hi),
+            totals=n["records"],
+        )
+        seq_range = (1, n["records"][0])
 
         wallet_dim = self.store.read(spark, "wallet")
         collection_dim = self.store.read(spark, "collection")
@@ -350,7 +382,7 @@ class SyncEngine:
         # Seed probes (A5): one max-id scan per table on the FIRST
         # period of a run only. Ids are dense, so subsequent periods
         # carry seeds forward arithmetically from the previous period's
-        # write stats (_next_seeds) — the 5 per-period scan jobs the
+        # numbering totals — the 5 per-period scan jobs the
         # steady-state loop used to pay become zero, and a restart
         # re-probes from committed data (crash-safe, G7).
         if self._seeds is None:
@@ -373,7 +405,7 @@ class SyncEngine:
             )
         new_wallets = with_dense_ids(
             wallet_firsts, ["first_seq"], id_col="id", start=seeds["wallet"],
-            strategy=self.dim_id_strategy,
+            first_col_range=seq_range, totals=n["wallet"],
         ).select(
             "id",
             F.col("wallet_key").alias("address"),
@@ -394,7 +426,7 @@ class SyncEngine:
             )
         new_collections = with_dense_ids(
             coll_firsts, ["first_seq"], id_col="id", start=seeds["collection"],
-            strategy=self.dim_id_strategy,
+            first_col_range=seq_range, totals=n["collection"],
         ).select(
             "id",
             "policy_id",
@@ -407,20 +439,19 @@ class SyncEngine:
             else collection_dim.unionByName(new_collections)
         )
 
-        # wallet id per row (burns → NULL). The dim side of the key→id
-        # probe is AQE-broadcastable while small; the per-batch addr_map
-        # joins back on seq (equi-shuffle, never a driver loop).
-        addr_map = (
-            addr_rows.select("seq", "wallet_key")
-            .join(
-                wallet_next.select(
-                    F.col("address").alias("wallet_key"), F.col("id").alias("row_wallet_id")
-                ),
-                "wallet_key",
-            )
-            .select("seq", "row_wallet_id")
+        # wallet id per row (burns carry no address: their NULL
+        # wallet_key matches nothing → NULL wallet id)
+        rows_w = _attach_ids(
+            records,
+            "wallet_key",
+            "row_wallet_id",
+            None if empty_wallet else wallet_dim.select(
+                F.col("address").alias("wallet_key"), F.col("id").alias("row_wallet_id")
+            ),
+            new_wallets.select(
+                F.col("address").alias("wallet_key"), F.col("id").alias("row_wallet_id")
+            ),
         )
-        rows_w = records.join(addr_map, "seq", "left")
 
         # ---- assets (natural key = fingerprint; insert carries first-row state) ----
         w_first = Window.partitionBy("asset_fingerprint").orderBy("seq")
@@ -430,30 +461,34 @@ class SyncEngine:
             .drop("rn")
         )
         if asset_dim is not None:
-            new_asset_firsts = firsts.join(
+            firsts = firsts.join(
                 asset_dim.select(F.col("fingerprint").alias("asset_fingerprint")),
                 "asset_fingerprint",
                 "left_anti",
             )
-        else:
-            new_asset_firsts = firsts
-        new_assets = (
-            with_dense_ids(
-                new_asset_firsts, ["seq"], id_col="id",
-                start=seeds["asset"], strategy=self.dim_id_strategy,
-            )
-            .join(
-                collection_next.select(F.col("policy_id"), F.col("id").alias("collection_id")),
-                "policy_id",
-            )
-            .select(
-                "id",
-                "collection_id",
-                F.concat_ws(".", "policy_id", "asset_name_hash").alias("hash"),
-                hex_to_string("asset_name_hash").alias("name"),
-                F.col("asset_fingerprint").alias("fingerprint"),
-                F.col("row_wallet_id").alias("current_wallet_id"),
-            )
+        # the collection id is joined in BEFORE the numbering freezes the
+        # frame, so the asset write and the fact numbering both read it
+        # from the blocks instead of re-running the join
+        new_asset_firsts = _attach_ids(
+            firsts,
+            "policy_id",
+            "collection_id",
+            None if collection_dim is None else collection_dim.select(
+                "policy_id", F.col("id").alias("collection_id")
+            ),
+            new_collections.select("policy_id", F.col("id").alias("collection_id")),
+            inner=True,
+        )
+        new_assets = with_dense_ids(
+            new_asset_firsts, ["seq"], id_col="id", start=seeds["asset"],
+            first_col_range=seq_range, totals=n["asset"],
+        ).select(
+            "id",
+            "collection_id",
+            F.concat_ws(".", "policy_id", "asset_name_hash").alias("hash"),
+            hex_to_string("asset_name_hash").alias("name"),
+            F.col("asset_fingerprint").alias("fingerprint"),
+            F.col("row_wallet_id").alias("current_wallet_id"),
         )
         asset_all = (
             new_assets if asset_dim is None else asset_dim.unionByName(new_assets)
@@ -463,10 +498,18 @@ class SyncEngine:
         # than the downstream recomputation it saves — caching it
         # regressed the 10×-scale sync 188s → 293s (the cache fill
         # materializes JSON-heavy columns and blocks AQE broadcast
-        # reuse). Only the narrow `records` frame is worth caching.
-        rows_wa = rows_w.join(
-            asset_all.select(F.col("fingerprint").alias("asset_fingerprint"), F.col("id").alias("asset_id")),
+        # reuse). The fact numbering below freezes it once anyway.
+        rows_wa = _attach_ids(
+            rows_w,
             "asset_fingerprint",
+            "asset_id",
+            None if asset_dim is None else asset_dim.select(
+                F.col("fingerprint").alias("asset_fingerprint"), F.col("id").alias("asset_id")
+            ),
+            new_assets.select(
+                F.col("fingerprint").alias("asset_fingerprint"), F.col("id").alias("asset_id")
+            ),
+            inner=True,
         )
 
         # ---- facts: ids in seq order per type (mint vs transfer counters) ----
@@ -476,12 +519,15 @@ class SyncEngine:
         # blocks once instead of twice — measured ~1s off the scale-1
         # sync wall (two fewer jobs + one fewer shuffle of JSON-heavy
         # columns).
+        n_facts: dict = {}
         typed_rows = with_dense_ids_grouped(
             rows_wa,
             ["seq"],
             "is_mint_tx",
             starts={True: seeds["asset_mint_tx"], False: seeds["asset_tx"]},
             id_col="id",
+            first_col_range=seq_range,
+            totals=n_facts,
         )
         mint_rows = typed_rows.where(F.col("is_mint_tx"))
         tx_rows = typed_rows.where(~F.col("is_mint_tx"))
@@ -507,22 +553,23 @@ class SyncEngine:
         )
 
         # ---- latest-state (D3): current wallet + asset_ext ----
-        w_last = Window.partitionBy("asset_id").orderBy(F.col("seq").desc())
-        last_tx = (
-            tx_rows.withColumn("rn", F.row_number().over(w_last))
-            .where(F.col("rn") == 1)
-            .select("asset_id", F.col("row_wallet_id").alias("last_tx_wallet"), F.col("id").alias("last_tx_id"))
-        )
-        last_pos_mint = (
-            mint_rows.where(F.col("quantity") > 0)
-            .withColumn("rn", F.row_number().over(w_last))
-            .where(F.col("rn") == 1)
-            .select("asset_id", F.col("id").alias("last_mint_id"))
+        # ONE aggregate over the frozen facts: per asset touched this
+        # period, the wallet and id of its last transfer and the id of
+        # its last positive mint (max_by over seq; rows of the other
+        # kind order by NULL, which max_by skips)
+        tx_seq = F.when(~F.col("is_mint_tx"), F.col("seq"))
+        mint_seq = F.when(F.col("is_mint_tx") & (F.col("quantity") > 0), F.col("seq"))
+        latest = typed_rows.groupBy("asset_id").agg(
+            F.max_by("row_wallet_id", tx_seq).alias("last_tx_wallet"),
+            F.max_by("id", tx_seq).alias("last_tx_id"),
+            F.max_by("id", mint_seq).alias("last_mint_id"),
         )
 
+        # at most one row per asset touched this period: broadcast it
+        # rather than shuffle the whole asset dim to it
         asset_next = (
             asset_all.join(
-                last_tx.select(F.col("asset_id").alias("id"), "last_tx_wallet"),
+                F.broadcast(latest.select(F.col("asset_id").alias("id"), "last_tx_wallet")),
                 "id",
                 "left",
             )
@@ -532,10 +579,9 @@ class SyncEngine:
             .drop("last_tx_wallet")
         )
 
-        ext_updates = (
-            last_tx.select("asset_id", F.col("last_tx_id"))
-            .join(last_pos_mint, "asset_id", "full")
-        )
+        ext_updates = latest.where(
+            F.col("last_tx_id").isNotNull() | F.col("last_mint_id").isNotNull()
+        ).select("asset_id", "last_tx_id", "last_mint_id")
         if ext_dim is not None:
             ext_next = (
                 ext_dim.join(ext_updates, "asset_id", "full")
@@ -555,53 +601,29 @@ class SyncEngine:
             )
 
         # ---- commit: stage dims, append facts, flip dims before facts ----
-        # Per-period stats come from Observation nodes collected DURING
-        # the stage/append write actions themselves — zero dedicated
-        # count jobs in steady state. Previous dim totals are carried
-        # like the seeds (probed once per run, parquet metadata reads).
-        if self._dim_totals is None:
-            # manifest rows, not df.count(): first-period probe = zero jobs
-            self._dim_totals = {
-                t: (self.store.dim_stats(t) or {"rows": 0})["rows"]
-                for t in ("wallet", "collection", "asset")
-            }
-        prev_counts = dict(self._dim_totals)
-        n_obs = {t: Observation() for t in ("wallet", "collection", "asset")}
-        w_obs = {t: Observation() for t in FACT_TABLES}
-        cnt = F.count(F.lit(1)).alias("n")
         # The six write actions (4 dim stages + 2 fact appends) are
-        # mutually independent once the shared `records` checkpoint
-        # exists, so they are SUBMITTED CONCURRENTLY: the Spark
-        # scheduler interleaves their stages across free slots instead
-        # of paying six sequential job tails (driver-side scheduling +
-        # output commit latency). Same on a cluster — concurrent
-        # actions from one driver are the standard way to overlap
-        # independent writes. Crash semantics unchanged: every pointer
-        # flip still happens after ALL writes land (stage-then-flip),
-        # and a failure in any future aborts the period before any
-        # repoint.
+        # mutually independent once the numberings are frozen, so they
+        # are SUBMITTED CONCURRENTLY: the Spark scheduler interleaves
+        # their stages across free slots instead of paying six
+        # sequential job tails (driver-side scheduling + output commit
+        # latency). Same on a cluster — concurrent actions from one
+        # driver are the standard way to overlap independent writes.
+        # Crash semantics unchanged: every pointer flip still happens
+        # after ALL writes land (stage-then-flip), and a failure in any
+        # future aborts the period before any repoint.
         from concurrent.futures import ThreadPoolExecutor
 
         writes = {
-            "wallet": lambda: self.store.stage(
-                "wallet", wallet_next.observe(n_obs["wallet"], cnt)
-            ),
-            "collection": lambda: self.store.stage(
-                "collection", collection_next.observe(n_obs["collection"], cnt)
-            ),
-            "asset": lambda: self.store.stage(
-                "asset", asset_next.observe(n_obs["asset"], cnt)
-            ),
+            "wallet": lambda: self.store.stage("wallet", wallet_next),
+            "collection": lambda: self.store.stage("collection", collection_next),
+            "asset": lambda: self.store.stage("asset", asset_next),
             "asset_ext": lambda: self.store.stage("asset_ext", ext_next),
             "asset_tx": lambda: self.store.append(
-                "asset_tx",
-                asset_tx_new.observe(w_obs["asset_tx"], cnt),
-                commit_id,
-                cluster_by=self.cluster_facts_by,
+                "asset_tx", asset_tx_new, commit_id, cluster_by=self.cluster_facts_by
             ),
             "asset_mint_tx": lambda: self.store.append(
                 "asset_mint_tx",
-                asset_mint_tx_new.observe(w_obs["asset_mint_tx"], cnt),
+                asset_mint_tx_new,
                 commit_id,
                 cluster_by=self.cluster_facts_by,
             ),
@@ -618,17 +640,15 @@ class SyncEngine:
         self.store.commit_append("asset_tx", commit_id)
         self.store.commit_append("asset_mint_tx", commit_id)
 
-        totals = {t: int(n_obs[t].get["n"]) for t in n_obs}
         stats = {
-            "records": records.count(),
-            "new_wallets": totals["wallet"] - prev_counts["wallet"],
-            "new_collections": totals["collection"] - prev_counts["collection"],
-            "new_assets": totals["asset"] - prev_counts["asset"],
-            "asset_tx": int(w_obs["asset_tx"].get["n"]),
-            "asset_mint_tx": int(w_obs["asset_mint_tx"].get["n"]),
+            "records": n["records"][0],
+            "new_wallets": n["wallet"][0],
+            "new_collections": n["collection"][0],
+            "new_assets": n["asset"][0],
+            "asset_tx": n_facts[False],
+            "asset_mint_tx": n_facts[True],
         }
-        self._dim_totals = totals
-        # dense ids ⇒ next seed = this seed + rows written; keeps the
+        # dense ids ⇒ next seed = this seed + rows numbered; keeps the
         # next period's probe-free (validated against a fresh probe by
         # tests/test_pipeline_e2e.py seed-carry test)
         self._seeds = {
@@ -700,23 +720,24 @@ class SyncEngine:
         the next run_sync resumes from the data-derived tip."""
         self.ensure_bootstrap()
         self._recover_fact_commits()
-        # fresh probe per run: carried seeds/totals are an in-run
-        # optimization only, never trusted across restarts (G7 crash
-        # recovery)
+        # fresh probe per run: carried seeds are an in-run optimization
+        # only, never trusted across restarts (G7 crash recovery)
         self._seeds = None
-        self._dim_totals = None
         out = []
         periods = self.period_list()
         if max_periods is not None:
             periods = periods[:max_periods]
         base_commit = self.store.current_version("asset_tx") or 0
-        for i, (lo, hi) in enumerate(periods, start=1):
+        for commit_id, (lo, hi) in enumerate(periods, start=base_commit + 1):
             if shutdown is not None and shutdown.stop_requested:
                 break
-            out.append(self.process_period(lo, hi, commit_id=base_commit + i))
+            out.append(self.process_period(lo, hi, commit_id=commit_id))
             if self.retention_keep_last is not None:
                 self.store.vacuum(keep_last=self.retention_keep_last)
-            if self.compact_every is not None and i % self.compact_every == 0:
+            # keyed on the commit id, not the position in this call: a
+            # daemon whose polls each commit fewer than compact_every
+            # periods still compacts once every compact_every commits
+            if self.compact_every is not None and commit_id % self.compact_every == 0:
                 for t in FACT_TABLES:
                     self.store.compact_facts(
                         self.spark, t, cluster_by=self.cluster_facts_by

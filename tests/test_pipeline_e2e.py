@@ -108,27 +108,6 @@ def test_golden_parity(spark, source_dir, batch_store):
         )
 
 
-def test_sample_dim_id_strategy_identical(
-    spark, source_dir, batch_store, tmp_path_factory
-):
-    """dim_id_strategy='sample' (zero-materialization dense ids for the
-    three small per-period dim frames) must produce BYTE-IDENTICAL
-    table contents to the default checkpoint strategy — the min(seq)
-    order keys are unique by construction, which is exactly the
-    precondition the sample strategy needs."""
-    store = TableStore(str(tmp_path_factory.mktemp("sink_sample")))
-    engine = SyncEngine(
-        spark,
-        source_dir,
-        store,
-        time_interval_minutes=10**6,
-        dim_id_strategy="sample",
-    )
-    stats = engine.run_sync()
-    assert len(stats) == 1 and stats[0]["records"] > 0
-    assert _store_tables(spark, store) == _store_tables(spark, batch_store)
-
-
 def test_idempotent_rerun(spark, source_dir, batch_store):
     engine = SyncEngine(spark, source_dir, batch_store, time_interval_minutes=10**6)
     before = _store_tables(spark, batch_store)
@@ -161,6 +140,46 @@ def test_seed_carry_forward_matches_fresh_probe(
     carried = engine._seeds
     probed = {t: engine._seed(t) for t in (*DIM_TABLES[:3], *FACT_TABLES)}
     assert carried == probed
+
+
+#: Ceiling on Spark jobs per warm period of the 3-period sync below:
+#: the measured count plus about 10 %. Every surrogate id is numbered
+#: once against driver-side offsets, so a period is its extraction,
+#: five freezes and six scan+project writes.
+WARM_PERIOD_JOB_CEILING = 50  # measured 45
+
+
+def test_sync_period_job_count(spark, source_dir, tmp_path_factory):
+    """Jobs per warm sync period stay under WARM_PERIOD_JOB_CEILING.
+
+    Counted as the rise of the highest job id the status tracker
+    reports across each ``process_period`` call (job ids only grow; the
+    tracker's retained-job list is capped, so list lengths are not
+    used). Deterministic: the fixture, the session's confs and AQE's
+    runtime decisions are the same on every run. When ids were numbered
+    against a lazy offsets join (a counts shuffle + broadcast per
+    numbering, re-run by every consumer), these periods ran 106 jobs
+    each."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def last_job_id() -> int:
+        return max(tracker.getJobIdsForGroup(None), default=-1)
+
+    store = TableStore(str(tmp_path_factory.mktemp("sink_jobs")))
+    engine = SyncEngine(spark, source_dir, store, time_interval_minutes=30)
+    jobs = []
+    inner = engine.process_period
+
+    def counted(lo, hi, commit_id):
+        before = last_job_id()
+        out = inner(lo, hi, commit_id)
+        jobs.append(last_job_id() - before)
+        return out
+
+    engine.process_period = counted
+    assert len(engine.run_sync(max_periods=3)) == 3
+    warm = jobs[1:]
+    assert max(warm) <= WARM_PERIOD_JOB_CEILING, jobs
 
 
 def test_fk_integrity_green_on_synced_store(spark, batch_store):
@@ -221,9 +240,9 @@ def test_multi_period_sync_leaks_no_cached_frames(
     spark, source_dir, tmp_path_factory
 ):
     """A long-running incremental sync must not accumulate pinned
-    frames: after ≥3 periods, Spark's global SQL CacheManager is empty
-    (the with_dense_ids persist used to leak one entry per call, ~6 per
-    period), and the block-manager footprint of localCheckpoints is
+    frames: after 4 periods, Spark's global SQL CacheManager is empty
+    (the with_dense_ids persist used to leak one entry per call, one
+    per numbering), and the block-manager footprint of localCheckpoints is
     reclaimable — after dropping references + GC the persistent-RDD
     count falls back to (or below) its single-period level."""
     import gc
@@ -254,8 +273,8 @@ def test_multi_period_sync_leaks_no_cached_frames(
 
     store = TableStore(str(tmp_path_factory.mktemp("sink_leak")))
     engine = SyncEngine(spark, source_dir, store, time_interval_minutes=30)
-    stats = engine.run_sync(max_periods=3)
-    assert len(stats) == 3
+    stats = engine.run_sync(max_periods=4)
+    assert len(stats) == 4
 
     cache_mgr = spark._jsparkSession.sharedState().cacheManager()
     assert cache_mgr.isEmpty(), "SQL CacheManager entries leaked by sync"
@@ -275,18 +294,20 @@ def test_multi_period_sync_leaks_no_cached_frames(
         gc.collect()
         jvm.System.gc()
         n = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-        # A true leak pins ~6 checkpoints/period = 18+ and GROWS with
-        # period count; reclamation means settling near one period's
-        # worth (measured floor: ~7 — the most recent frames outlive a
-        # few GC cycles before the async cleaner runs). 15 discriminates
-        # the leak (≥18) from the floor under full-suite GC pressure
-        # (a run settled at 13 once with zero leaked frames).
+        # A true leak pins 5 checkpoints/period (one per numbering:
+        # seq, wallets, collections, assets, facts) = 20 over these 4
+        # periods and GROWS with period count; reclamation means
+        # settling near one period's worth (the most recent frames
+        # outlive a few GC cycles before the async cleaner runs). 15
+        # discriminates the leak (≥20) from the floor under full-suite
+        # GC pressure (a run settled at 13 once with zero leaked
+        # frames).
         if n <= baseline + 15:
             break
         time.sleep(2)
     assert n is not None and n <= baseline + 15, (
         f"{n} persistent RDDs pinned after GC (baseline {baseline}; "
-        f"a per-period leak would pin ≥18)"
+        f"a per-period leak would pin ≥20)"
     )
 
 

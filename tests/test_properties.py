@@ -18,6 +18,29 @@ SETTINGS = dict(
 )
 
 
+def _row_number_ids(df, order_cols, start, group_col=None):
+    """Reference numbering: one global row_number() window per group
+    (single-partition, fine at test size), offset by ``start`` — a
+    dict of per-group starts when ``group_col`` is given."""
+    from pyspark.sql import Window
+
+    w = Window.orderBy(*order_cols)
+    if group_col is None:
+        return df.withColumn("id", F.row_number().over(w) + F.lit(start - 1))
+    seed = F.create_map(*[x for g, s in start.items() for x in (F.lit(g), F.lit(s))])
+    w = Window.partitionBy(group_col).orderBy(*order_cols)
+    return df.withColumn("id", F.row_number().over(w) + seed[F.col(group_col)] - 1)
+
+
+def _id_rows(df, cols):
+    return sorted(tuple(r[c] for c in ("id", *cols)) for r in df.collect())
+
+
+#: three rows over eight buckets: most buckets hold no row (the offsets
+#: array must still index every bucket a row lands in)
+_SPARSE = [(0, 1), (7, -3), (50, 9)]
+
+
 @settings(**SETTINGS)
 @given(
     rows=st.lists(
@@ -27,15 +50,39 @@ SETTINGS = dict(
         unique=True,
     ),
     start=st.integers(1, 10_000),
+    parts=st.sampled_from([None, 3, 8]),
+    ranged=st.booleans(),
 )
-def test_dense_ids_are_dense_and_ordered(spark, rows, start):
+@example(rows=_SPARSE, start=1, parts=8, ranged=False)
+@example(rows=_SPARSE, start=1, parts=8, ranged=True)
+@example(rows=_SPARSE, start=9_000, parts=8, ranged=True)
+def test_dense_ids_are_dense_and_ordered(spark, rows, start, parts, ranged):
     """ids are exactly start..start+n-1 with no gaps, and id order
-    equals the order_cols order — for ANY input and ANY seed."""
+    equals the order_cols order — for ANY input and ANY seed: identical
+    to a row_number() reference under both freezing strategies, with
+    sampled range buckets or caller-supplied ``first_col_range`` ones,
+    including buckets that hold no rows."""
     df = spark.createDataFrame(rows, "k int, v int")
-    out = with_dense_ids(df, ["k", "v"], id_col="id", start=start).collect()
-    got = sorted((r["id"], (r["k"], r["v"])) for r in out)
-    assert [i for i, _ in got] == list(range(start, start + len(rows)))
-    assert [kv for _, kv in got] == sorted(rows)
+    want = _id_rows(_row_number_ids(df, ["k", "v"], start), ["k", "v"])
+    assert [r[0] for r in want] == list(range(start, start + len(rows)))
+    kw = dict(
+        id_col="id", start=start, num_partitions=parts,
+        first_col_range=(0, 50) if ranged else None,
+    )
+    totals: list = []
+    got = with_dense_ids(df, ["k", "v"], totals=totals, **kw)
+    assert _id_rows(got, ["k", "v"]) == want
+    assert totals == [len(rows)]
+    pins: list = []
+    persisted = with_dense_ids(df, ["k", "v"], strategy="persist", release=pins, **kw)
+    assert _id_rows(persisted, ["k", "v"]) == want
+    for f in pins:
+        f.unpersist()
+
+
+#: group True only in the low keys: with range buckets over [0, 50] it
+#: is missing from every upper bucket
+_SKEWED_GROUPS = [(k, k, k < 10) for k in range(0, 50, 2)]
 
 
 @settings(**SETTINGS)
@@ -49,23 +96,33 @@ def test_dense_ids_are_dense_and_ordered(spark, rows, start):
     ),
     start_a=st.integers(1, 10_000),
     start_b=st.integers(1, 10_000),
+    parts=st.sampled_from([None, 4, 8]),
+    ranged=st.booleans(),
 )
-def test_dense_ids_grouped_equals_per_group(spark, rows, start_a, start_b):
+@example(rows=_SKEWED_GROUPS, start_a=1, start_b=500, parts=4, ranged=True)
+@example(rows=_SKEWED_GROUPS, start_a=7_000, start_b=1, parts=8, ranged=False)
+def test_dense_ids_grouped_equals_per_group(
+    spark, rows, start_a, start_b, parts, ranged
+):
     """with_dense_ids_grouped is OUTPUT-IDENTICAL to one with_dense_ids
-    call per group over the filtered subsets, for any input, any group
-    split (including one-sided), and any pair of seeds — the contract
-    that lets the sync pipeline fuse its mint/transfer numberings into
-    one checkpoint."""
+    call per group over the filtered subsets, and to a per-group
+    row_number() reference, for any input, any group split (including
+    one-sided, and groups missing from some buckets), and any pair of
+    seeds — the contract that lets the sync pipeline fuse its
+    mint/transfer numberings into one checkpoint."""
     from pantasia_db_sync_spark.operators.surrogate import (
         with_dense_ids_grouped,
     )
 
     df = spark.createDataFrame(rows, "k int, v int, g boolean")
     starts = {True: start_a, False: start_b}
+    rng = (0, 50) if ranged else None
+    totals: dict = {}
     got = sorted(
         (r["g"], r["id"], r["k"], r["v"])
         for r in with_dense_ids_grouped(
-            df, ["k", "v"], "g", starts, id_col="id"
+            df, ["k", "v"], "g", starts, id_col="id", num_partitions=parts,
+            first_col_range=rng, totals=totals,
         ).collect()
     )
     want = []
@@ -74,10 +131,14 @@ def test_dense_ids_grouped_equals_per_group(spark, rows, start_a, start_b):
         want.extend(
             (gval, r["id"], r["k"], r["v"])
             for r in with_dense_ids(
-                sub, ["k", "v"], id_col="id", start=starts[gval]
+                sub, ["k", "v"], id_col="id", start=starts[gval],
+                num_partitions=parts, first_col_range=rng,
             ).collect()
         )
     assert got == sorted(want)
+    ref = _row_number_ids(df, ["k", "v"], starts, group_col="g")
+    assert got == sorted((r["g"], r["id"], r["k"], r["v"]) for r in ref.collect())
+    assert totals == {g: sum(r[2] == g for r in rows) for g in (True, False)}
 
 
 @settings(**SETTINGS)

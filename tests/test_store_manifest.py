@@ -271,6 +271,31 @@ def test_sync_auto_compaction(spark, source_dir, tmp_path, _golden_store):
     assert a == b
 
 
+def test_sync_compaction_counts_commits_across_runs(
+    spark, source_dir, tmp_path, monkeypatch
+):
+    """A daemon whose polls each commit one period still compacts every
+    ``compact_every`` commits: the check is keyed on the commit id, not
+    on the period's position inside one run_sync call (numbered from 1
+    on every call, it never reached 4 at one period per poll)."""
+    store = TableStore(str(tmp_path / "poll_compact"))
+    passes = []
+    inner = store.compact_facts
+
+    def counted(spark_, table, **kw):
+        passes.append((table, store.current_version(table)))
+        return inner(spark_, table, **kw)
+
+    monkeypatch.setattr(store, "compact_facts", counted)
+    engine = SyncEngine(
+        spark, source_dir, store, time_interval_minutes=30, compact_every=4
+    )
+    for _ in range(5):
+        assert len(engine.run_sync(max_periods=1)) == 1
+    # exactly one compaction pass over the fact tables, after commit 4
+    assert passes == [(t, 4) for t in FACT_TABLES]
+
+
 def _file_ranges(commit_dir: str, column: str) -> list[tuple]:
     """Per-FILE (min, max) of `column` from parquet footers."""
     import pyarrow.parquet as pq
