@@ -107,7 +107,7 @@ def bloom_any_probe_arrow(spark, words: list[int], m_bits: int = BLOOM_M_BITS, k
     memory shape that scales to ~1e8-key benchmark sets where a hash
     relation would be multi-GB) in batched Python with a per-task memo
     over repeated shingles, and short-circuits per row exactly like
-    ``exists``.
+    ``exists`` (a NULL element never matches there either).
 
     Bit-position parity with :func:`bloom_bit_positions` is LOAD-
     BEARING: the mask is built by the JVM expression, so the Python
@@ -153,7 +153,8 @@ def bloom_any_probe_arrow(spark, words: list[int], m_bits: int = BLOOM_M_BITS, k
         for batch in batches:
             yield batch.map(
                 lambda arr: bool(
-                    arr is not None and any(might(s) for s in arr)
+                    arr is not None
+                    and any(s is not None and might(s) for s in arr)
                 )
             )
 

@@ -40,6 +40,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
+def checkpoint_rdd(df: DataFrame):
+    """JVM handle of the persisted RDD behind a ``localCheckpoint``-ed
+    frame: the checkpointed Dataset's analyzed plan IS a ``LogicalRDD``
+    over it. Holding the handle lets its owner free the blocks with
+    ``unpersist(False)`` even after every other reference is gone (the
+    weak-map hazard above)."""
+    return df._jdf.queryExecution().analyzed().rdd()
+
+
 class LoopCheckpointer:
     """Checkpoint successive generations of a loop's state, freeing
     superseded generations' blocks (module docstring has the design)."""
@@ -52,11 +61,7 @@ class LoopCheckpointer:
 
     def step(self, df: DataFrame, eager: bool = True) -> DataFrame:
         out = df.localCheckpoint(eager=eager)
-        # the checkpointed Dataset's analyzed plan IS a LogicalRDD over
-        # the persisted RDD — keep that handle so the superseded
-        # generation can be unpersisted even after every other
-        # reference is gone (weak-map hazard above)
-        self._gens.append(out._jdf.queryExecution().analyzed().rdd())
+        self._gens.append(checkpoint_rdd(out))
         while len(self._gens) > self._keep:
             self._gens.pop(0).unpersist(False)
         return out

@@ -36,6 +36,8 @@ import operator
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from .ckpt import checkpoint_rdd
+
 #: first-order-column dtypes with an order-preserving numeric projection,
 #: enabling single-job approx_percentile boundaries in strategy="sample"
 #: and statistics-derived (``first_col_range``) buckets in every strategy.
@@ -69,6 +71,7 @@ def with_dense_ids(
     first_col_range: tuple | None = None,
     rowgroup_stats: list | None = None,
     totals: list | None = None,
+    split: tuple[str, int] | None = None,
 ) -> DataFrame:
     """Assign dense ids ``start, start+1, ...`` in ``order_cols`` order.
 
@@ -84,7 +87,9 @@ def with_dense_ids(
       ride that job. The blocks are ContextCleaner-managed (no
       global-CacheManager entry to leak) and double as a cache for
       downstream consumers: the result is a projection over them.
-      Cost: one full write of the frame to block storage.
+      Cost: one full write of the frame to block storage. With a
+      ``release`` list, the checkpointed RDD's JVM handle is appended
+      to it so the caller can free the blocks once it is done.
     - ``"persist"``: same shape, but the frozen intermediate is
       ``persist()``-ed (deserialized memory — cheapest to fill and
       re-read), filled by one count job, and appended to the required
@@ -124,12 +129,20 @@ def with_dense_ids(
     ``totals`` (``checkpoint`` / ``persist`` only): a list the number of
     rows numbered is appended to — known driver-side once the freeze
     has run, so the caller needs no count job.
+
+    ``split=(col, k)`` (``checkpoint`` / ``persist`` only): ``col`` holds
+    ints in ``[0, k)`` that never decrease along ``order_cols`` (a
+    period index over a time order). Each bucket is subdivided by it
+    (still order-aligned), so the freeze's counts also give the rows per
+    ``col`` value: ``totals`` receives those k counts instead of one.
+
+    Every handle appended to ``release`` has ``unpersist(blocking)``.
     """
     if num_partitions is None:
         num_partitions = df.sparkSession.sparkContext.defaultParallelism
     if strategy == "sample":
-        if totals is not None:
-            raise ValueError("totals needs a freezing strategy (checkpoint/persist)")
+        if totals is not None or split is not None:
+            raise ValueError("totals/split need a freezing strategy (checkpoint/persist)")
         return _dense_ids_by_sampled_bounds(
             df, order_cols, id_col, start, num_partitions, first_col_range,
             rowgroup_stats,
@@ -140,7 +153,7 @@ def with_dense_ids(
         raise ValueError(f"unknown strategy {strategy!r}")
 
     numbered, counts = _freeze_ranked(
-        _bucketed(df, order_cols, num_partitions, first_col_range),
+        _bucketed(df, order_cols, num_partitions, first_col_range, split),
         [],
         order_cols,
         strategy,
@@ -148,7 +161,7 @@ def with_dense_ids(
     )
     per_bucket = dict(counts)
     if totals is not None:
-        totals.append(sum(per_bucket.values()))
+        totals.extend(_split_totals(per_bucket, split))
     return _number_buckets(
         numbered,
         "__pid",
@@ -165,10 +178,12 @@ def _bucketed(
     order_cols: list[str],
     num_partitions: int,
     first_col_range: tuple | None,
+    split: tuple[str, int] | None = None,
 ) -> DataFrame:
     """``df`` plus an order-aligned bucket id ``__pid``: uniform bounds
     over a caller-known ``first_col_range``, else a sampled range
-    shuffle's partition id."""
+    shuffle's partition id; with ``split=(col, k)``, ``bucket * k + col``
+    (order-aligned too, as both terms never decrease along the order)."""
     if first_col_range is not None:
         first = order_cols[0]
         proxy, to_num = _numeric_proxy(dict(df.dtypes)[first], first)
@@ -177,11 +192,23 @@ def _bucketed(
                 f"first_col_range needs a numeric/date/timestamp first order column, got {first!r}"
             )
         lo, hi = (to_num(v) for v in first_col_range)
-        return df.withColumn(
-            "__pid", _bucket_expr(proxy, _uniform_bounds(lo, hi, num_partitions))
-        )
-    ranged = df.repartitionByRange(num_partitions, *[F.col(c) for c in order_cols])
-    return ranged.withColumn("__pid", F.spark_partition_id())
+        pid = _bucket_expr(proxy, _uniform_bounds(lo, hi, num_partitions))
+    else:
+        df = df.repartitionByRange(num_partitions, *[F.col(c) for c in order_cols])
+        pid = F.spark_partition_id()
+    if split is not None:
+        col, k = split
+        pid = pid * k + F.col(col)
+    return df.withColumn("__pid", pid)
+
+
+def _split_totals(per_bucket: dict, split: tuple[str, int] | None) -> list[int]:
+    """Rows numbered: ``[total]``, or one count per ``split`` value."""
+    k = 1 if split is None else split[1]
+    out = [0] * k
+    for b, n in per_bucket.items():
+        out[b % k] += n
+    return out
 
 
 def _freeze_ranked(
@@ -224,6 +251,8 @@ def _freeze_ranked(
         numbered.count()
     else:
         numbered = numbered.localCheckpoint(eager=True)
+        if release is not None:
+            release.append(checkpoint_rdd(numbered))
     return numbered, [tuple(r) for r in obs.get["counts"]]
 
 
@@ -304,6 +333,8 @@ def with_dense_ids_grouped(
     num_partitions: int | None = None,
     first_col_range: tuple | None = None,
     totals: dict | None = None,
+    split: tuple[str, int] | None = None,
+    release: list | None = None,
 ) -> DataFrame:
     """SEVERAL independent dense-id sequences from ONE bucketing and
     ONE freeze: group g's rows get ``starts[g], starts[g]+1, ...`` in
@@ -322,22 +353,26 @@ def with_dense_ids_grouped(
     observed by the freeze, and one offsets array per group (its seed
     folded in) picked by group and indexed by bucket. ``group_col``
     values must all be keys of ``starts``; ``totals``, when given, is
-    filled with the row count per group."""
+    filled with the row count per group (with ``split``, the list of
+    counts per split value). ``split`` and ``release`` work as in
+    ``with_dense_ids``."""
     if num_partitions is None:
         num_partitions = df.sparkSession.sparkContext.defaultParallelism
     numbered, counts = _freeze_ranked(
-        _bucketed(df, order_cols, num_partitions, first_col_range),
+        _bucketed(df, order_cols, num_partitions, first_col_range, split),
         [group_col],
         order_cols,
         "checkpoint",
-        None,
+        release,
     )
     per = {g: {} for g in starts}
     for b, g, n in counts:
         per[g][b] = n
     nb = _n_buckets({b for b, _, _ in counts})
     if totals is not None:
-        totals.update({g: sum(per[g].values()) for g in starts})
+        for g in starts:
+            t = _split_totals(per[g], split)
+            totals[g] = t if split is not None else t[0]
     offsets = F.create_map(
         *[
             x

@@ -27,6 +27,7 @@ import shutil
 import time as _time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 MANIFEST = "_MANIFEST.json"  # hidden from Spark's file listing (leading _)
 
@@ -47,6 +48,20 @@ def _dec(v):
         if "__date__" in v:
             return _dt.date.fromisoformat(v["__date__"])
     return v
+
+
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, element and map value nullable: the form
+    Spark gives a parquet file's schema on read, whatever was written."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
 
 
 def footer_stats(path: str) -> dict:
@@ -317,7 +332,17 @@ class TableStore:
         v = self.current_version(table)
         if v is None:
             return None
-        return spark.read.parquet(self._resolve_version_dir(table, v))
+        return self._read_version(spark, self._resolve_version_dir(table, v))
+
+    def _read_version(self, spark: SparkSession, path: str) -> DataFrame:
+        """A version dir's rows. Its manifest's schema (written by the
+        version writers) is passed on, so the read launches no
+        schema-inference job; a manifest without one falls back to
+        inference."""
+        schema = self._read_manifest(path).get("schema")
+        if schema is None:
+            return spark.read.parquet(path)
+        return spark.read.schema(StructType.fromJson(schema)).parquet(path)
 
     def stage(self, table: str, df: DataFrame) -> int:
         """Write a new version directory without repointing.
@@ -328,7 +353,7 @@ class TableStore:
         if os.path.exists(path):
             shutil.rmtree(path)
         df.write.mode("overwrite").parquet(path)
-        self._write_manifest(path)
+        self._write_manifest(path, df.schema)
         return v
 
     def repoint(self, table: str, version: int) -> None:
@@ -728,7 +753,7 @@ class TableStore:
             if os.path.exists(path):
                 shutil.rmtree(path)  # dead claimant's partial stage
             df.write.mode("overwrite").parquet(path)
-            self._write_manifest(path)
+            self._write_manifest(path, df.schema)
             self._flip_pointer(table, cid)
             flipped = True  # durable from here: never release the claim
             self._log_commit_ts(table, cid)
@@ -1177,12 +1202,17 @@ class TableStore:
 
     # --- commit manifests ----------------------------------------------------
 
-    def _write_manifest(self, path: str) -> None:
+    def _write_manifest(self, path: str, schema: StructType | None = None) -> None:
+        """Footer stats of ``path``; with ``schema`` (the version writers
+        pass the frame they wrote), also its read schema for
+        ``_read_version``."""
         m = footer_stats(path)
         tmp = os.path.join(path, MANIFEST + ".tmp")
+        extra = {} if schema is None else {"schema": _nullable(schema).jsonValue()}
         with open(tmp, "w") as f:
             json.dump(
                 {
+                    **extra,
                     "rows": m["rows"],
                     "bytes": m["bytes"],
                     "stats": {
@@ -1675,7 +1705,7 @@ class TableStore:
         )
         if is_facts:
             return self._facts_frame(spark, table, version)
-        return spark.read.parquet(self._resolve_version_dir(table, version))
+        return self._read_version(spark, self._resolve_version_dir(table, version))
 
     # --- AS OF TIMESTAMP time travel ------------------------------------------
     # Delta/Iceberg resolve TIMESTAMP AS OF through per-commit wall

@@ -9,20 +9,29 @@ driver-side state with a distributed equivalent:
 | IdIndex dicts (natkey→id)                   | broadcast left-anti joins on the dims  |
 | next-id counters (A5 max-id probe)          | max(id)+1 seed + literal bucket offsets|
 | ordered row loop, later-rows-overwrite (D3) | per-key argmax (max_by) over `seq`     |
-| per-period SQL + fetchall                   | pushed-down period predicate, no collect|
+| per-period SQL + fetchall                   | one pushed-down extraction per catch-up batch, no collect |
 | insert lists + per-table bulk INSERT        | append-only fact partitions, versioned dims |
-| tip/period loop (G1/G2)                     | data-derived tips + period iteration   |
+| tip/period loop (G1/G2)                     | data-derived tips; batches of ≤ CATCHUP_PERIODS periods, one commit per period |
 
 Row order: the reference relies on `ORDER BY b3.time asc` and
 result-set order within equal times (Postgres-plan-dependent). We fix a
 deterministic total order `seq` = (tx_time, tx_id, ma_id, leg, sub_id)
 assigned with the per-bucket-offset technique — no single-partition
 global window (SURVEY.md §4 item 1).
+
+Catch-up: with k pending periods, ``run_sync`` extracts and numbers up
+to ``CATCHUP_PERIODS`` of them ONCE (one extraction over
+``(lo_1, hi_k]``, every row tagged with its ``period`` index), then
+commits them one period and one commit id at a time, each a slice of
+the batch's frozen frames — the reference's per-period commits, with
+the extraction and numbering cost paid once per batch.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
+from dataclasses import dataclass, field
 from datetime import datetime, timedelta
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -32,6 +41,7 @@ from pyspark.sql.types import StringType
 
 from ..functions.cardano import staking_address_udf
 from ..functions.hexstr import hex_to_string, lower_hex
+from ..operators.ckpt import checkpoint_rdd
 from ..operators.surrogate import with_dense_ids, with_dense_ids_grouped
 from .fixtures import GENESIS
 from .store import MANIFEST, TableStore
@@ -41,6 +51,10 @@ SEQ_ORDER = ["tx_time", "tx_id", "ma_id", "leg_order", "sub_id"]
 from .schemas import FACT_TABLES  # noqa: E402  (single source of truth)
 
 DIM_TABLES = ("wallet", "collection", "asset", "asset_ext")
+
+#: Most pending periods one catch-up batch extracts and numbers at once
+#: (see SyncEngine.process_period); each still commits on its own.
+CATCHUP_PERIODS = 8
 
 
 @pandas_udf(StringType())
@@ -88,6 +102,19 @@ def _attach_ids(
     return out.where(F.col(id_col).isNotNull()) if inner else out
 
 
+@dataclass
+class _Batch:
+    """Consecutive periods extracted and numbered once: the frames each
+    period's commit slices by ``period``, the per-period stats, and the
+    JVM handles of the checkpoints the batch owns."""
+
+    periods: list[tuple[datetime, datetime]]
+    frames: dict[str, DataFrame] = field(default_factory=dict)
+    stats: list[dict[str, int]] = field(default_factory=list)
+    frozen: list = field(default_factory=list)
+    committed: int = 0
+
+
 class SyncEngine:
     def __init__(
         self,
@@ -127,6 +154,10 @@ class SyncEngine:
         # per-run carry-forward (see process_period): None = must probe
         self._seeds: dict[str, int] | None = None
         self._src_schemas: dict = {}
+        # the periods run_sync will commit next, in order (a catch-up
+        # batch covers the next CATCHUP_PERIODS of them), and the open batch
+        self._pending: list[tuple[datetime, datetime]] = []
+        self._batch: _Batch | None = None
 
     # --- sources -------------------------------------------------------------
 
@@ -208,10 +239,16 @@ class SyncEngine:
 
     # --- extraction (the flagship query, A2/B/C ops) --------------------------
 
-    def extract(self, lo: datetime, hi: datetime) -> DataFrame:
+    def extract(
+        self, lo: datetime, hi: datetime, splits: Sequence[datetime] = ()
+    ) -> DataFrame:
         """Spark form of ``pantasia_get_records`` (app/db/postgres.py:327-402):
         burn leg ∪ output leg, broadcast dimension joins, decorrelated
-        lateral CIP-25 metadata with dynamic JSON path keys."""
+        lateral CIP-25 metadata with dynamic JSON path keys.
+
+        ``splits`` are the inner bounds of consecutive periods covering
+        ``(lo, hi]``; each row's ``period`` is the index of the period
+        holding its ``tx_time`` (the number of splits before it)."""
         block = self.src("block").where((F.col("time") > F.lit(lo)) & (F.col("time") <= F.lit(hi)))
         tx = self.src("tx").select(
             F.col("id").alias("tx_id"), lower_hex("hash").alias("tx_hash"), "block_id"
@@ -302,6 +339,9 @@ class SyncEngine:
         # object is re-stringified by from_json, then literal-path extraction.
         parsed = F.from_json(F.col("json"), "map<string,map<string,string>>")
         inner = parsed[F.col("policy_id")][F.col("asset_name")]
+        period = F.lit(0)
+        for t in splits:
+            period = period + F.when(F.col("tx_time") > F.lit(t), 1).otherwise(0)
         return joined.select(
             "ma_id",
             "tx_id",
@@ -320,6 +360,7 @@ class SyncEngine:
             F.get_json_object(inner, "$.image").alias("image"),
             inner.alias("metadata"),
             F.get_json_object(inner, "$.files").alias("files"),
+            period.alias("period"),
         )
 
     # --- per-period transform + commit ----------------------------------------
@@ -341,63 +382,112 @@ class SyncEngine:
         return (m or 0) + 1
 
     def process_period(self, lo: datetime, hi: datetime, commit_id: int) -> dict[str, int]:
+        """Commit period ``(lo, hi]`` as ``commit_id``; returns its stats.
+
+        The period is one slice of a *catch-up batch*: consecutive
+        periods extracted and numbered once (``_build_batch``), then
+        committed one period per call, in order. When ``(lo, hi]`` is
+        not the next period of the open batch, a new batch is built
+        from it and the periods ``run_sync`` has pending after it, at
+        most ``CATCHUP_PERIODS`` in all; a direct call outside
+        ``run_sync`` is a batch of one. The batch's frozen frames are
+        released after its last period commits, or as soon as its build
+        or a commit fails (the next call rebuilds from the store)."""
+        b = self._batch
+        try:
+            if b is None or b.periods[b.committed] != (lo, hi):
+                self._release_batch()
+                ahead = self._pending
+                i = ahead.index((lo, hi)) if (lo, hi) in ahead else len(ahead)
+                b = self._batch = _Batch(ahead[i : i + CATCHUP_PERIODS] or [(lo, hi)])
+                self._build_batch(b)
+            stats = self._commit_period(b, commit_id)
+        except BaseException:
+            self._release_batch()
+            raise
+        if b.committed == len(b.periods):
+            self._release_batch()
+        return stats
+
+    def _release_batch(self) -> None:
+        """Free the open batch's checkpoint blocks, if a batch is open."""
+        if self._batch is not None:
+            for h in self._batch.frozen:
+                h.unpersist(False)
+            self._batch = None
+
+    def _build_batch(self, b: _Batch) -> None:
+        """Extract and number the batch's consecutive periods ONCE,
+        filling its frames and per-period stats.
+
+        Every frame carries ``period``, the index of the period its row
+        belongs to (a dimension row: the period it is first seen in).
+        Numbering the whole batch in first-seen order
+        gives each period exactly the ids a period-by-period run gives
+        it: ``seq`` is time-ordered and the periods are consecutive, so
+        period i's new rows all sort after period i-1's, and the seeds
+        of period i are the batch's seeds plus the rows periods < i
+        numbered. The numberings split their buckets by ``period``, so
+        their counts are the per-period stats with no count job."""
         spark = self.spark
-        records = self.extract(lo, hi)
+        k = len(b.periods)
+        lo, hi = b.periods[0][0], b.periods[-1][1]
+        split = ("period", k)
+        records = self.extract(lo, hi, splits=[h for _, h in b.periods[:-1]])
         # Stake derivation (the one irreducible Python UDF, H1) is folded
         # in BEFORE the freeze so bech32 runs exactly once per row — the
         # wallet aggregation and the per-row key probe both reuse it.
         records = records.withColumn(
             "stake_derived", staking_address_udf("address")
         ).withColumn("wallet_key", F.coalesce("stake_derived", "address"))
-        # Every surrogate id of the period is numbered ONCE against
+        # Every surrogate id of the batch is numbered ONCE against
         # driver-side offsets (operators/surrogate.py): each numbering
         # freezes its input to checkpoint blocks, its per-bucket counts
         # ride that freeze, and the ids are a projection over the blocks
-        # — so the six writes below are scans + projections + the
+        # — so each period's writes are scans + projections + the
         # per-period joins, never a re-run of an upstream numbering.
-        # The counts also land here, on the driver: they ARE the period
-        # stats and the next period's seeds.
         #
-        # `seq` buckets come from the period's own time window (tx_time
+        # `seq` buckets come from the batch's own time window (tx_time
         # is in (lo, hi] by the extraction predicate), so there is no
         # range-sampling pass: the extraction — both pandas UDFs
         # (bech32 + pg_escape) and the CIP-25 JSON parse — runs once,
         # in the map side of the numbering's one shuffle, and is frozen
         # with the ranks. `seq` is then dense in [1, n], which gives
         # every later numbering ordered by seq / first_seq exact bucket
-        # bounds too. `n` collects the rows each numbering minted.
+        # bounds too. `n` collects the rows each numbering minted, per
+        # period.
         n: dict[str, list[int]] = {t: [] for t in ("records", *DIM_TABLES[:3])}
         records = with_dense_ids(
             records, SEQ_ORDER, id_col="seq", first_col_range=(lo, hi),
-            totals=n["records"],
+            totals=n["records"], split=split, release=b.frozen,
         )
-        seq_range = (1, n["records"][0])
+        seq_range = (1, sum(n["records"]))
 
+        # the dimensions as committed before the batch: what its
+        # anti-joins mint new rows against
         wallet_dim = self.store.read(spark, "wallet")
         collection_dim = self.store.read(spark, "collection")
         asset_dim = self.store.read(spark, "asset")
-        ext_dim = self.store.read(spark, "asset_ext")
 
-        empty_wallet = wallet_dim is None
         # Seed probes (A5): one max-id scan per table on the FIRST
-        # period of a run only. Ids are dense, so subsequent periods
-        # carry seeds forward arithmetically from the previous period's
-        # numbering totals — the 5 per-period scan jobs the
-        # steady-state loop used to pay become zero, and a restart
-        # re-probes from committed data (crash-safe, G7).
+        # batch of a run only. Ids are dense, so later periods carry
+        # seeds forward arithmetically from the numbering totals, and a
+        # restart re-probes from committed data (crash-safe, G7).
         if self._seeds is None:
             self._seeds = {t: self._seed(t) for t in (*DIM_TABLES[:3], *FACT_TABLES)}
-        seeds = dict(self._seeds)
+        seeds = self._seeds
 
         # ---- wallets (D2/D4: dedup on natural key, first-seen id order) ----
         addr_rows = records.where(F.col("address").isNotNull()).withColumn(
             "address_type",
             F.when(F.col("stake_derived").isNull(), "ENTERPRISE").otherwise("STAKE"),
         )
+        # `period` never decreases along `seq`: the first-seen period
+        # is the smallest one
         wallet_firsts = addr_rows.groupBy("wallet_key", "address_type").agg(
-            F.min("seq").alias("first_seq")
+            F.min("seq").alias("first_seq"), F.min("period").alias("period")
         )
-        if not empty_wallet:
+        if wallet_dim is not None:
             wallet_firsts = wallet_firsts.join(
                 wallet_dim.select(F.col("address").alias("wallet_key")),
                 "wallet_key",
@@ -405,7 +495,8 @@ class SyncEngine:
             )
         new_wallets = with_dense_ids(
             wallet_firsts, ["first_seq"], id_col="id", start=seeds["wallet"],
-            first_col_range=seq_range, totals=n["wallet"],
+            first_col_range=seq_range, totals=n["wallet"], split=split,
+            release=b.frozen,
         ).select(
             "id",
             F.col("wallet_key").alias("address"),
@@ -413,30 +504,27 @@ class SyncEngine:
             # app-owned column (reference DDL wallet.user_id): the sync
             # loop never assigns users, it only declares the slot
             F.lit(None).cast("int").alias("user_id"),
-        )
-        wallet_next = (
-            new_wallets if empty_wallet else wallet_dim.unionByName(new_wallets)
+            "period",
         )
 
         # ---- collections ----
-        coll_firsts = records.groupBy("policy_id").agg(F.min("seq").alias("first_seq"))
+        coll_firsts = records.groupBy("policy_id").agg(
+            F.min("seq").alias("first_seq"), F.min("period").alias("period")
+        )
         if collection_dim is not None:
             coll_firsts = coll_firsts.join(
                 collection_dim.select("policy_id"), "policy_id", "left_anti"
             )
         new_collections = with_dense_ids(
             coll_firsts, ["first_seq"], id_col="id", start=seeds["collection"],
-            first_col_range=seq_range, totals=n["collection"],
+            first_col_range=seq_range, totals=n["collection"], split=split,
+            release=b.frozen,
         ).select(
             "id",
             "policy_id",
             # app-owned column (reference DDL collection.name)
             F.lit(None).cast("string").alias("name"),
-        )
-        collection_next = (
-            new_collections
-            if collection_dim is None
-            else collection_dim.unionByName(new_collections)
+            "period",
         )
 
         # wallet id per row (burns carry no address: their NULL
@@ -445,7 +533,7 @@ class SyncEngine:
             records,
             "wallet_key",
             "row_wallet_id",
-            None if empty_wallet else wallet_dim.select(
+            None if wallet_dim is None else wallet_dim.select(
                 F.col("address").alias("wallet_key"), F.col("id").alias("row_wallet_id")
             ),
             new_wallets.select(
@@ -481,7 +569,8 @@ class SyncEngine:
         )
         new_assets = with_dense_ids(
             new_asset_firsts, ["seq"], id_col="id", start=seeds["asset"],
-            first_col_range=seq_range, totals=n["asset"],
+            first_col_range=seq_range, totals=n["asset"], split=split,
+            release=b.frozen,
         ).select(
             "id",
             "collection_id",
@@ -489,9 +578,7 @@ class SyncEngine:
             hex_to_string("asset_name_hash").alias("name"),
             F.col("asset_fingerprint").alias("fingerprint"),
             F.col("row_wallet_id").alias("current_wallet_id"),
-        )
-        asset_all = (
-            new_assets if asset_dim is None else asset_dim.unionByName(new_assets)
+            "period",
         )
 
         # NOT cached (measured): persisting this wide frame costs more
@@ -520,7 +607,7 @@ class SyncEngine:
         # sync wall (two fewer jobs + one fewer shuffle of JSON-heavy
         # columns).
         n_facts: dict = {}
-        typed_rows = with_dense_ids_grouped(
+        facts = with_dense_ids_grouped(
             rows_wa,
             ["seq"],
             "is_mint_tx",
@@ -528,47 +615,72 @@ class SyncEngine:
             id_col="id",
             first_col_range=seq_range,
             totals=n_facts,
-        )
-        mint_rows = typed_rows.where(F.col("is_mint_tx"))
-        tx_rows = typed_rows.where(~F.col("is_mint_tx"))
-
-        asset_mint_tx_new = mint_rows.select(
-            "id",
-            "asset_id",
-            F.col("row_wallet_id").alias("wallet_id"),
-            "quantity",
-            "tx_hash",
-            "tx_time",
-            "image",
-            "metadata",
-            "files",
-        )
-        asset_tx_new = tx_rows.select(
-            "id",
-            "asset_id",
-            F.col("row_wallet_id").alias("wallet_id"),
-            "quantity",
-            "tx_hash",
-            "tx_time",
+            split=split,
+            release=b.frozen,
         )
 
         # ---- latest-state (D3): current wallet + asset_ext ----
-        # ONE aggregate over the frozen facts: per asset touched this
-        # period, the wallet and id of its last transfer and the id of
-        # its last positive mint (max_by over seq; rows of the other
-        # kind order by NULL, which max_by skips)
+        # ONE aggregate over the frozen facts, frozen itself: per asset
+        # and period that touches it, the wallet and id of its last
+        # transfer and the id of its last positive mint (max_by over
+        # seq; rows of the other kind order by NULL, which max_by skips)
         tx_seq = F.when(~F.col("is_mint_tx"), F.col("seq"))
         mint_seq = F.when(F.col("is_mint_tx") & (F.col("quantity") > 0), F.col("seq"))
-        latest = typed_rows.groupBy("asset_id").agg(
-            F.max_by("row_wallet_id", tx_seq).alias("last_tx_wallet"),
-            F.max_by("id", tx_seq).alias("last_tx_id"),
-            F.max_by("id", mint_seq).alias("last_mint_id"),
+        latest = (
+            facts.groupBy("asset_id", "period")
+            .agg(
+                F.max_by("row_wallet_id", tx_seq).alias("last_tx_wallet"),
+                F.max_by("id", tx_seq).alias("last_tx_id"),
+                F.max_by("id", mint_seq).alias("last_mint_id"),
+            )
+            .localCheckpoint(eager=True)
         )
+        b.frozen.append(checkpoint_rdd(latest))
 
+        b.stats = [
+            {
+                "records": n["records"][i],
+                "new_wallets": n["wallet"][i],
+                "new_collections": n["collection"][i],
+                "new_assets": n["asset"][i],
+                "asset_tx": n_facts[False][i],
+                "asset_mint_tx": n_facts[True][i],
+            }
+            for i in range(k)
+        ]
+        b.frames = {
+            "wallet": new_wallets,
+            "collection": new_collections,
+            "asset": new_assets,
+            "facts": facts,
+            "latest": latest,
+        }
+
+    def _commit_period(self, b: _Batch, commit_id: int) -> dict[str, int]:
+        """Write the batch's next period: each dimension is its CURRENT
+        store version (never a read taken when the batch was built —
+        retention may have deleted that version since) plus the
+        period's new rows, the facts are the period's slice."""
+        spark = self.spark
+        i = b.committed
+        in_period = {
+            name: df.where(F.col("period") == i).drop("period")
+            for name, df in b.frames.items()
+        }
+
+        def with_new(table: str) -> DataFrame:
+            dim = self.store.read(spark, table)
+            new = in_period[table]
+            return new if dim is None else dim.unionByName(new)
+
+        wallet_next = with_new("wallet")
+        collection_next = with_new("collection")
+        latest = in_period["latest"]
         # at most one row per asset touched this period: broadcast it
         # rather than shuffle the whole asset dim to it
         asset_next = (
-            asset_all.join(
+            with_new("asset")
+            .join(
                 F.broadcast(latest.select(F.col("asset_id").alias("id"), "last_tx_wallet")),
                 "id",
                 "left",
@@ -579,6 +691,7 @@ class SyncEngine:
             .drop("last_tx_wallet")
         )
 
+        ext_dim = self.store.read(spark, "asset_ext")
         ext_updates = latest.where(
             F.col("last_tx_id").isNotNull() | F.col("last_mint_id").isNotNull()
         ).select("asset_id", "last_tx_id", "last_mint_id")
@@ -599,6 +712,27 @@ class SyncEngine:
                 F.col("last_mint_id").alias("latest_mint_tx_id"),
                 F.col("last_tx_id").alias("latest_tx_id"),
             )
+
+        facts = in_period["facts"]
+        asset_mint_tx_new = facts.where(F.col("is_mint_tx")).select(
+            "id",
+            "asset_id",
+            F.col("row_wallet_id").alias("wallet_id"),
+            "quantity",
+            "tx_hash",
+            "tx_time",
+            "image",
+            "metadata",
+            "files",
+        )
+        asset_tx_new = facts.where(~F.col("is_mint_tx")).select(
+            "id",
+            "asset_id",
+            F.col("row_wallet_id").alias("wallet_id"),
+            "quantity",
+            "tx_hash",
+            "tx_time",
+        )
 
         # ---- commit: stage dims, append facts, flip dims before facts ----
         # The six write actions (4 dim stages + 2 fact appends) are
@@ -640,17 +774,12 @@ class SyncEngine:
         self.store.commit_append("asset_tx", commit_id)
         self.store.commit_append("asset_mint_tx", commit_id)
 
-        stats = {
-            "records": n["records"][0],
-            "new_wallets": n["wallet"][0],
-            "new_collections": n["collection"][0],
-            "new_assets": n["asset"][0],
-            "asset_tx": n_facts[False],
-            "asset_mint_tx": n_facts[True],
-        }
+        stats = b.stats[i]
+        b.committed += 1
         # dense ids ⇒ next seed = this seed + rows numbered; keeps the
-        # next period's probe-free (validated against a fresh probe by
+        # next batch probe-free (validated against a fresh probe by
         # tests/test_pipeline_e2e.py seed-carry test)
+        seeds = self._seeds
         self._seeds = {
             "wallet": seeds["wallet"] + stats["new_wallets"],
             "collection": seeds["collection"] + stats["new_collections"],
@@ -714,10 +843,16 @@ class SyncEngine:
         max_periods: int | None = None,
         shutdown: "GracefulShutdown | None" = None,
     ) -> list[dict[str, int]]:
-        """One sync pass. With a ``shutdown`` handle (G6), a SIGINT/
-        SIGTERM between periods stops the loop after the in-flight
-        period's transactional commit — the store stays consistent and
-        the next run_sync resumes from the data-derived tip."""
+        """One sync pass: every pending period (at most ``max_periods``)
+        committed in order, one ``process_period`` call and one commit
+        id each. Catch-up runs in batches: the first call of each run of
+        up to ``CATCHUP_PERIODS`` periods extracts and numbers them all,
+        the later calls only write their slices. With a ``shutdown``
+        handle (G6), a SIGINT/SIGTERM between periods stops the loop
+        after the in-flight period's transactional commit — the store
+        stays consistent and the next run_sync resumes from the
+        data-derived tip. However the loop ends, the open batch's
+        frozen frames are released."""
         self.ensure_bootstrap()
         self._recover_fact_commits()
         # fresh probe per run: carried seeds are an in-run optimization
@@ -728,20 +863,25 @@ class SyncEngine:
         if max_periods is not None:
             periods = periods[:max_periods]
         base_commit = self.store.current_version("asset_tx") or 0
-        for commit_id, (lo, hi) in enumerate(periods, start=base_commit + 1):
-            if shutdown is not None and shutdown.stop_requested:
-                break
-            out.append(self.process_period(lo, hi, commit_id=commit_id))
-            if self.retention_keep_last is not None:
-                self.store.vacuum(keep_last=self.retention_keep_last)
-            # keyed on the commit id, not the position in this call: a
-            # daemon whose polls each commit fewer than compact_every
-            # periods still compacts once every compact_every commits
-            if self.compact_every is not None and commit_id % self.compact_every == 0:
-                for t in FACT_TABLES:
-                    self.store.compact_facts(
-                        self.spark, t, cluster_by=self.cluster_facts_by
-                    )
+        self._pending = periods
+        try:
+            for commit_id, (lo, hi) in enumerate(periods, start=base_commit + 1):
+                if shutdown is not None and shutdown.stop_requested:
+                    break
+                out.append(self.process_period(lo, hi, commit_id=commit_id))
+                if self.retention_keep_last is not None:
+                    self.store.vacuum(keep_last=self.retention_keep_last)
+                # keyed on the commit id, not the position in this call: a
+                # daemon whose polls each commit fewer than compact_every
+                # periods still compacts once every compact_every commits
+                if self.compact_every is not None and commit_id % self.compact_every == 0:
+                    for t in FACT_TABLES:
+                        self.store.compact_facts(
+                            self.spark, t, cluster_by=self.cluster_facts_by
+                        )
+        finally:
+            self._pending = []
+            self._release_batch()
         return out
 
     def run_daemon(

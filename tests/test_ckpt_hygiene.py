@@ -103,6 +103,35 @@ def test_bloom_arrow_probe_matches_jvm_exists(spark):
     assert diff == 0
 
 
+def test_bloom_arrow_probe_skips_null_elements(spark):
+    """A NULL array element never matches, as in JVM ``exists`` (whose
+    NULL verdict callers read as False), and never fails the probe."""
+    from pantasia_db_sync_spark.operators.bloom import (
+        bloom_any_probe_arrow,
+        bloom_might_contain,
+        build_bloom_words,
+    )
+
+    m_bits = 1 << 10
+    keys = spark.createDataFrame([("a",), ("b",)], "s string")
+    words = build_bloom_words(keys, "s", m_bits=m_bits)
+    arrays = spark.createDataFrame(
+        [(1, ["a", None]), (2, [None, "not-a-key"]), (3, [None]), (4, None)],
+        "id int, arr array<string>",
+    )
+    jvm = F.exists("arr", lambda s: bloom_might_contain(s, words, m_bits))
+    arrow = bloom_any_probe_arrow(spark, words, m_bits=m_bits)
+    got = {
+        r.id: (bool(r.j), r.p)
+        for r in arrays.select(
+            "id", jvm.alias("j"), arrow(F.col("arr")).alias("p")
+        ).collect()
+    }
+    assert got[1] == (True, True)
+    assert got[3] == got[4] == (False, False)
+    assert got[2][0] == got[2][1]
+
+
 def test_decontaminate_bloom_equals_exact(spark):
     from pantasia_db_sync_spark.plans import QUERIES
 

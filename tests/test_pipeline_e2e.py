@@ -77,8 +77,9 @@ def _store_tables(spark, store: TableStore) -> dict[str, set]:
     return out
 
 
-def _golden_tables(source_dir: str) -> dict[str, set]:
-    g = golden.replay(source_dir)
+def _golden_tables(source_dir: str, hi: datetime | None = None) -> dict[str, set]:
+    """The golden replay over (genesis, ``hi``], the source tip by default."""
+    g = golden.replay(source_dir, None, hi)
     out = {}
     for table, cols in TABLE_COLS.items():
         out[table] = {
@@ -142,15 +143,100 @@ def test_seed_carry_forward_matches_fresh_probe(
     assert carried == probed
 
 
-#: Ceiling on Spark jobs per warm period of the 3-period sync below:
-#: the measured count plus about 10 %. Every surrogate id is numbered
-#: once against driver-side offsets, so a period is its extraction,
-#: five freezes and six scan+project writes.
-WARM_PERIOD_JOB_CEILING = 50  # measured 45
+@pytest.mark.parametrize("cap, batches", [(8, [3]), (2, [2, 1])])
+def test_catchup_batch_matches_period_by_period(
+    spark, source_dir, tmp_path_factory, monkeypatch, cap, batches
+):
+    """Three pending periods are extracted and numbered in catch-up
+    batches of at most ``CATCHUP_PERIODS`` (one batch of three, or,
+    with the cap at two, a batch of two and then a batch of one that
+    re-reads the dims the first committed and starts from its carried
+    seeds), yet each commit is exactly a period-by-period one: after
+    every ``process_period`` call the six tables equal the golden
+    replay up to that period's end, and the stats equal those of three
+    ``run_sync(max_periods=1)`` calls (batches of one)."""
+    from pantasia_db_sync_spark.pipeline import sync
+
+    monkeypatch.setattr(sync, "CATCHUP_PERIODS", cap)
+    store = TableStore(str(tmp_path_factory.mktemp("sink_catchup")))
+    engine = SyncEngine(spark, source_dir, store, time_interval_minutes=30)
+    built = []
+    build = engine._build_batch
+    engine._build_batch = lambda b: built.append(len(b.periods)) or build(b)
+    inner = engine.process_period
+    off_golden = []
+
+    def checked(lo, hi, commit_id):
+        out = inner(lo, hi, commit_id)
+        got = _store_tables(spark, store)
+        want = _golden_tables(source_dir, hi)
+        off_golden.extend((commit_id, t) for t in TABLE_COLS if got[t] != want[t])
+        return out
+
+    engine.process_period = checked
+    batched = engine.run_sync(max_periods=3)
+    assert built == batches
+    assert len(batched) == 3 and not off_golden, off_golden
+
+    single = SyncEngine(
+        spark, source_dir, TableStore(str(tmp_path_factory.mktemp("sink_single"))),
+        time_interval_minutes=30,
+    )
+    assert batched == [s for _ in range(3) for s in single.run_sync(max_periods=1)]
+
+
+def test_crash_mid_batch_resumes_to_parity(
+    spark, source_dir, batch_store, tmp_path_factory
+):
+    """A failure inside the writes of a batch's second period, before
+    any pointer flips, leaves the first period committed and nothing of
+    the second visible; the batch's frames are released, and a fresh
+    engine resumes to batch parity with no duplicate ids."""
+    from pantasia_db_sync_spark.pipeline.sync import DIM_TABLES, FACT_TABLES
+
+    store = TableStore(str(tmp_path_factory.mktemp("sink_crash")))
+    engine = SyncEngine(spark, source_dir, store, time_interval_minutes=30)
+    append = store.append
+
+    def crashing(table, df, commit_id, **kw):
+        if commit_id == 2:
+            raise RuntimeError("injected crash in period 2's writes")
+        return append(table, df, commit_id, **kw)
+
+    store.append = crashing
+    with pytest.raises(RuntimeError, match="injected crash"):
+        engine.run_sync(max_periods=3)
+    assert engine._batch is None
+    assert {t: store.current_version(t) for t in (*DIM_TABLES, *FACT_TABLES)} == {
+        t: 1 for t in (*DIM_TABLES, *FACT_TABLES)
+    }
+
+    store = TableStore(store.base_dir)
+    SyncEngine(spark, source_dir, store, time_interval_minutes=30).run_sync()
+    assert _store_tables(spark, store) == _store_tables(spark, batch_store)
+    for table in TABLE_COLS:
+        df = (
+            store.read_facts(spark, table)
+            if table in FACT_TABLES
+            else store.read(spark, table)
+        )
+        assert df.select("id").distinct().count() == df.count(), table
+
+
+#: Ceilings on Spark jobs per warm period of the syncs below, each the
+#: measured count plus about 10 %. Batched: three periods are one
+#: catch-up batch, the first period extracts and numbers all three, so
+#: a later period is only its six scan+project writes. Tail: one period
+#: per ``run_sync`` call (a tail-following daemon's poll), so every
+#: period is a batch of one and pays its own extraction, five
+#: numberings, latest-state freeze and writes.
+WARM_PERIOD_JOB_CEILING = 10  # measured 9
+TAIL_PERIOD_JOB_CEILING = 46  # measured 42
 
 
 def test_sync_period_job_count(spark, source_dir, tmp_path_factory):
-    """Jobs per warm sync period stay under WARM_PERIOD_JOB_CEILING.
+    """Jobs per warm sync period stay under their ceilings, both for a
+    later period of a catch-up batch and for a warm batch of one.
 
     Counted as the rise of the highest job id the status tracker
     reports across each ``process_period`` call (job ids only grow; the
@@ -159,27 +245,36 @@ def test_sync_period_job_count(spark, source_dir, tmp_path_factory):
     runtime decisions are the same on every run. When ids were numbered
     against a lazy offsets join (a counts shuffle + broadcast per
     numbering, re-run by every consumer), these periods ran 106 jobs
-    each."""
+    each; numbered once per period, before catch-up batches, 45 (every
+    period then built itself, as a batch of one does now)."""
     tracker = spark.sparkContext.statusTracker()
 
     def last_job_id() -> int:
         return max(tracker.getJobIdsForGroup(None), default=-1)
 
-    store = TableStore(str(tmp_path_factory.mktemp("sink_jobs")))
-    engine = SyncEngine(spark, source_dir, store, time_interval_minutes=30)
-    jobs = []
-    inner = engine.process_period
+    def counted_engine(name: str) -> tuple[SyncEngine, list[int]]:
+        store = TableStore(str(tmp_path_factory.mktemp(name)))
+        engine = SyncEngine(spark, source_dir, store, time_interval_minutes=30)
+        jobs = []
+        inner = engine.process_period
 
-    def counted(lo, hi, commit_id):
-        before = last_job_id()
-        out = inner(lo, hi, commit_id)
-        jobs.append(last_job_id() - before)
-        return out
+        def counted(lo, hi, commit_id):
+            before = last_job_id()
+            out = inner(lo, hi, commit_id)
+            jobs.append(last_job_id() - before)
+            return out
 
-    engine.process_period = counted
+        engine.process_period = counted
+        return engine, jobs
+
+    engine, jobs = counted_engine("sink_jobs")
     assert len(engine.run_sync(max_periods=3)) == 3
-    warm = jobs[1:]
-    assert max(warm) <= WARM_PERIOD_JOB_CEILING, jobs
+    assert max(jobs[1:]) <= WARM_PERIOD_JOB_CEILING, jobs
+
+    engine, jobs = counted_engine("sink_jobs_tail")
+    for _ in range(3):
+        assert len(engine.run_sync(max_periods=1)) == 1
+    assert max(jobs[1:]) <= TAIL_PERIOD_JOB_CEILING, jobs
 
 
 def test_fk_integrity_green_on_synced_store(spark, batch_store):

@@ -144,6 +144,70 @@ def test_dense_ids_grouped_equals_per_group(
 @settings(**SETTINGS)
 @given(
     rows=st.lists(
+        st.tuples(st.integers(0, 50), st.integers(-1000, 1000),
+                  st.booleans()),
+        min_size=1,
+        max_size=200,
+        unique_by=lambda r: (r[0], r[1]),
+    ),
+    start=st.integers(1, 10_000),
+    parts=st.sampled_from([None, 3, 8]),
+    ranged=st.booleans(),
+    cuts=st.lists(st.integers(0, 50), max_size=3, unique=True),
+)
+@example(rows=_SKEWED_GROUPS, start=1, parts=8, ranged=True, cuts=[4, 30])
+def test_dense_ids_split_counts_per_period(spark, rows, start, parts, ranged, cuts):
+    """``split`` by a period index that never decreases along the order
+    leaves every id as the row_number() reference has it and reports
+    the rows numbered per period, for both numberings — the contract
+    that lets the sync number a batch of periods once and take each
+    period's stats from the freeze. The checkpoints go to ``release``."""
+    from pantasia_db_sync_spark.operators.surrogate import (
+        with_dense_ids_grouped,
+    )
+
+    cuts = sorted(cuts)
+    k = len(cuts) + 1
+
+    def period(key):
+        return sum(key > c for c in cuts)
+
+    p = F.lit(0)
+    for c in cuts:
+        p = p + F.when(F.col("k") > c, 1).otherwise(0)
+    df = spark.createDataFrame(rows, "k int, v int, g boolean").withColumn("p", p)
+    kw = dict(
+        id_col="id", num_partitions=parts, split=("p", k),
+        first_col_range=(0, 50) if ranged else None,
+    )
+    release: list = []
+    totals: list = []
+    got = with_dense_ids(df, ["k", "v"], start=start, totals=totals, release=release, **kw)
+    want = _id_rows(_row_number_ids(df, ["k", "v"], start), ["k", "v"])
+    assert _id_rows(got, ["k", "v"]) == want
+    assert totals == [sum(period(r[0]) == i for r in rows) for i in range(k)]
+
+    starts = {True: start, False: 1}
+    grouped: dict = {}
+    got_g = with_dense_ids_grouped(
+        df, ["k", "v"], "g", starts, totals=grouped, release=release, **kw
+    )
+    ref = _row_number_ids(df, ["k", "v"], starts, group_col="g")
+    assert sorted((r["g"], r["id"], r["k"], r["v"]) for r in got_g.collect()) == sorted(
+        (r["g"], r["id"], r["k"], r["v"]) for r in ref.collect()
+    )
+    assert grouped == {
+        g: [sum(period(r[0]) == i and r[2] == g for r in rows) for i in range(k)]
+        for g in (True, False)
+    }
+    assert len(release) == 2
+    for h in release:
+        h.unpersist(False)
+
+
+@settings(**SETTINGS)
+@given(
+    rows=st.lists(
         st.tuples(st.integers(0, 50), st.integers(-1000, 1000)),
         min_size=1,
         max_size=200,

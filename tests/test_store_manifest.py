@@ -103,6 +103,42 @@ def test_tip_and_seed_scan_zero_fact_rows(spark, synced, monkeypatch):
     assert engine._seed("wallet") == expect_seeds["wallet"]
 
 
+def test_dim_read_takes_schema_from_manifest(spark, synced):
+    """A staged version's manifest records its schema in the nullable
+    form parquet inference yields: ``read`` returns exactly the
+    inferred schema and launches zero Spark jobs. A manifest without a
+    schema falls back to inference."""
+    store, _ = synced
+    tracker = spark.sparkContext.statusTracker()
+
+    def last_job_id() -> int:
+        return max(tracker.getJobIdsForGroup(None), default=-1)
+
+    # non-nullable, nested and map columns next to the synced dims
+    nested = spark.range(3).select(
+        "id",
+        F.array("id").alias("a"),
+        F.struct(F.lit(1).alias("x")).alias("s"),
+        F.create_map(F.lit("k"), "id").alias("m"),
+    )
+    store.repoint("nested", store.stage("nested", nested))
+    for table in ("wallet", "collection", "asset", "asset_ext", "user", "nested"):
+        path = store._resolve_version_dir(table, store.current_version(table))
+        before = last_job_id()
+        schema = store.read(spark, table).schema
+        assert last_job_id() == before, f"{table}: read launched a job"
+        assert schema == spark.read.parquet(path).schema, table
+
+    fp = os.path.join(path, MANIFEST)
+    with open(fp) as f:
+        m = json.load(f)
+    del m["schema"]
+    with open(fp, "w") as f:
+        json.dump(m, f)
+    assert store.read(spark, "nested").schema == schema
+    assert store.read(spark, "nested").count() == 3
+
+
 def test_manifest_self_heals_when_missing(spark, synced):
     store, engine = synced
     tip_before = engine.pantasia_tip()
