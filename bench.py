@@ -35,7 +35,7 @@ reason), because the sandbox host speed oscillates WITHIN a suite run.
 
 The sync pipeline runs REPS full batch syncs at scale 1 (median) and one
 at 10x; the dedup family gets a 10x-corpus datapoint (built by
-scripts/scale_experiment.build_corpus) so the banded joins' near-linear
+scripts/scale_probe.build_corpus) so the banded joins' near-linear
 scaling is measured, not asserted.
 """
 
@@ -77,8 +77,8 @@ HEADLINE = [
     "tpch_q5_local_supplier_volume",
     "tpch_q10_returned_items",
     # round-8 additions (VERDICT r7 #4): the newer heavy families get
-    # per-round medians so regressions are visible without re-running
-    # scale_experiment. Again additive — suite total not comparable to
+    # per-round medians so regressions are visible without a separate
+    # scale run. Again additive — suite total not comparable to
     # rounds ≤ 7.
     "ann_ivfadc_topk",
     "ann_ivf_index_topk",
@@ -388,7 +388,7 @@ def main() -> None:
 
     # Dedup 10x-corpus datapoint: replicate the sf0.1 documents 10x with
     # per-replica token rewrites (so near-dup structure grows linearly,
-    # not quadratically — see scripts/scale_experiment.py) and time the
+    # not quadratically — see README §Measured scale growth) and time the
     # two banded-join dedups once each after a warm-up. rec/s at 10x vs
     # 1x is the scale-linearity evidence for the banded candidate
     # generation; skippable via env.
@@ -402,7 +402,7 @@ def main() -> None:
         and sf_dir.rstrip("/") == "/root/testdata/sf0.1"
     ):
         sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "scripts"))
-        from scale_experiment import build_corpus
+        from scale_probe import build_corpus
 
         dir10 = build_corpus(spark, 10)
         for name in ("dedup_minhash_lsh", "dedup_simhash"):

@@ -53,7 +53,7 @@ class LoopCheckpointer:
     """Checkpoint successive generations of a loop's state, freeing
     superseded generations' blocks (module docstring has the design)."""
 
-    def __init__(self, spark, keep: int = 2) -> None:
+    def __init__(self, keep: int = 2) -> None:
         if keep < 1:
             raise ValueError("keep must be >= 1")
         self._keep = keep

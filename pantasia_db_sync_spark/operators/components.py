@@ -78,7 +78,7 @@ def connected_components(
     # advances (operators/ckpt.py) — round t's labels are dead by
     # construction once round t+1 is materialized, and leaving them
     # pinned degrades every later job in a long-lived session.
-    ck = LoopCheckpointer(edges.sparkSession)
+    ck = LoopCheckpointer()
     labels = ck.step(
         all_nodes.join(edge_nodes, "node", "left_semi").withColumn(
             "label", F.col("node")
@@ -193,7 +193,7 @@ def connected_components_logn(
     # keep=2: the convergence delta below consumes ``cur`` AFTER
     # ``stepped`` is materialized, so the previous generation must stay
     # live one round longer (operators/ckpt.py)
-    ck = LoopCheckpointer(edges.sparkSession)
+    ck = LoopCheckpointer()
     cur = ck.step(
         _canonical_edges(
             edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
@@ -263,7 +263,7 @@ def bfs_distances(
         .localCheckpoint(eager=True)
     )
     nodes = sym.select(F.col("a").alias("node")).distinct()
-    ck = LoopCheckpointer(edges.sparkSession)
+    ck = LoopCheckpointer()
     dist = ck.step(
         nodes.select(
             "node",
@@ -317,7 +317,7 @@ def kcore(
     # the symmetric edge list IS the evolving state here (peeled each
     # round): track it so superseded rounds' blocks are freed; keep=2
     # because the fixpoint probe counts the PREVIOUS round's frame
-    ck = LoopCheckpointer(edges.sparkSession)
+    ck = LoopCheckpointer()
     sym = ck.step(
         edges.select(F.col(u_col).alias("a"), F.col(v_col).alias("b")).unionAll(
             edges.select(F.col(v_col).alias("a"), F.col(u_col).alias("b"))
@@ -392,7 +392,7 @@ def shortest_paths(
         )
     ).localCheckpoint(eager=True)  # joined every round
     nodes = sym.select(F.col("a").alias("node")).distinct()
-    ck = LoopCheckpointer(edges.sparkSession)
+    ck = LoopCheckpointer()
     dist = ck.step(
         nodes.select(
             "node",
@@ -459,7 +459,7 @@ def pagerank(
         .localCheckpoint(eager=True)
     )
     r = deg.select("a", F.lit(micro).cast("bigint").alias("r"))
-    ck = LoopCheckpointer(edges.sparkSession)
+    ck = LoopCheckpointer()
     for _ in range(rounds):
         contrib = (
             sym.join(r.join(deg, "a"), "a")
@@ -513,7 +513,7 @@ def multi_bfs_distances(
     # row — it is a real vertex at distance 0 from itself — instead of
     # being silently dropped from every downstream centrality.
     spark = edges.sparkSession
-    ck = LoopCheckpointer(spark)
+    ck = LoopCheckpointer()
     dist = ck.step(
         _local_frame(
             spark,
@@ -604,7 +604,7 @@ def ktruss(
     # (e_0, o_1, e_1, o_2, ...) and the returned support frame
     # references the previous round's edge list AND this round's
     # triangle freeze — the newest three generations cover both
-    ck = LoopCheckpointer(edges.sparkSession, keep=3)
+    ck = LoopCheckpointer(keep=3)
     e = ck.step(
         edges.select(
             F.least(u_col, v_col).alias("u"),
@@ -700,7 +700,7 @@ def personalized_pagerank(
     seed_row = _one_row([(int(seed), 0)], ["node", "c"]).localCheckpoint(
         eager=True
     )
-    ck = LoopCheckpointer(spark)
+    ck = LoopCheckpointer()
     r = ck.step(_one_row([(int(seed), int(micro))], ["a", "r"]))
     restart = (micro * (damp_den - damp_num)) // damp_den
     for _ in range(rounds):
@@ -776,7 +776,7 @@ def brandes_dependency(
     # keep=1: only the seen freezes themselves are tracked (the level
     # frontiers stay live for the backward pass); a superseded freeze
     # is dead once the next is materialized
-    seen_ck = LoopCheckpointer(spark, keep=1)
+    seen_ck = LoopCheckpointer(keep=1)
     seen = seen_ck.step(levels[0].select("node"))
     for _ in range(hops):
         # frontier-exhausted detection rides the SAME job as the
@@ -901,7 +901,7 @@ def brandes_dependency_multi(
             "seed bigint, node bigint, sigma bigint",
         ).localCheckpoint(eager=True)
     ]
-    seen_ck = LoopCheckpointer(spark, keep=1)
+    seen_ck = LoopCheckpointer(keep=1)
     seen = seen_ck.step(levels[0].select("seed", "node"))
     for _ in range(hops):
         # exhaustion probe rides the checkpoint job (see

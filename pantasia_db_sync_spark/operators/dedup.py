@@ -1052,8 +1052,8 @@ def simhash_pairs(
     Scaling rule: exactness fixes the band COUNT at max_hamming + 1, so
     per-band bucket granularity (2^(bits/(H+1))) scales only through
     ``bits`` — grow the signature width with log2(n) (≤60) to keep
-    buckets, and thus candidates, bounded (measured in
-    scripts/scale_experiment.py: 48-bit is linear to 50k docs, widens
+    buckets, and thus candidates, bounded (measured in round 5, README
+    §Measured scale growth: 48-bit is linear to 50k docs, widens
     needed by 250k)."""
     sig = simhash_signatures(docs, id_col, text_col, bits=bits)
     n_bands = max_hamming + 1

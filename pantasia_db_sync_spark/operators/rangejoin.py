@@ -68,8 +68,8 @@ def interval_overlap_counts(
     the right shape when the caller needs the PAIRS, but its cost — and
     the answer itself — is quadratic in the number of co-temporal
     intervals per key: a hot key owning 20% of the corpus inside a few
-    bins is a genuine cliff (measured: scripts/scale_experiment.py
-    --ivskew). COUNTING overlaps needs none of that: each interval
+    bins is a genuine cliff (measured in round 8: README §Measured
+    scale growth, interval-overlap hot-key skew). COUNTING overlaps needs none of that: each interval
     contributes a +1 event at its start and a -1 event just after its
     end; a per-key running sum over event order gives the active count,
     and at each START event ``active - 1`` counts exactly the

@@ -290,7 +290,7 @@ def recommended_lsh_params(
     hash keeps 15 hex digits = 60 bits; packed signatures must also
     stay under the 63-bit signed-long limit). Measured on the 50x
     corpus (25k vectors): fixture-sized 32/8 banding verifies ~6M
-    candidate pairs, scaled banding ~60k (scripts/scale_experiment.py).
+    candidate pairs, scaled banding ~60k (README §Measured scale growth).
     """
     import math
 
@@ -1347,8 +1347,8 @@ def knn_graph_mutual(
     candidates shuffle on the cell key, cost Σ|cell|² instead of n²,
     the 100 TB shape (assign cells with kmeans_assign or reuse a label
     column). The mutualization join is identical either way and
-    shuffles on the edge key. Measured (scripts/scale_experiment.py
-    --r7b): cell-local holds near-flat wall to 10x vectors at fixed
+    shuffles on the edge key. Measured (round 7, README §Measured scale
+    growth, round-7 table): cell-local holds near-flat wall to 10x vectors at fixed
     cell size while brute force grows quadratically."""
     if cell_col is not None:
         topk = _cell_local_topk(vectors, id_col, vec_col, cell_col, k)

@@ -12,7 +12,7 @@ then add per-bucket offsets (the cumulative row counts of the buckets
 before it). No global sort bottleneck, ids are dense and start at
 ``start``.
 
-The freezing strategies (``checkpoint`` / ``persist``) collect the
+The freezing ``checkpoint`` strategy collects the
 per-bucket counts DURING the freeze (an Observation on the freezing
 job, ≤ num_buckets rows) and fold the offsets in as an
 ``element_at(<array literal>, bucket + 1)`` projection: the ids are a
@@ -24,8 +24,8 @@ offsets join unless parquet footers prove the counts.
 The correctness hazard all strategies guard: the per-bucket counts and
 the final numbering must see every row in the same bucket with the same
 within-bucket rank — either by freezing the bucketed data once
-(``checkpoint`` / ``persist``) or by deriving the bucket from the row's
-own values (``sample``).
+(``checkpoint``) or by deriving the bucket from the row's own values
+(``sample``).
 """
 
 from __future__ import annotations
@@ -90,13 +90,6 @@ def with_dense_ids(
       Cost: one full write of the frame to block storage. With a
       ``release`` list, the checkpointed RDD's JVM handle is appended
       to it so the caller can free the blocks once it is done.
-    - ``"persist"``: same shape, but the frozen intermediate is
-      ``persist()``-ed (deserialized memory — cheapest to fill and
-      re-read), filled by one count job, and appended to the required
-      ``release`` list; the CALLER must ``unpersist()`` those handles
-      after its final action on the result (SQL persists pin global
-      CacheManager entries until explicitly released). Unusable when
-      nobody can release (e.g. a query handed to an external runner).
     - ``"sample"``: never materializes anything. Order-aligned buckets
       are derived from the row's own ``order_cols`` values against
       boundary keys collected once (one tiny column-pruned job), so
@@ -120,17 +113,17 @@ def with_dense_ids(
     already knows — table STATISTICS such as parquet footer min/max, or
     a range it built itself (a period's time window, ``[1, n]`` of an
     earlier dense numbering). Buckets are then uniform boundaries over
-    it, derived driver-side: no sampling job (the ``checkpoint`` /
-    ``persist`` range shuffle otherwise runs its whole input once more
-    to sample bounds) and no boundary job (``sample``). Balance depends
+    it, derived driver-side: no sampling job (the ``checkpoint`` range
+    shuffle otherwise runs its whole input once more to sample bounds)
+    and no boundary job (``sample``). Balance depends
     on the column being roughly uniform over the range; correctness
     never does.
 
-    ``totals`` (``checkpoint`` / ``persist`` only): a list the number of
+    ``totals`` (``checkpoint`` only): a list the number of
     rows numbered is appended to — known driver-side once the freeze
     has run, so the caller needs no count job.
 
-    ``split=(col, k)`` (``checkpoint`` / ``persist`` only): ``col`` holds
+    ``split=(col, k)`` (``checkpoint`` only): ``col`` holds
     ints in ``[0, k)`` that never decrease along ``order_cols`` (a
     period index over a time order). Each bucket is subdivided by it
     (still order-aligned), so the freeze's counts also give the rows per
@@ -142,21 +135,18 @@ def with_dense_ids(
         num_partitions = df.sparkSession.sparkContext.defaultParallelism
     if strategy == "sample":
         if totals is not None or split is not None:
-            raise ValueError("totals/split need a freezing strategy (checkpoint/persist)")
+            raise ValueError("totals/split need the freezing strategy (checkpoint)")
         return _dense_ids_by_sampled_bounds(
             df, order_cols, id_col, start, num_partitions, first_col_range,
             rowgroup_stats,
         )
-    if strategy == "persist" and release is None:
-        raise ValueError("strategy='persist' needs a release list the caller will unpersist")
-    if strategy not in ("checkpoint", "persist"):
+    if strategy != "checkpoint":
         raise ValueError(f"unknown strategy {strategy!r}")
 
     numbered, counts = _freeze_ranked(
         _bucketed(df, order_cols, num_partitions, first_col_range, split),
         [],
         order_cols,
-        strategy,
         release,
     )
     per_bucket = dict(counts)
@@ -215,7 +205,6 @@ def _freeze_ranked(
     df: DataFrame,
     group_cols: list[str],
     order_cols: list[str],
-    strategy: str,
     release: list | None,
 ) -> tuple[DataFrame, list[tuple]]:
     """Rank rows within (``__pid``, *group_cols) as ``__rn``, freeze
@@ -245,14 +234,9 @@ def _freeze_ranked(
         )
         .drop("__cnt")
     )
-    if strategy == "persist":
-        numbered = numbered.persist()
-        release.append(numbered)
-        numbered.count()
-    else:
-        numbered = numbered.localCheckpoint(eager=True)
-        if release is not None:
-            release.append(checkpoint_rdd(numbered))
+    numbered = numbered.localCheckpoint(eager=True)
+    if release is not None:
+        release.append(checkpoint_rdd(numbered))
     return numbered, [tuple(r) for r in obs.get["counts"]]
 
 
@@ -362,7 +346,6 @@ def with_dense_ids_grouped(
         _bucketed(df, order_cols, num_partitions, first_col_range, split),
         [group_col],
         order_cols,
-        "checkpoint",
         release,
     )
     per = {g: {} for g in starts}

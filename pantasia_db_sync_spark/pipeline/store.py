@@ -12,10 +12,12 @@ Replaces the reference's two write-side mechanisms:
   current version pointers under a tag, ``restore()`` repoints to them —
   no data copying, O(#tables) metadata ops even at 100 TB.
 
-Multi-table atomicity (SURVEY.md §4 item 2): ``commit_many`` stages all
-table versions first, then flips all pointers; ``sync_checkpoint`` (the
-tip) is written last, so replay-after-crash re-processes the last
-period idempotently rather than observing a half-commit.
+Multi-table atomicity (SURVEY.md §4 item 2): a sync period stages every
+table first (``stage`` for dims, ``append`` for fact commit dirs), then
+flips the pointers. The sync tip is derived from the committed fact
+rows, not stored, so a crash before the fact flips replays the period
+idempotently, and a crash between them is rolled forward from the
+commit manifests (``SyncEngine._recover_fact_commits``).
 """
 
 from __future__ import annotations
@@ -346,8 +348,9 @@ class TableStore:
 
     def stage(self, table: str, df: DataFrame) -> int:
         """Write a new version directory without repointing.
-        Single-writer contract: picks head+1 unfenced — concurrent
-        writers use ``write_version_occ``."""
+        Single-writer contract: picks head+1 unfenced — a concurrent
+        writer stages inside ``commit_many_occ``, whose claim on the
+        table makes head+1 the claimed id."""
         v = (self.current_version(table) or 0) + 1
         path = self._data_dir(table, v)
         if os.path.exists(path):
@@ -421,19 +424,6 @@ class TableStore:
                     f"{br['base']} on {table!r}; cannot roll below it"
                 )
         self.repoint(table, commit_id)
-
-    def commit_many(self, staged: dict[str, tuple[int, DataFrame]]) -> None:
-        """Stage-then-flip: all writes land before any pointer moves.
-
-        SINGLE WRITER PER BRANCH: like ``stage``/``append`` with
-        explicit commit ids, this assumes one coordinated writer (the
-        sync daemon). Uncoordinated concurrent writers must go through
-        the optimistic-concurrency fence (``begin_commit`` /
-        ``append_occ`` / ``write_version_occ``) instead — two raw
-        ``commit_many`` calls racing on the same table can both stage
-        id N+1 and lose the first writer's flip."""
-        for table, (version, _) in staged.items():
-            self.repoint(table, version)
 
     # --- append-only fact tables ---------------------------------------------
     # Facts never rewrite history: each period commit adds one
@@ -517,14 +507,11 @@ class TableStore:
             # partitions (small periods coalesce to few files).
             #
             # Freeze BEFORE the range shuffle: repartitionByRange runs a
-            # boundary-sampling job that re-executes the child plan, and
-            # a caller's `.observe()` metrics accumulate across both
-            # executions — sync's rows-written observation doubled,
-            # which corrupted its carried-forward dense-id seeds (ids
-            # went gappy). The checkpoint pins one execution (metrics
-            # fire once); the sampler — and the z-order min/max probe —
-            # then read frozen blocks. Same rationale as the records
-            # freeze in pipeline/sync.py.
+            # boundary-sampling job, and the z-order path a min/max
+            # probe, each re-executing the child plan. The checkpoint
+            # runs the caller's plan once (so a caller's `.observe()`
+            # metrics also fire once); the sampler and the probe then
+            # read frozen blocks.
             df = df.localCheckpoint(eager=True)
             if isinstance(cluster_by, (list, tuple)):
                 from ..operators.zorder import zorder_frame
@@ -579,7 +566,7 @@ class TableStore:
 
     # --- optimistic concurrency (writer fence) --------------------------------
     # The explicit-commit-id APIs above (append/commit_append/stage/
-    # commit_many) assume a SINGLE WRITER PER BRANCH — the reference is
+    # repoint) assume a SINGLE WRITER PER BRANCH — the reference is
     # a single daemon, and pipeline/sync.py drives exactly one writer.
     # Two uncoordinated processes using them can both stage commit N+1
     # and the second pointer flip silently discards the first (the
@@ -737,32 +724,6 @@ class TableStore:
             raise
         return cid
 
-    def write_version_occ(self, table: str, df: DataFrame) -> int:
-        """Concurrent-writer-safe versioned-table write (the ``stage``
-        + ``repoint`` pair under the fence). The staged directory is a
-        FULL snapshot, so a writer whose claim is based on head N-1
-        while a crashed claimant left N unflipped still produces a
-        correct table — read-modify-write callers that must see the
-        latest committed version re-derive ``df`` after
-        ``begin_commit`` returns. Releases the claim if staging fails
-        (same abandoned-claim hazard as ``append_occ``)."""
-        cid = self.begin_commit(table)
-        flipped = False
-        try:
-            path = self._data_dir(table, cid)
-            if os.path.exists(path):
-                shutil.rmtree(path)  # dead claimant's partial stage
-            df.write.mode("overwrite").parquet(path)
-            self._write_manifest(path, df.schema)
-            self._flip_pointer(table, cid)
-            flipped = True  # durable from here: never release the claim
-            self._log_commit_ts(table, cid)
-        except BaseException:
-            if not flipped:
-                self.release_claim(table, cid)
-            raise
-        return cid
-
     def begin_commit_many(
         self,
         tables,
@@ -791,9 +752,10 @@ class TableStore:
     def commit_many_occ(
         self, stagers: dict, timeout_sec: float = 120.0
     ) -> dict[str, int]:
-        """Concurrent-writer-safe multi-table commit — the OCC twin of
-        ``commit_many`` (which is documented SINGLE WRITER and can lose
-        a flip when e.g. a compactor races the sync daemon).
+        """Concurrent-writer-safe multi-table commit — the OCC form of
+        stage-then-flip (plain ``stage``/``append`` + ``repoint`` is
+        SINGLE WRITER and can lose a flip when e.g. a compactor races
+        the sync daemon).
 
         ``stagers`` maps table -> callable(commit_id) that stages that
         table's data under the claimed id (an append dir or a versioned
@@ -804,9 +766,9 @@ class TableStore:
         anywhere before the flips releases every claim (abandoned
         claims would otherwise brick the tables for this process's
         lifetime). Crash DURABILITY across the multi-table flip loop is
-        the same as ``commit_many``'s: pointers flip one table at a
-        time, and the sync checkpoint written after the flips is what
-        makes replay idempotent (module docstring)."""
+        the same as the sync's: pointers flip one table at a time, so a
+        crash inside the loop leaves a prefix of the tables committed
+        (module docstring)."""
         cids = self.begin_commit_many(stagers.keys(), timeout_sec=timeout_sec)
         flipped: set[str] = set()
         try:
@@ -1646,21 +1608,6 @@ class TableStore:
                 df = df.withColumn(f_.name, F.lit(None).cast(f_.dataType))
         return df.select(base.columns)
 
-    # --- checkpoint (sync tip) ----------------------------------------------
-
-    def write_checkpoint(self, payload: dict) -> None:
-        tmp = os.path.join(self.base_dir, "_CHECKPOINT.tmp")
-        with open(tmp, "w") as f:
-            json.dump(payload, f)
-        os.replace(tmp, os.path.join(self.base_dir, "_CHECKPOINT"))
-
-    def read_checkpoint(self) -> dict | None:
-        try:
-            with open(os.path.join(self.base_dir, "_CHECKPOINT")) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return None
-
     # --- snapshot / restore (A10) --------------------------------------------
 
     def _snap_path(self, tag: str) -> str:
@@ -1672,10 +1619,7 @@ class TableStore:
             for t in os.listdir(self.base_dir)
             if os.path.isdir(self._tdir(t)) and self.current_version(t) is not None
         ]
-        manifest = {
-            "versions": {t: self.current_version(t) for t in tables},
-            "checkpoint": self.read_checkpoint(),
-        }
+        manifest = {"versions": {t: self.current_version(t) for t in tables}}
         with open(self._snap_path(tag), "w") as f:
             json.dump(manifest, f)
         return manifest
@@ -1685,8 +1629,6 @@ class TableStore:
             manifest = json.load(f)
         for table, version in manifest["versions"].items():
             self.repoint(table, version)
-        if manifest.get("checkpoint") is not None:
-            self.write_checkpoint(manifest["checkpoint"])
 
     def read_at(self, spark: SparkSession, table: str, tag: str) -> DataFrame | None:
         """Time-travel read: the table as of snapshot ``tag``, without

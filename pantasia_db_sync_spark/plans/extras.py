@@ -1875,8 +1875,8 @@ def _per_node_triangles(e: DataFrame, deg: DataFrame | None = None) -> DataFrame
     that survives skew — wedges pivot on the middle node at
     in(b)×out(b) cost and the max-degree hub has out-degree 0, so
     wedge volume is arboricity-bounded (Chiba–Nishizeki). Measured
-    against the retired symmetrized wedge-per-center plan in
-    ``scripts/scale_experiment.py --gskew``."""
+    against the retired symmetrized wedge-per-center plan in round 13
+    (README §Measured scale growth, adversarial-graph skew table)."""
     from ..operators.components import _oriented_triangles
 
     tri = _oriented_triangles(e, deg=deg)
@@ -1930,8 +1930,8 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by arboricity per Chiba–Nishizeki, the max-degree hub
     pivots ZERO wedges) while the oracle enumerates under plain id
     order — same corner counts either way. See
-    `_per_node_triangles` / `scripts/scale_experiment.py --gskew` for the
-    hub-graph measurement."""
+    `_per_node_triangles` and the round-13 adversarial-graph skew table
+    (README §Measured scale growth) for the hub-graph measurement."""
     li = load_table(spark, sf_dir, "lineitem").where(
         F.col("l_orderkey") % _TRI_MOD == 0
     )
@@ -4894,8 +4894,8 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     lever is therefore a max_df-style WITNESS-DEGREE CAP (drop or
     sample hub witnesses, exactly the hot-shingle treatment in
     dedup_ngram_jaccard) — an explicit semantics change, so it is a
-    knob, not the default; measured under a hub in
-    scripts/scale_experiment.py --gskew."""
+    knob, not the default; measured under a hub in round 13 (README
+    §Measured scale growth, adversarial-graph skew table)."""
     edges = _copurchase_edges(load_table(spark, sf_dir, "events"))
     und = edges.unionAll(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
     deg = und.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
@@ -7166,8 +7166,8 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-corner redistribution is a combinable groupBy over triangle
     rows (3 rows per triangle, never d^2 per hub). Per-corner counts
     are orientation-invariant, so the id-ordered oracle agrees exactly.
-    Cliff-vs-survival measured on a 20%%-hub graph in
-    `scripts/scale_experiment.py --gskew`."""
+    Cliff-vs-survival measured on a 20%%-hub graph in round 13 (README
+    §Measured scale growth, adversarial-graph skew table)."""
     li = load_table(spark, sf_dir, "lineitem").where(
         F.col("l_orderkey") % _TRI_MOD == 0
     )
@@ -8276,7 +8276,7 @@ def graph_hyperanf_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes = sym.select(F.col("a").alias("node")).distinct()
     from ..operators.ckpt import LoopCheckpointer
 
-    ck = LoopCheckpointer(spark)
+    ck = LoopCheckpointer()
     dist = ck.step(
         nodes.select(
             F.col("node").alias("seed"), "node", F.lit(0).cast("int").alias("d")
@@ -8383,7 +8383,7 @@ def graph_hyperball_harmonic(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes = sym.select(F.col("a").alias("node")).distinct()
     from ..operators.ckpt import LoopCheckpointer
 
-    ck = LoopCheckpointer(spark)
+    ck = LoopCheckpointer()
     dist = ck.step(
         nodes.select(
             F.col("node").alias("seed"), "node", F.lit(0).cast("int").alias("d")

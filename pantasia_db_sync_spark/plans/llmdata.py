@@ -345,7 +345,8 @@ def dedup_prefix_filter_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact like the inverted index, skew-immune like nothing else: hot
     shingles sort LAST and fall out of prefixes, so the degenerate
     corpus that needs max_df guarding on the full index defuses
-    itself here (measured: scripts/scale_experiment.py)."""
+    itself here (measured in round 8: README §Measured scale growth,
+    adversarial key skew table)."""
     d = load_table(spark, sf_dir, "documents")
     return prefix_filter_jaccard_pairs(d, "doc_id", "text", n=3, threshold=0.5)
 

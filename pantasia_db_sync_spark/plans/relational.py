@@ -1015,7 +1015,8 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     density per bin. Hot-key caveat: pair cost (and the pair SET
     itself) is quadratic in co-temporal intervals per key — when only
     the COUNT is needed, `interval_overlap_count_sweep` is the
-    skew-immune shape (measured: scale_experiment.py --ivskew)."""
+    skew-immune shape (measured in round 8: README §Measured scale
+    growth, interval-overlap hot-key skew)."""
     iv = _iv_intervals(spark, sf_dir)
     binned = iv.select(
         "k", "uid", "s", "e",
@@ -1060,8 +1061,8 @@ def interval_overlap_count_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     `join_interval_overlap` — two independent algorithms, one ground
     truth. O(m log m) per key with NO pair materialization, so a hot
     key owning 20% of the corpus costs one larger sort, not a
-    quadratic candidate explosion (measured: scale_experiment.py
-    --ivskew)."""
+    quadratic candidate explosion (measured in round 8: README
+    §Measured scale growth, interval-overlap hot-key skew)."""
     from ..operators.rangejoin import interval_overlap_counts
 
     return interval_overlap_counts(_iv_intervals(spark, sf_dir)).select(

@@ -335,9 +335,8 @@ def test_multi_period_sync_leaks_no_cached_frames(
     spark, source_dir, tmp_path_factory
 ):
     """A long-running incremental sync must not accumulate pinned
-    frames: after 4 periods, Spark's global SQL CacheManager is empty
-    (the with_dense_ids persist used to leak one entry per call, one
-    per numbering), and the block-manager footprint of localCheckpoints is
+    frames: after 4 periods, Spark's global SQL CacheManager is empty,
+    and the block-manager footprint of localCheckpoints is
     reclaimable — after dropping references + GC the persistent-RDD
     count falls back to (or below) its single-period level."""
     import gc

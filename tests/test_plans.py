@@ -120,7 +120,7 @@ _ALLOWED_NESTED_LOOP = {
     # exact directed phase over a 300-vector subset (broadcast cross,
     # same rationale as ann_bruteforce_topk); the 100 TB path is the
     # cell-local variant (knn_graph_mutual cell_col=...), property-
-    # tested and measured in scripts/scale_experiment.py --r7b
+    # tested, and measured in round 7 (README §Measured scale growth)
     "embedding_knn_graph",
     # uncorrelated scalar subquery (positive-balance average): one-row
     # broadcast aggregate crossed onto the customer pool — the same

@@ -59,9 +59,9 @@ _SPARSE = [(0, 1), (7, -3), (50, 9)]
 def test_dense_ids_are_dense_and_ordered(spark, rows, start, parts, ranged):
     """ids are exactly start..start+n-1 with no gaps, and id order
     equals the order_cols order — for ANY input and ANY seed: identical
-    to a row_number() reference under both freezing strategies, with
-    sampled range buckets or caller-supplied ``first_col_range`` ones,
-    including buckets that hold no rows."""
+    to a row_number() reference under both strategies (``checkpoint``
+    and ``sample``), with sampled range buckets or caller-supplied
+    ``first_col_range`` ones, including buckets that hold no rows."""
     df = spark.createDataFrame(rows, "k int, v int")
     want = _id_rows(_row_number_ids(df, ["k", "v"], start), ["k", "v"])
     assert [r[0] for r in want] == list(range(start, start + len(rows)))
@@ -73,11 +73,8 @@ def test_dense_ids_are_dense_and_ordered(spark, rows, start, parts, ranged):
     got = with_dense_ids(df, ["k", "v"], totals=totals, **kw)
     assert _id_rows(got, ["k", "v"]) == want
     assert totals == [len(rows)]
-    pins: list = []
-    persisted = with_dense_ids(df, ["k", "v"], strategy="persist", release=pins, **kw)
-    assert _id_rows(persisted, ["k", "v"]) == want
-    for f in pins:
-        f.unpersist()
+    sampled = with_dense_ids(df, ["k", "v"], strategy="sample", **kw)
+    assert _id_rows(sampled, ["k", "v"]) == want
 
 
 #: group True only in the low keys: with range buckets over [0, 50] it
@@ -216,11 +213,10 @@ def test_dense_ids_split_counts_per_period(spark, rows, start, parts, ranged, cu
     start=st.integers(1, 10_000),
 )
 def test_dense_ids_strategies_agree(spark, rows, start):
-    """All three freezing strategies produce the identical id
-    assignment: 'sample' (value-derived buckets — both the numeric
-    percentile fast path on a single int column and the composite
-    collect-sample fallback) and 'persist' (caller-released) must match
-    the default 'checkpoint' bit-for-bit."""
+    """Both strategies produce the identical id assignment: 'sample'
+    (value-derived buckets — both the numeric percentile fast path on a
+    single int column and the composite collect-sample fallback) must
+    match the default 'checkpoint' bit-for-bit."""
     df = spark.createDataFrame(rows, "k int, v int")
     expected = sorted(
         (r["id"], r["k"], r["v"])
@@ -243,17 +239,6 @@ def test_dense_ids_strategies_agree(spark, rows, start):
         ).collect()
     )
     assert sampled_str == expected
-    pins: list = []
-    persisted = sorted(
-        (r["id"], r["k"], r["v"])
-        for r in with_dense_ids(
-            df, ["k", "v"], id_col="id", start=start, strategy="persist", release=pins
-        ).collect()
-    )
-    assert persisted == expected
-    assert len(pins) == 1
-    for f in pins:
-        f.unpersist()
 
 
 @settings(**SETTINGS)
