@@ -27,12 +27,12 @@ shape.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..durable import read_json, write_atomic
 from .similarity import ivf_topk_nprobe, kmeans_assign, kmeans_fit
 
 _CENTROIDS = "centroids.json"
@@ -54,19 +54,22 @@ def build_ivf_index(
     assigned.write.mode("overwrite").partitionBy("cell").parquet(
         os.path.join(index_dir, _ASSIGNMENTS)
     )
-    tmp = os.path.join(index_dir, _CENTROIDS + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump([[cid, coords] for cid, coords in cents], f)
-    os.replace(tmp, os.path.join(index_dir, _CENTROIDS))
+    write_atomic(os.path.join(index_dir, _CENTROIDS), cents)  # [[cid, coords], ...]
     return cents
+
+
+def _read_centroids(index_dir: str) -> list[tuple[int, list[float]]]:
+    return [
+        (int(cid), [float(x) for x in coords])
+        for cid, coords in read_json(os.path.join(index_dir, _CENTROIDS))
+    ]
 
 
 def load_ivf_index(
     spark: SparkSession, index_dir: str
 ) -> tuple[list[tuple[int, list[float]]], DataFrame]:
     """(centroids, cell-partitioned assignments frame)."""
-    with open(os.path.join(index_dir, _CENTROIDS)) as f:
-        cents = [(int(cid), [float(x) for x in coords]) for cid, coords in json.load(f)]
+    cents = _read_centroids(index_dir)
     assigned = spark.read.parquet(os.path.join(index_dir, _ASSIGNMENTS))
     return cents, assigned
 
@@ -134,10 +137,7 @@ def append_ivf_index(
     at build time, see test_ivf_append_equals_frozen_centroid_inline);
     rebuild via ``build_ivf_index`` when the appended fraction warrants
     it, exactly like compaction for the fact store."""
-    with open(os.path.join(index_dir, _CENTROIDS)) as f:
-        cents = [
-            (int(cid), [float(x) for x in coords]) for cid, coords in json.load(f)
-        ]
+    cents = _read_centroids(index_dir)
     assigned = kmeans_assign(vectors, cents, id_col, vec_col)
     assigned.write.mode("append").partitionBy("cell").parquet(
         os.path.join(index_dir, _ASSIGNMENTS)

@@ -27,9 +27,13 @@ import json
 import os
 import shutil
 import time as _time
+from collections.abc import Iterator
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
+
+from ..durable import fsync_path, read_json, write_atomic
 
 MANIFEST = "_MANIFEST.json"  # hidden from Spark's file listing (leading _)
 
@@ -50,6 +54,19 @@ def _dec(v):
         if "__date__" in v:
             return _dt.date.fromisoformat(v["__date__"])
     return v
+
+
+def _map_stats(stats: dict, f) -> dict:
+    """``{col: {"min", "max"}}`` with ``f`` (``_enc``/``_dec``) applied
+    to every bound."""
+    return {c: {"min": f(s["min"]), "max": f(s["max"])} for c, s in stats.items()}
+
+
+def _union(parts, allow_missing: bool = False) -> DataFrame:
+    """Left-deep ``unionByName`` of ``parts`` in order."""
+    return reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=allow_missing), parts
+    )
 
 
 def _nullable(dt: DataType) -> DataType:
@@ -200,8 +217,7 @@ class TableStore:
         # opening '<file>/_BRANCH.json' must read as "not a branch",
         # not crash (rollback_facts on any store with a snapshot).
         try:
-            with open(self._branch_path(table)) as f:
-                return json.load(f)
+            return read_json(self._branch_path(table))
         except (FileNotFoundError, NotADirectoryError, json.JSONDecodeError):
             return None
 
@@ -224,10 +240,7 @@ class TableStore:
             raise ValueError(f"{branch!r} already exists")
         os.makedirs(self._tdir(branch), exist_ok=True)
         meta = {"source": source, "base": base}
-        tmp = self._branch_path(branch) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, self._branch_path(branch))
+        write_atomic(self._branch_path(branch), meta)
         self.repoint(branch, base)
         return meta
 
@@ -258,6 +271,7 @@ class TableStore:
                     # ids > base were unreachable on the source) — safe
                     # to clear before the move
                     shutil.rmtree(to)
+                os.makedirs(os.path.dirname(to), exist_ok=True)
                 os.replace(frm, to)
         self.repoint(journal["source"], journal["repoint"])
         if os.path.isdir(self._tdir(journal["branch"])):
@@ -267,8 +281,7 @@ class TableStore:
     def _recover_promote(self) -> None:
         jp = self._promote_journal_path()
         if os.path.exists(jp):
-            with open(jp) as f:
-                self._apply_promote(json.load(f))
+            self._apply_promote(read_json(jp))
 
     def promote_branch(self, branch: str) -> None:
         """FAST-FORWARD the source to the branch's state and delete the
@@ -294,20 +307,11 @@ class TableStore:
                 "fast-forward only"
             )
         bptr = self.current_version(branch)
-        moves: list[list[str]] = []
-        for sub in ("data", "deletes"):
-            bdata = os.path.join(self._tdir(branch), sub)
-            sdata = os.path.join(self._tdir(source), sub)
-            if os.path.isdir(bdata):
-                os.makedirs(sdata, exist_ok=True)
-                for d in sorted(os.listdir(bdata)):
-                    if (
-                        d.startswith("commit=")
-                        and base < int(d.split("=", 1)[1]) <= bptr
-                    ):
-                        moves.append(
-                            [os.path.join(bdata, d), os.path.join(sdata, d)]
-                        )
+        moves = [
+            [d, os.path.join(self._tdir(source), sub, os.path.basename(d))]
+            for sub in ("data", "deletes")
+            for _, _, d in self._commit_dirs(branch, sub, bptr, lo=base, shared=False)
+        ]
         for d in os.listdir(self._tdir(branch)):
             if d.startswith("v") and d[1:].isdigit() and base < int(d[1:]) <= bptr:
                 moves.append(
@@ -322,10 +326,7 @@ class TableStore:
             "moves": moves,
             "repoint": bptr,
         }
-        tmp = self._promote_journal_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(journal, f)
-        os.replace(tmp, self._promote_journal_path())
+        write_atomic(self._promote_journal_path(), journal)
         self._apply_promote(journal)
 
     # --- read / write --------------------------------------------------------
@@ -365,16 +366,23 @@ class TableStore:
 
     def _flip_pointer(self, table: str, version: int) -> None:
         """The atomic pointer replace alone — the moment a commit
-        becomes DURABLE. Split from the timestamp-log append so
-        multi-table committers (commit_many_occ) can record the flip
-        as done the instant it is: a log-append failure after the
-        replace must not make the caller release a claim whose commit
-        is already visible (re-staging it would duplicate data)."""
+        becomes visible. On return the pointer survives power loss:
+        ``write_atomic`` fsyncs the new pointer file before the rename
+        and the table dir after it (which also makes the table dir's
+        ``v<n>``/``data``/``deletes`` entries durable). The data the
+        pointer names is durable because its writer fsynced it first:
+        ``_write_manifest`` syncs a commit's or version's files, its
+        manifest and the dir entry before any flip. Not covered: the
+        table dir's own entry in ``base_dir`` (created once, at the
+        first write) and the ``_COMMITS.jsonl`` append.
+
+        Split from the timestamp-log append so multi-table committers
+        (commit_many_occ) can record the flip as done the instant it
+        is: a log-append failure after the replace must not make the
+        caller release a claim whose commit is already visible
+        (re-staging it would duplicate data)."""
         os.makedirs(self._tdir(table), exist_ok=True)
-        tmp = self._pointer(table) + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(version))
-        os.replace(tmp, self._pointer(table))  # atomic on POSIX
+        write_atomic(self._pointer(table), int(version))
 
     def _log_commit_ts(self, table: str, version: int) -> None:
         # commit-time log for TIMESTAMP AS OF (see read_facts_at_time):
@@ -416,13 +424,12 @@ class TableStore:
                 f"rollback_facts: target {commit_id} is above the current "
                 f"pointer {ptr} (would expose uncommitted staged dirs)"
             )
-        for other in os.listdir(self.base_dir):
-            br = self.branch_info(other)
-            if br is not None and br["source"] == table and commit_id < br["base"]:
-                raise ValueError(
-                    f"rollback_facts: branch {other!r} holds base "
-                    f"{br['base']} on {table!r}; cannot roll below it"
-                )
+        bases = self._pins(snapshots=False).get(table)
+        if bases and commit_id < max(bases):
+            raise ValueError(
+                f"rollback_facts: a branch holds base {max(bases)} on "
+                f"{table!r}; cannot roll below it"
+            )
         self.repoint(table, commit_id)
 
     # --- append-only fact tables ---------------------------------------------
@@ -451,8 +458,7 @@ class TableStore:
 
     def check_constraints(self, table: str) -> dict[str, str]:
         try:
-            with open(self._constraints_path(table)) as f:
-                return json.load(f)
+            return read_json(self._constraints_path(table))
         except FileNotFoundError:
             return {}
 
@@ -464,14 +470,12 @@ class TableStore:
         os.makedirs(self._tdir(table), exist_ok=True)
         cons = self.check_constraints(table)
         cons[name] = expr
-        with open(self._constraints_path(table), "w") as f:
-            json.dump(cons, f)
+        write_atomic(self._constraints_path(table), cons)
 
     def drop_check_constraint(self, table: str, name: str) -> None:
         cons = self.check_constraints(table)
         cons.pop(name, None)
-        with open(self._constraints_path(table), "w") as f:
-            json.dump(cons, f)
+        write_atomic(self._constraints_path(table), cons)
 
     def append(
         self,
@@ -641,8 +645,9 @@ class TableStore:
                 # its writer died between O_CREAT|O_EXCL and the pid write.
                 # Treat it as dead and steal; returning False here would
                 # wedge every writer on the table forever (no live pid can
-                # ever release it).
-                os.replace(path, path + ".dead")
+                # ever release it). Under the flock, unlink-then-create
+                # is as exclusive as a rename would be.
+                os.unlink(path)
             fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
             os.write(fd, str(os.getpid()).encode())
             os.close(fd)
@@ -830,9 +835,9 @@ class TableStore:
                 f"delete key columns {sorted(keys.columns)} != the table's "
                 f"established delete key {existing}"
             )
-        keys.distinct().write.mode("overwrite").parquet(
-            self.delete_dir(table, commit_id)
-        )
+        path = self.delete_dir(table, commit_id)
+        keys.distinct().write.mode("overwrite").parquet(path)
+        self._write_manifest(path)  # syncs the tombstone before any flip
 
     def delete_where(
         self,
@@ -1068,11 +1073,8 @@ class TableStore:
         if when_not_matched == "insert" and n_unmatched:
             appends.append(unmatched)
         if appends:
-            out = appends[0]
-            for p in appends[1:]:
-                out = out.unionByName(p)
             try:
-                self.append(table, out, commit_id, cluster_by=cluster_by)
+                self.append(table, _union(appends), commit_id, cluster_by=cluster_by)
             except Exception:
                 # same both-halves rollback as upsert_facts: a staged
                 # tombstone must not outlive its failed append
@@ -1085,45 +1087,74 @@ class TableStore:
                 raise
         return {"matched": n_matched, "not_matched": n_unmatched}
 
-    def _committed_delete_dirs(self, table: str) -> list[str]:
-        """Mirror of ``_committed_append_dirs`` for tombstones
-        (branch-aware: the source's deletes ≤ base apply to the shared
-        history; the branch's own above it)."""
-        ptr = self.current_version(table)
-        if ptr is None:
-            return []
-        br = self.branch_info(table)
-        out: list[str] = []
-        roots = []
+    def _commit_dirs(
+        self,
+        table: str,
+        sub: str,
+        hi: float | None = None,
+        lo: float = float("-inf"),
+        shared: bool = True,
+    ) -> list[tuple[str, int, str]]:
+        """``(root, commit id, dir)`` for each ``commit=<id>`` dir of
+        ``table``'s ``sub`` root (``"data"`` or ``"deletes"``) with
+        ``lo < id <= hi``: the one answer to "which commit dirs does a
+        reader at watermark ``hi`` see". ``hi`` defaults to the live
+        pointer (no pointer: nothing is visible); a caller's ``hi`` is
+        not clamped to it (``read_at`` replays a snapshot that may sit
+        above a rolled-back pointer).
+
+        Branch-aware: a branch sees its source's dirs up to the frozen
+        base, then its own above it. ``shared=False`` lists ``table``'s
+        own root alone, for the paths that remove or move its dirs.
+        Source root first, and within a root ``sorted(os.listdir())``
+        order: the order handed to ``spark.read.parquet``, so part of
+        every read plan."""
+        if hi is None:
+            hi = self.current_version(table)
+            if hi is None:
+                return []
+        br = self.branch_info(table) if shared else None
+        spans = [(table, lo, hi)]
         if br is not None:
-            roots.append(
-                (
-                    os.path.join(self._tdir(br["source"]), "deletes"),
-                    float("-inf"),
-                    min(br["base"], ptr),
-                )
-            )
-            roots.append(
-                (os.path.join(self._tdir(table), "deletes"), br["base"], ptr)
-            )
-        else:
-            roots.append(
-                (os.path.join(self._tdir(table), "deletes"), float("-inf"), ptr)
-            )
-        for root, lo, hi in roots:
+            spans = [
+                (br["source"], lo, min(br["base"], hi)),
+                (table, max(lo, br["base"]), hi),
+            ]
+        out = []
+        for t, a, b in spans:
+            root = os.path.join(self._tdir(t), sub)
             if not os.path.isdir(root):
                 continue
-            out += [
-                os.path.join(root, d)
-                for d in sorted(os.listdir(root))
-                if d.startswith("commit=") and lo < int(d.split("=", 1)[1]) <= hi
-            ]
+            for d in sorted(os.listdir(root)):
+                if d.startswith("commit="):
+                    cid = int(d[len("commit="):])
+                    if a < cid <= b:
+                        out.append((root, cid, os.path.join(root, d)))
         return out
+
+    def _read_roots(self, spark: SparkSession, entries) -> Iterator[DataFrame]:
+        """One ``mergeSchema`` read per data root of ``entries``
+        (``(root, ..., path)`` tuples: resolver entries, or
+        ``(root, file)``), in first-seen root order. ``basePath`` keeps
+        the ``commit`` partition column, which tombstone application
+        needs; a branch read spans two roots, hence one read per root.
+        Lazy, so a caller's per-root steps run before the next root's
+        read, as they always have: the plan's expression ids follow
+        that order."""
+        by_root: dict[str, list[str]] = {}
+        for root, *_, path in entries:
+            by_root.setdefault(root, []).append(path)
+        for root, paths in by_root.items():
+            yield (
+                spark.read.option("basePath", root)
+                .option("mergeSchema", "true")
+                .parquet(*paths)
+            )
 
     def _delete_key_cols(self, table: str) -> list[str] | None:
         import pyarrow.parquet as pq
 
-        dirs = self._committed_delete_dirs(table)
+        dirs = [d for _, _, d in self._commit_dirs(table, "deletes")]
         if not dirs:
             # uncommitted tombstones still pin the key columns
             root = os.path.join(self._tdir(table), "deletes")
@@ -1143,22 +1174,19 @@ class TableStore:
         deletes (the zero-cost common case: reads skip the join)."""
         from pyspark.sql import functions as F
 
-        dirs = [
-            d
-            for d in self._committed_delete_dirs(table)
-            if int(d.rsplit("=", 1)[1]) <= watermark
-        ]
-        if not dirs:
+        ptr = self.current_version(table)
+        if ptr is None:
             return None
-        parts = []
-        for d in dirs:
-            cid = int(d.rsplit("=", 1)[1])
-            parts.append(
-                spark.read.parquet(d).withColumn("__del_at", F.lit(cid))
+        # clamped to the live pointer, unlike the rows (_facts_frame)
+        parts = [
+            spark.read.parquet(d).withColumn("__del_at", F.lit(cid))
+            for _, cid, d in self._commit_dirs(
+                table, "deletes", min(watermark, ptr)
             )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
+        ]
+        if not parts:
+            return None
+        out = _union(parts)
         keys = [c for c in out.columns if c != "__del_at"]
         return out.groupBy(*keys).agg(F.max("__del_at").alias("__del_max"))
 
@@ -1167,39 +1195,31 @@ class TableStore:
     def _write_manifest(self, path: str, schema: StructType | None = None) -> None:
         """Footer stats of ``path``; with ``schema`` (the version writers
         pass the frame they wrote), also its read schema for
-        ``_read_version``."""
+        ``_read_version``. The manifest is the commit record, so the
+        dir's data files are fsynced before it is written, and the dir's
+        own entry in its parent after."""
         m = footer_stats(path)
-        tmp = os.path.join(path, MANIFEST + ".tmp")
+        for fe in m["files"]:
+            fsync_path(os.path.join(path, fe["name"]))
         extra = {} if schema is None else {"schema": _nullable(schema).jsonValue()}
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    **extra,
-                    "rows": m["rows"],
-                    "bytes": m["bytes"],
-                    "stats": {
-                        c: {"min": _enc(s["min"]), "max": _enc(s["max"])}
-                        for c, s in m["stats"].items()
-                    },
-                    # per-file zone map (Iceberg's data-file stats): lets
-                    # read_facts_pruned skip FILES inside a surviving
-                    # commit, not just whole commits — the payoff of
-                    # sort-on-write clustering realized at planning time
-                    "files": [
-                        {
-                            "name": fe["name"],
-                            "rows": fe["rows"],
-                            "stats": {
-                                c: {"min": _enc(s["min"]), "max": _enc(s["max"])}
-                                for c, s in fe["stats"].items()
-                            },
-                        }
-                        for fe in m["files"]
-                    ],
-                },
-                f,
-            )
-        os.replace(tmp, os.path.join(path, MANIFEST))
+        write_atomic(
+            os.path.join(path, MANIFEST),
+            {
+                **extra,
+                "rows": m["rows"],
+                "bytes": m["bytes"],
+                "stats": _map_stats(m["stats"], _enc),
+                # per-file zone map (Iceberg's data-file stats): lets
+                # read_facts_pruned skip FILES inside a surviving
+                # commit, not just whole commits — the payoff of
+                # sort-on-write clustering realized at planning time
+                "files": [
+                    {**fe, "stats": _map_stats(fe["stats"], _enc)}
+                    for fe in m["files"]
+                ],
+            },
+        )
+        fsync_path(os.path.dirname(path))
 
     def _read_manifest(self, path: str) -> dict:
         """Manifest for one data dir; self-heals dirs written before the
@@ -1207,48 +1227,14 @@ class TableStore:
         fp = os.path.join(path, MANIFEST)
         if not os.path.exists(fp):
             self._write_manifest(path)
-        with open(fp) as f:
-            m = json.load(f)
-        m["stats"] = {
-            c: {"min": _dec(s["min"]), "max": _dec(s["max"])}
-            for c, s in m["stats"].items()
-        }
+        m = read_json(fp)
+        m["stats"] = _map_stats(m["stats"], _dec)
         # pre-file-stats manifests (older writer era) have no "files":
         # callers treat that as "cannot prune within this commit" and
         # keep the whole dir — never rewrite committed history for it
         for fe in m.get("files", ()):
-            fe["stats"] = {
-                c: {"min": _dec(s["min"]), "max": _dec(s["max"])}
-                for c, s in fe["stats"].items()
-            }
+            fe["stats"] = _map_stats(fe["stats"], _dec)
         return m
-
-    def _committed_append_dirs(self, table: str) -> list[str]:
-        ptr = self.current_version(table)
-        if ptr is None:
-            return []
-        br = self.branch_info(table)
-        out: list[str] = []
-        if br is not None:
-            # shared history: the source's commits up to the frozen base
-            src = os.path.join(self._tdir(br["source"]), "data")
-            if os.path.isdir(src):
-                out += [
-                    os.path.join(src, d)
-                    for d in sorted(os.listdir(src))
-                    if d.startswith("commit=")
-                    and int(d.split("=", 1)[1]) <= min(br["base"], ptr)
-                ]
-        data = os.path.join(self._tdir(table), "data")
-        if os.path.isdir(data):
-            lo = br["base"] if br is not None else float("-inf")
-            out += [
-                os.path.join(data, d)
-                for d in sorted(os.listdir(data))
-                if d.startswith("commit=")
-                and lo < int(d.split("=", 1)[1]) <= ptr
-            ]
-        return out
 
     def describe_history(self, spark: SparkSession, table: str) -> DataFrame:
         """Delta's ``DESCRIBE HISTORY`` for a fact table: one row per
@@ -1259,16 +1245,10 @@ class TableStore:
         An upsert shows as its two halves at the same commit id (one
         append + one delete), which is exactly what it is on disk.
         Branch-aware through the same dir resolution as reads."""
-
-        def cid(d: str) -> int:
-            return int(os.path.basename(d).split("=", 1)[1])
-
         rows = [
-            (cid(d), "append", int(self._read_manifest(d)["rows"]))
-            for d in self._committed_append_dirs(table)
-        ] + [
-            (cid(d), "delete", int(self._read_manifest(d)["rows"]))
-            for d in self._committed_delete_dirs(table)
+            (cid, op, int(self._read_manifest(d)["rows"]))
+            for sub, op in (("data", "append"), ("deletes", "delete"))
+            for _, cid, d in self._commit_dirs(table, sub)
         ]
         return spark.createDataFrame(
             rows, "commit_id int, operation string, n_rows bigint"
@@ -1277,7 +1257,7 @@ class TableStore:
     def facts_stats(self, table: str) -> dict | None:
         """Fold per-commit manifests: total rows + global min/max per
         column, without reading any fact data. O(#commit dirs)."""
-        dirs = self._committed_append_dirs(table)
+        dirs = [d for _, _, d in self._commit_dirs(table, "data")]
         if not dirs:
             return None
         rows, stats = 0, {}
@@ -1348,40 +1328,11 @@ class TableStore:
         replaces the old read-everything-then-row-filter plan, so the
         footer sweep itself is bounded by the watermark.)"""
 
-        def root(data: str, lo, hi) -> DataFrame | None:
-            dirs = [
-                os.path.join(data, d)
-                for d in sorted(os.listdir(data))
-                if d.startswith("commit=")
-                and (lo is None or int(d.split("=", 1)[1]) > lo)
-                and int(d.split("=", 1)[1]) <= hi
-            ]
-            if not dirs:
-                return None
-            return (
-                spark.read.option("basePath", data)
-                .option("mergeSchema", "true")
-                .parquet(*dirs)
-            )
-
-        br = self.branch_info(table)
-        parts: list[DataFrame] = []
-        if br is not None:
-            src = os.path.join(self._tdir(br["source"]), "data")
-            if os.path.isdir(src):
-                p = root(src, None, min(br["base"], watermark))
-                if p is not None:
-                    parts.append(p)
-        data = os.path.join(self._tdir(table), "data")
-        if os.path.isdir(data):
-            p = root(data, br["base"] if br is not None else None, watermark)
-            if p is not None:
-                parts.append(p)
+        entries = self._commit_dirs(table, "data", watermark)
+        parts = list(self._read_roots(spark, entries))
         if not parts:
             return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
+        out = _union(parts, allow_missing=True)
         return self._apply_deletes(spark, table, out, watermark).drop("commit")
 
     def _apply_deletes(
@@ -1445,20 +1396,6 @@ class TableStore:
         if ptr is None:
             return None
         hi = ptr if until is None else min(until, ptr)
-
-        def _cid(d: str) -> int:
-            return int(os.path.basename(d).split("=", 1)[1])
-
-        app_dirs = [
-            d
-            for d in self._committed_append_dirs(table)
-            if since < _cid(d) <= hi
-        ]
-        del_dirs = [
-            d
-            for d in self._committed_delete_dirs(table)
-            if since < _cid(d) <= hi
-        ]
         base = self.read_facts(spark, table)  # full-schema reference
         if base is None:  # pointer exists but no fact data root at all
             return None
@@ -1471,60 +1408,44 @@ class TableStore:
                 "'_commit'/'_change_type' are feed metadata and 'commit' is "
                 "the store's internal partition column"
             )
-        parts: list[DataFrame] = []
-        # group append dirs per data root (a branch spans two roots)
-        by_root: dict[str, list[str]] = {}
-        br = self.branch_info(table)
-        candidates = [os.path.join(self._tdir(table), "data")]
-        if br is not None:
-            candidates.append(os.path.join(self._tdir(br["source"]), "data"))
-        for d in app_dirs:
-            root = next(
-                r for r in candidates if d == r or d.startswith(r + os.sep)
-            )
-            by_root.setdefault(root, []).append(d)
-        for root, dirs in by_root.items():
-            df = (
-                spark.read.option("basePath", root)
-                .option("mergeSchema", "true")
-                .parquet(*dirs)
-            )
-            df = df.withColumn("_commit", F.col("commit").cast("bigint")).drop(
-                "commit"
-            )
+
+        def event(df: DataFrame, change_type: str) -> DataFrame:
+            # pad to the full schema (typed NULLs), then stamp the kind
             for c in schema_cols:
                 if c not in df.columns:
                     df = df.withColumn(
                         c, F.lit(None).cast(base.schema[c].dataType)
                     )
-            parts.append(
-                df.select(*schema_cols, "_commit").withColumn(
-                    "_change_type", F.lit("insert")
-                )
+            return df.select(*schema_cols, "_commit").withColumn(
+                "_change_type", F.lit(change_type)
             )
-        for d in del_dirs:
-            keys = spark.read.parquet(d)
-            df = keys.withColumn("_commit", F.lit(_cid(d)).cast("bigint"))
-            for c in schema_cols:
-                if c not in df.columns:
-                    df = df.withColumn(
-                        c, F.lit(None).cast(base.schema[c].dataType)
-                    )
-            parts.append(
-                df.select(*schema_cols, "_commit").withColumn(
-                    "_change_type", F.lit("delete")
-                )
+
+        parts = [
+            event(
+                df.withColumn("_commit", F.col("commit").cast("bigint")).drop(
+                    "commit"
+                ),
+                "insert",
             )
+            for df in self._read_roots(
+                spark, self._commit_dirs(table, "data", hi, lo=since)
+            )
+        ] + [
+            event(
+                spark.read.parquet(d).withColumn(
+                    "_commit", F.lit(cid).cast("bigint")
+                ),
+                "delete",
+            )
+            for _, cid, d in self._commit_dirs(table, "deletes", hi, lo=since)
+        ]
         if not parts:
             return (
                 base.withColumn("_commit", F.lit(None).cast("bigint"))
                 .withColumn("_change_type", F.lit(None).cast("string"))
                 .where(F.lit(False))
             )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return _union(parts)
 
     def read_facts_pruned(
         self, spark: SparkSession, table: str, column: str, lo, hi
@@ -1547,11 +1468,11 @@ class TableStore:
         overlaps."""
         from pyspark.sql import functions as F
 
-        dirs = self._committed_append_dirs(table)
-        if not dirs:
+        entries = self._commit_dirs(table, "data")
+        if not entries:
             return None
-        keep: list[str] = []
-        for d in dirs:
+        keep: list[tuple[str, str]] = []  # (root, dir or file)
+        for root, _, d in entries:
             m = self._read_manifest(d)
             s = m["stats"].get(column)
             # no stats for the column (all-null or non-footer type):
@@ -1560,42 +1481,16 @@ class TableStore:
                 continue
             file_entries = m.get("files")
             if not file_entries:
-                keep.append(d)  # pre-file-stats manifest: whole dir
+                keep.append((root, d))  # pre-file-stats manifest: whole dir
                 continue
             for fe in file_entries:
                 fs = fe["stats"].get(column)
                 if fs is None or (fs["max"] >= lo and fs["min"] <= hi):
-                    keep.append(os.path.join(d, fe["name"]))
+                    keep.append((root, os.path.join(d, fe["name"])))
         base = self.read_facts(spark, table)  # schema ref; commit already dropped
         if not keep:
             return base.where(F.lit(False))
-        # group kept entries by their data ROOT and read each group with
-        # basePath so the commit partition column survives — tombstone
-        # application needs each row's own commit id (a branch read
-        # spans two roots, hence the grouping rather than one basePath).
-        # Roots are matched against the KNOWN candidates (this table's
-        # data dir + the branch source's), not string-searched: a
-        # base_dir containing a "data" path segment, or a table named
-        # "data", must not corrupt the basePath.
-        br = self.branch_info(table)
-        candidates = [os.path.join(self._tdir(table), "data")]
-        if br is not None:
-            candidates.append(os.path.join(self._tdir(br["source"]), "data"))
-        by_root: dict[str, list[str]] = {}
-        for p in keep:
-            root = next(
-                r for r in candidates if p == r or p.startswith(r + os.sep)
-            )
-            by_root.setdefault(root, []).append(p)
-        parts = [
-            spark.read.option("basePath", root)
-            .option("mergeSchema", "true")
-            .parquet(*paths)
-            for root, paths in by_root.items()
-        ]
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p, allowMissingColumns=True)
+        df = _union(self._read_roots(spark, keep), allow_missing=True)
         df = df.where(F.col(column).between(F.lit(lo), F.lit(hi)))
         df = self._apply_deletes(
             spark, table, df, self.current_version(table)
@@ -1620,14 +1515,14 @@ class TableStore:
             if os.path.isdir(self._tdir(t)) and self.current_version(t) is not None
         ]
         manifest = {"versions": {t: self.current_version(t) for t in tables}}
-        with open(self._snap_path(tag), "w") as f:
-            json.dump(manifest, f)
+        write_atomic(self._snap_path(tag), manifest)
         return manifest
 
+    def _read_snapshot(self, tag: str) -> dict:
+        return read_json(self._snap_path(tag))
+
     def restore(self, tag: str) -> None:
-        with open(self._snap_path(tag)) as f:
-            manifest = json.load(f)
-        for table, version in manifest["versions"].items():
+        for table, version in self._read_snapshot(tag)["versions"].items():
             self.repoint(table, version)
 
     def read_at(self, spark: SparkSession, table: str, tag: str) -> DataFrame | None:
@@ -1635,9 +1530,7 @@ class TableStore:
         repointing anything (the snapshot is just version pointers, so
         this is O(1) metadata — no data was copied at snapshot time).
         Fact tables replay to the snapshot's commit watermark."""
-        with open(self._snap_path(tag)) as f:
-            manifest = json.load(f)
-        version = manifest["versions"].get(table)
+        version = self._read_snapshot(tag)["versions"].get(table)
         if version is None:
             return None
         br = self.branch_info(table)
@@ -1776,6 +1669,22 @@ class TableStore:
             if f.startswith("_SNAPSHOT_") and f.endswith(".json")
         ]
 
+    def _pins(self, snapshots: bool = True) -> dict[str, set[int]]:
+        """Versions each table must keep readable: every branch base
+        (pinned on its source) and, with ``snapshots``, every snapshot's
+        recorded version. ``vacuum`` keeps their dirs, ``compact_facts``
+        never merges across them, and ``rollback_facts`` never rolls
+        below a branch base."""
+        pins: dict[str, set[int]] = {}
+        for tag in self._snapshot_tags() if snapshots else ():
+            for t, v in self._read_snapshot(tag)["versions"].items():
+                pins.setdefault(t, set()).add(v)
+        for t in os.listdir(self.base_dir):
+            br = self.branch_info(t)
+            if br is not None:
+                pins.setdefault(br["source"], set()).add(br["base"])
+        return pins
+
     def vacuum(self, keep_last: int = 1) -> dict[str, list[str]]:
         """Reclaim unreferenced storage from a long-running sync.
 
@@ -1793,20 +1702,7 @@ class TableStore:
         ``keep_last`` to cover the longest expected reader, or pause
         vacuuming around long ad-hoc scans.
         """
-        protected: dict[str, set[int]] = {}
-        for tag in self._snapshot_tags():
-            with open(self._snap_path(tag)) as f:
-                for t, v in json.load(f)["versions"].items():
-                    protected.setdefault(t, set()).add(v)
-        # every branch pins its source's state at the branch base: the
-        # shared dim version dir and (via the fact watermark below) the
-        # shared commit dirs must survive any vacuum of the source
-        for t in os.listdir(self.base_dir):
-            if os.path.isdir(self._tdir(t)):
-                bi = self.branch_info(t)
-                if bi is not None:
-                    protected.setdefault(bi["source"], set()).add(bi["base"])
-
+        protected = self._pins()
         removed: dict[str, list[str]] = {}
         for table in os.listdir(self.base_dir):
             tdir = self._tdir(table)
@@ -1834,17 +1730,14 @@ class TableStore:
             # became visible.
             watermark = max(keep)
             for sub in ("data", "deletes"):
-                root = os.path.join(tdir, sub)
-                if not os.path.isdir(root):
-                    continue
-                for d in os.listdir(root):
-                    if d.startswith("commit="):
-                        cid = int(d.split("=", 1)[1])
-                        if cid > watermark:
-                            shutil.rmtree(os.path.join(root, d))
-                            removed.setdefault(table, []).append(
-                                d if sub == "data" else f"deletes/{d}"
-                            )
+                for _, _, d in self._commit_dirs(
+                    table, sub, float("inf"), lo=watermark, shared=False
+                ):
+                    shutil.rmtree(d)
+                    name = os.path.basename(d)
+                    removed.setdefault(table, []).append(
+                        name if sub == "data" else f"deletes/{name}"
+                    )
         return removed
 
     # --- fact compaction -----------------------------------------------------
@@ -1861,9 +1754,10 @@ class TableStore:
     #
     # Crash safety is a journal protocol (dir renames aren't atomic as a
     # group): merged data is staged under a dot-dir Spark ignores, a
-    # journal naming (remove-list, promote-pair) is fsync-replaced into
-    # place, then applied; recovery at TableStore.__init__ re-applies an
-    # interrupted journal idempotently. Mirrors `vacuum`'s reader
+    # journal naming (remove-list, promote-pair) is written with
+    # `write_atomic` (fsynced, then renamed into place), then applied;
+    # recovery at TableStore.__init__ re-applies an interrupted journal
+    # idempotently. Mirrors `vacuum`'s reader
     # caveat: run quiescent or size retention to cover in-flight scans.
 
     def _journal_path(self, table: str) -> str:
@@ -1887,8 +1781,7 @@ class TableStore:
     def _recover_compaction(self, table: str) -> None:
         jp = self._journal_path(table)
         if os.path.exists(jp):
-            with open(jp) as f:
-                self._apply_journal(table, json.load(f))
+            self._apply_journal(table, read_json(jp))
 
     def compact_facts(
         self,
@@ -1923,34 +1816,22 @@ class TableStore:
         if ptr is None or not os.path.isdir(data):
             return {"segments": []}
 
-        watermarks = {ptr}
-        for tag in self._snapshot_tags():
-            with open(self._snap_path(tag)) as f:
-                v = json.load(f)["versions"].get(table)
-            if v is not None:
-                watermarks.add(v)
-        # branch bases are reader watermarks too: a branch resolves
-        # "source commit ≤ base", so a merged dir must never straddle a
-        # base — otherwise the branch would see post-base rows
-        for t in os.listdir(self.base_dir):
-            if os.path.isdir(self._tdir(t)):
-                bi = self.branch_info(t)
-                if bi is not None and bi["source"] == table:
-                    watermarks.add(bi["base"])
-
-        cids = sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(data)
-            if d.startswith("commit=") and int(d.split("=", 1)[1]) <= ptr
+        # snapshot pointers and branch bases are reader watermarks: a
+        # branch resolves "source commit ≤ base", so a merged dir must
+        # never straddle a base — the branch would see post-base rows
+        watermarks = self._pins().get(table, set()) | {ptr}
+        entries = sorted(
+            self._commit_dirs(table, "data", ptr, shared=False),
+            key=lambda e: e[1],
         )
         boundaries = sorted(w for w in watermarks if w <= ptr)
         done, prev = [], float("-inf")
         for b in boundaries:
-            seg = [c for c in cids if prev < c <= b]
+            seg = [e for e in entries if prev < e[1] <= b]
             prev = b
             if len(seg) < min_dirs_per_segment:
                 continue
-            dirs = [os.path.join(data, f"commit={c}") for c in seg]
+            dirs = [d for _, _, d in seg]
             total = sum(self._read_manifest(d)["bytes"] for d in dirs)
             nfiles = max(1, -(-total // target_bytes_per_file))
             tmp = os.path.join(data, f".compact-{b}.tmp")
@@ -1962,11 +1843,7 @@ class TableStore:
             # otherwise outrank its tombstone and resurrect. Tombstone
             # dirs are retained (rows in never-rewritten segments still
             # need them; re-application to purged rows is a no-op).
-            merged = (
-                spark.read.option("basePath", data)
-                .option("mergeSchema", "true")
-                .parquet(*dirs)
-            )
+            (merged,) = self._read_roots(spark, seg)
             merged = self._apply_deletes(spark, table, merged, b).drop("commit")
             if isinstance(cluster_by, (list, tuple)):
                 from ..operators.zorder import zorder_frame
@@ -1980,14 +1857,8 @@ class TableStore:
                 merged = merged.coalesce(nfiles)
             merged.write.mode("overwrite").parquet(tmp)
             self._write_manifest(tmp)
-            journal = {
-                "remove": dirs,
-                "promote": [tmp, os.path.join(data, f"commit={b}")],
-            }
-            jtmp = self._journal_path(table) + ".tmp"
-            with open(jtmp, "w") as f:
-                json.dump(journal, f)
-            os.replace(jtmp, self._journal_path(table))
+            journal = {"remove": dirs, "promote": [tmp, self.append_dir(table, b)]}
+            write_atomic(self._journal_path(table), journal)
             self._apply_journal(table, journal)
             done.append((b, len(seg)))
         # TOMBSTONE GC: once the FIRST segment (history's beginning up
@@ -2004,14 +1875,10 @@ class TableStore:
         # resurrect those rows in branch reads.
         if done and done[0][0] == boundaries[0] and self.branch_info(table) is None:
             b1 = done[0][0]
-            droot = os.path.join(self._tdir(table), "deletes")
-            if os.path.isdir(droot):
-                spent = []
-                for d in sorted(os.listdir(droot)):
-                    if d.startswith("commit=") and int(d.split("=", 1)[1]) <= b1:
-                        shutil.rmtree(os.path.join(droot, d))
-                        spent.append(d)
-                if spent:
-                    done_meta = {"tombstones_dropped": spent}
-                    return {"segments": done, **done_meta}
+            spent = []
+            for _, _, d in self._commit_dirs(table, "deletes", b1, shared=False):
+                shutil.rmtree(d)
+                spent.append(os.path.basename(d))
+            if spent:
+                return {"segments": done, "tombstones_dropped": spent}
         return {"segments": done}

@@ -17,7 +17,7 @@ keyspace. This store makes the per-batch cost track the BATCH:
   and files are left byte-identical.
 * The swap is the TableStore stage-then-pointer-flip, per bucket: the
   staged ``bucket=<b>`` output is moved to ``bucket_<b>/v<N+1>`` and a
-  ``_VERSION`` pointer file is replaced atomically (``os.replace``).
+  ``_VERSION`` pointer file is replaced atomically (``write_atomic``).
   A crash mid-flip leaves some buckets at the old version; on restart
   the streaming source re-delivers the unacknowledged batch and the
   merge is IDEMPOTENT (argmax over a union that already contains the
@@ -38,6 +38,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from ..durable import write_atomic
 
 
 class BucketedCdcState:
@@ -74,10 +76,7 @@ class BucketedCdcState:
 
     def _repoint(self, b: int, version: int) -> None:
         os.makedirs(self._bdir(b), exist_ok=True)
-        tmp = self._pointer(b) + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(version))
-        os.replace(tmp, self._pointer(b))  # atomic on POSIX
+        write_atomic(self._pointer(b), int(version))
 
     def _bucket_col(self) -> F.Column:
         return F.pmod(F.hash(F.col(self.key_col)), F.lit(self.n_buckets)).cast("int")

@@ -275,7 +275,7 @@ def test_read_facts_pruned_matches_filter_and_skips_dirs(spark, synced, monkeypa
     # manifest pruning really skips commit dirs: the scanned file list
     # must exclude at least one committed dir (periods after `mid`)
     scanned = pruned.inputFiles()
-    all_dirs = store._committed_append_dirs("asset_tx")
+    all_dirs = [d for _, _, d in store._commit_dirs("asset_tx", "data")]
     touched = {d for d in all_dirs if any(f.startswith("file:" + d) for f in scanned)}
     assert len(touched) < len(all_dirs)
 
@@ -437,7 +437,7 @@ def test_sync_with_clustered_facts_matches_plain(spark, source_dir, tmp_path, _g
         b = sorted(map(tuple, clustered.read_facts(spark, t).collect()), key=repr)
         assert a == b, t
         # layout: within every committed dir, file ranges are disjoint
-        for d in clustered._committed_append_dirs(t):
+        for _, _, d in clustered._commit_dirs(t, "data"):
             ranges = _file_ranges(d, "tx_time")
             if len(ranges) >= 2:
                 _assert_disjoint(ranges)
@@ -2139,3 +2139,72 @@ def test_occ_multi_table_two_process_race(tmp_path):
             with open(os.path.join(st.append_dir(table, cid), "WRITER")) as f:
                 seen.add(f.read())
         assert len(seen) == total, f"{table}: a staged commit was lost"
+
+
+def test_check_constraint_write_is_atomic(spark, tmp_path):
+    """A constraint write that fails mid-way (here: an expression that
+    cannot be JSON-encoded) must leave the constraint file as it was.
+    Truncating it in place left a JSON prefix behind, after which
+    ``check_constraints`` — and so every later append — raised
+    JSONDecodeError."""
+    st = TableStore(str(tmp_path / "cons"))
+    st.set_check_constraint("t", "pos", "v > 0")
+    with pytest.raises(TypeError):
+        st.set_check_constraint("t", "bad", object())
+    assert st.check_constraints("t") == {"pos": "v > 0"}
+    st.append("t", spark.createDataFrame([(1,)], "v int"), 1)
+    st.commit_append("t", 1)
+    assert [r.v for r in st.read_facts(spark, "t").collect()] == [1]
+    with pytest.raises(ValueError, match="CHECK"):
+        st.append("t", spark.createDataFrame([(-1,)], "v int"), 2)
+
+
+def test_snapshot_rewrite_is_atomic(spark, tmp_path, monkeypatch):
+    """A re-snapshot under an existing tag that dies mid-write (the
+    disk fills after half of the text) must keep the old snapshot:
+    ``read_at`` still replays it and ``vacuum`` still protects its
+    version. Writing the tag file in place destroyed it, and every
+    later vacuum raised JSONDecodeError."""
+    import builtins
+    import errno
+
+    st = TableStore(str(tmp_path / "snap"))
+    for n in (1, 2, 3):
+        st.repoint("dim", st.stage("dim", spark.range(n)))
+        if n == 1:
+            st.snapshot("keep")
+
+    class DiskFull:
+        def __init__(self, f):
+            self._f = f
+
+        def write(self, s):
+            self._f.write(s[: len(s) // 2])
+            raise OSError(errno.ENOSPC, "No space left on device")
+
+        def __getattr__(self, name):
+            return getattr(self._f, name)
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self._f.close()
+
+    real_open = builtins.open
+
+    def failing_open(file, mode="r", *args, **kwargs):
+        f = real_open(file, mode, *args, **kwargs)
+        if "w" in mode and "_SNAPSHOT_keep" in os.fspath(file):
+            return DiskFull(f)
+        return f
+
+    monkeypatch.setattr(builtins, "open", failing_open)
+    with pytest.raises(OSError, match="No space"):
+        st.snapshot("keep")
+    monkeypatch.undo()
+
+    assert st.read_at(spark, "dim", "keep").count() == 1
+    assert st.vacuum(keep_last=1) == {"dim": ["v2"]}
+    assert st.read_at(spark, "dim", "keep").count() == 1
+    assert st.read(spark, "dim").count() == 3
