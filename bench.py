@@ -189,6 +189,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
 
+    from pantasia_db_sync_spark.operators.ckpt import scope
     from pantasia_db_sync_spark.session import get_spark
     from pantasia_db_sync_spark.plans import QUERIES
 
@@ -203,10 +204,16 @@ def main() -> None:
         fn()
         return time.perf_counter() - t0
 
+    def timed_query(name: str, d: str) -> float:
+        # one scope per query: it releases the query's checkpoint
+        # blocks and broadcasts when it closes, after the timer stopped
+        with scope():
+            return timed(lambda: materialize(QUERIES[name](spark, d)))
+
     # Warm-up: one full unrecorded pass over the whole suite so JVM JIT,
     # codegen caches, parquet footers, and broadcast machinery are hot.
     for name in HEADLINE:
-        materialize(QUERIES[name](spark, sf_dir))
+        timed_query(name, sf_dir)
 
     # Calibration: a fixed synthetic workload (range -> hash-agg ->
     # noop, no repo code, no IO) measuring THIS RUN's host speed.
@@ -247,46 +254,12 @@ def main() -> None:
     except (OSError, ValueError):
         pass
 
-    # Baseline snapshot of persistent RDD ids at session start: the
-    # cleanup hook below frees only ids created AFTER this point, so a
-    # frame deliberately persisted before the measured segments (none
-    # today — the invariant round 16 left unstated) can never be
-    # destroyed by the hook (a localCheckpoint'ed RDD's blocks are its
-    # only copy; unpersisting one that is still referenced would fail
-    # later with "checkpoint block not found").
-    _baseline_ids: set = set()
-    _it0 = spark.sparkContext._jsc.getPersistentRDDs().keySet().iterator()
-    while _it0.hasNext():
-        _baseline_ids.add(_it0.next())
-
     def jvm_gc() -> None:
         # Long local[*] sessions age measurably (accumulated listener /
         # broadcast / shuffle state pushes GC into later queries —
         # round 4's "uniform 11% slowdown" was exactly this plus a cold
         # first run). A full GC between measured segments pins each
         # query to a comparable heap state.
-        #
-        # Round-16 addition (same hook, still OUTSIDE every timed
-        # region; methodology unchanged): drop the PREVIOUS query's
-        # leaked localCheckpoint blocks (measured: a 7-query loop
-        # re-run without cleanup degraded 3-5x by pass 2). Round 17
-        # fixes that leak AT THE SOURCE (operators/ckpt.py — iterative
-        # operators free superseded rounds themselves), so this hook is
-        # defense-in-depth for each query's FINAL state blocks; it is
-        # also scoped to ids created after the session-start baseline
-        # (see above). Each timed query still computes from the
-        # parquet inputs — this only removes dead blocks a real
-        # per-query driver run would never have held.
-        import gc as _pygc
-
-        _pygc.collect()  # release py4j handles so unpersist sees all
-        it = (
-            spark.sparkContext._jsc.getPersistentRDDs().entrySet().iterator()
-        )
-        while it.hasNext():
-            e = it.next()
-            if e.getKey() not in _baseline_ids:
-                e.getValue().unpersist(False)
         spark.sparkContext._jvm.System.gc()
 
     timings: dict[str, float] = {}
@@ -304,19 +277,13 @@ def main() -> None:
         qcal[name] = round(
             statistics.median(timed(calibration_work) for _ in range(3)), 3
         )
-        # round-17 (ADVICE r16): run the cleanup hook between REPS as
-        # well, not only between queries — rep 1's final-state blocks
-        # otherwise occupy storage memory during reps 2..N (the same
-        # degradation mechanism, inside one query's rep window). Still
-        # outside the timed lambda; a rep never reuses a previous rep's
-        # blocks (fresh RDD ids), so this changes heap state only.
+        # the full GC runs between REPS as well (round 17): each rep
+        # starts from the same heap state, outside the timed region
         runs = []
         for _i in range(REPS):
             if _i:
                 jvm_gc()
-            runs.append(
-                timed(lambda: materialize(QUERIES[name](spark, sf_dir)))
-            )
+            runs.append(timed_query(name, sf_dir))
         runs.sort()
         timings[name] = round(statistics.median(runs), 3)
         spread[name] = [round(runs[0], 3), round(runs[-1], 3)]
@@ -410,13 +377,11 @@ def main() -> None:
             # a cold-page-cache / external-load spike as "10.97s" where
             # the warm steady state re-measured at 3.5s — same noise
             # class the sync-10x spread fix addresses
-            materialize(QUERIES[name](spark, dir10))  # warm
+            timed_query(name, dir10)  # warm
             runs = []
             for _ in range(3):
                 jvm_gc()
-                runs.append(
-                    timed(lambda: materialize(QUERIES[name](spark, dir10)))
-                )
+                runs.append(timed_query(name, dir10))
             runs.sort()
             dt = statistics.median(runs)
             dedup10[name] = round(dt, 3)

@@ -38,6 +38,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import portable_hash60
+from .ckpt import broadcast
 
 BLOOM_M_BITS = 1 << 15
 BLOOM_K = 4
@@ -122,7 +123,7 @@ def bloom_any_probe_arrow(spark, words: list[int], m_bits: int = BLOOM_M_BITS, k
             if (w >> b) & 1:
                 p = i * _WORD_BITS + b
                 mask[p >> 3] |= 1 << (p & 7)
-    bc = spark.sparkContext.broadcast(bytes(mask))
+    bc = broadcast(spark, bytes(mask))
 
     from typing import Iterator
 

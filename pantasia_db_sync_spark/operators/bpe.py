@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens_col
+from .ckpt import freeze
 
 __all__ = ["bpe_train", "bpe_vocab_after_merges"]
 
@@ -214,7 +215,7 @@ def _train(
     # freeze: every iteration's pair-count job re-reads this frame (plus
     # its growing chain of map-only replaces) — without the freeze each
     # of the K jobs would redo the corpus explode + groupBy shuffle
-    w = w.localCheckpoint(eager=False)
+    w = freeze(w, eager=False)
 
     merges: list[tuple[int, str, str, str, int]] = []
     rank = 1

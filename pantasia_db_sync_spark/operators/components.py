@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from .ckpt import LoopCheckpointer
+from .ckpt import LoopCheckpointer, freeze
 
 
 def _local_frame(spark, rows, schema: str):
@@ -58,10 +58,9 @@ def connected_components(
     # edge producer from scratch (for the dedup query that is the whole
     # MinHash banding pipeline — measured ~1.5s per round of pure
     # recompute at sf0.1).
-    sym = (
+    sym = freeze(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .union(edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")))
-        .localCheckpoint(eager=True)
     )
     all_nodes = nodes.select(F.col(node_col).alias("node")).distinct()
     # Only nodes with at least one edge can ever change label, so the
@@ -253,14 +252,13 @@ def bfs_distances(
     CTE) and at 100 TB a bounded number of BFS rounds is what you can
     actually schedule; uncapped BFS is the same loop run to fixpoint.
     """
-    sym = (
+    # frozen once: sym is joined EVERY round — without the checkpoint
+    # each round's job re-executes the caller's whole edge-list
+    # derivation (scan + self-join + distinct for the co-purchase
+    # queries), the defect the sssp/pagerank twins never had
+    sym = freeze(
         edges.select(F.col(u_col).alias("a"), F.col(v_col).alias("b"))
         .unionAll(edges.select(F.col(v_col).alias("a"), F.col(u_col).alias("b")))
-        # frozen once: sym is joined EVERY round — without the checkpoint
-        # each round's job re-executes the caller's whole edge-list
-        # derivation (scan + self-join + distinct for the co-purchase
-        # queries), the defect the sssp/pagerank twins never had
-        .localCheckpoint(eager=True)
     )
     nodes = sym.select(F.col("a").alias("node")).distinct()
     ck = LoopCheckpointer()
@@ -382,7 +380,7 @@ def shortest_paths(
     ``rounds`` relaxations = exact minimum over ≤``rounds``-edge paths,
     and at 100 TB a bounded round count is what you can schedule
     (|V|−1 rounds is textbook-exact Bellman-Ford, same loop)."""
-    sym = edges.select(
+    sym = freeze(edges.select(  # joined every round
         F.col(u_col).alias("a"), F.col(v_col).alias("b"),
         F.col(w_col).cast("bigint").alias("w"),
     ).unionAll(
@@ -390,7 +388,7 @@ def shortest_paths(
             F.col(v_col).alias("a"), F.col(u_col).alias("b"),
             F.col(w_col).cast("bigint").alias("w"),
         )
-    ).localCheckpoint(eager=True)  # joined every round
+    ))
     nodes = sym.select(F.col("a").alias("node")).distinct()
     ck = LoopCheckpointer()
     dist = ck.step(
@@ -446,17 +444,15 @@ def pagerank(
     driver graph state; ranks are checkpointed per round
     (components-loop hygiene). Degrees are computed once and reused."""
     base = micro * (damp_den - damp_num) // damp_den
-    sym = (
+    sym = freeze(
         edges.select(F.col(u_col).alias("a"), F.col(v_col).alias("b"))
         .unionAll(edges.select(F.col(v_col).alias("a"), F.col(u_col).alias("b")))
-        .localCheckpoint(eager=True)
     )
     # frozen once: deg is joined every round — unfrozen, each round's
     # job re-runs the degree groupBy over sym (one extra shuffle/round)
-    deg = (
+    deg = freeze(
         sym.groupBy("a")
         .agg(F.count(F.lit(1)).alias("deg"))
-        .localCheckpoint(eager=True)
     )
     r = deg.select("a", F.lit(micro).cast("bigint").alias("r"))
     ck = LoopCheckpointer()
@@ -499,13 +495,12 @@ def multi_bfs_distances(
     loop's lineage hygiene).  Only reached (seed, node) pairs appear in
     the output.
     """
-    sym = (
+    # frozen once: joined every round (see bfs_distances — without
+    # this each of the ``hops`` round jobs re-executes the caller's
+    # edge-list derivation from the raw scans)
+    sym = freeze(
         edges.select(F.col(u_col).alias("a"), F.col(v_col).alias("b"))
         .unionAll(edges.select(F.col(v_col).alias("a"), F.col(u_col).alias("b")))
-        # frozen once: joined every round (see bfs_distances — without
-        # this each of the ``hops`` round jobs re-executes the caller's
-        # edge-list derivation from the raw scans)
-        .localCheckpoint(eager=True)
     )
     # Seed the frontier directly from the seeds list (one (s, s, 0) row
     # per distinct seed) rather than by filtering the graph's node set:
@@ -568,7 +563,7 @@ def _oriented_triangles(
     )
     # ck: loop callers (truss peeling) route this per-round lazy freeze
     # through their tracker so its blocks are freed once superseded
-    o = ck.step(o_plan, eager=False) if ck else o_plan.localCheckpoint(eager=False)
+    o = ck.step(o_plan, eager=False) if ck else freeze(o_plan, eager=False)
     e1 = o.select("a", "b")
     e2 = o.select(F.col("a").alias("b"), F.col("b").alias("c"))
     closing = o.select("a", F.col("b").alias("c"))
@@ -671,16 +666,14 @@ def personalized_pagerank(
     floored rank, so per-round cost is |local neighborhood| x degree,
     never |graph| (zero-rank rows are dropped each round, and the
     registered query's oracle replays the identical sparse frames)."""
-    sym = (
+    sym = freeze(
         edges.select(F.col(u_col).alias("a"), F.col(v_col).alias("b"))
         .unionAll(edges.select(F.col(v_col).alias("a"), F.col(u_col).alias("b")))
-        .localCheckpoint(eager=True)
     )
     # frozen once: deg is joined every round (see pagerank)
-    deg = (
+    deg = freeze(
         sym.groupBy("a")
         .agg(F.count(F.lit(1)).alias("deg"))
-        .localCheckpoint(eager=True)
     )
     spark = edges.sparkSession
     from pyspark.sql.types import LongType, StructField, StructType
@@ -697,9 +690,7 @@ def personalized_pagerank(
         )
 
     # loop-invariant: the same (seed, 0) row every round — built once
-    seed_row = _one_row([(int(seed), 0)], ["node", "c"]).localCheckpoint(
-        eager=True
-    )
+    seed_row = freeze(_one_row([(int(seed), 0)], ["node", "c"]))
     ck = LoopCheckpointer()
     r = ck.step(_one_row([(int(seed), int(micro))], ["a", "r"]))
     restart = (micro * (damp_den - damp_num)) // damp_den
@@ -762,16 +753,15 @@ def brandes_dependency(
     multi_bfs/pagerank loop; frontiers are localCheckpoint'ed. Work is
     O(edges within ``hops`` of the seed) per pass, never |graph|."""
     spark = edges.sparkSession
-    sym = (
+    sym = freeze(
         edges.select(F.col(u_col).alias("a"), F.col(v_col).alias("b"))
         .unionAll(edges.select(F.col(v_col).alias("a"), F.col(u_col).alias("b")))
-        .localCheckpoint(eager=True)
     )
     # forward: per-level frontiers carrying exact path counts sigma
     levels = [
-        _local_frame(
+        freeze(_local_frame(
             spark, [(int(seed), 1)], "node bigint, sigma bigint"
-        ).localCheckpoint(eager=True)
+        ))
     ]
     # keep=1: only the seen freezes themselves are tracked (the level
     # frontiers stay live for the backward pass); a superseded freeze
@@ -784,14 +774,13 @@ def brandes_dependency(
         # Observation move): isEmpty() after the eager checkpoint cost
         # one extra Spark job per level
         obs = Observation()
-        nxt = (
+        nxt = freeze(
             levels[-1]
             .join(sym, levels[-1]["node"] == sym["a"])
             .groupBy(F.col("b").alias("node"))
             .agg(F.sum("sigma").cast("bigint").alias("sigma"))
             .join(seen, "node", "left_anti")
             .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
         )
         if int(obs.get["n"] or 0) == 0:
             break
@@ -832,7 +821,7 @@ def brandes_dependency(
                 .alias("term"),
             )
         )
-        deltas[t] = (
+        deltas[t] = freeze(
             levels[t]
             .select("node")
             .join(
@@ -848,7 +837,6 @@ def brandes_dependency(
                 .cast("bigint")
                 .alias("delta_micro"),
             )
-            .localCheckpoint(eager=True)
         )
     out = None
     for t, (lv, dl) in enumerate(zip(levels, deltas)):
@@ -889,17 +877,16 @@ def brandes_dependency_multi(
     |seeds| x |reachable| rows; frontiers are localCheckpoint'ed (the
     components-loop lineage hygiene)."""
     spark = edges.sparkSession
-    sym = (
+    sym = freeze(
         edges.select(F.col(u_col).alias("a"), F.col(v_col).alias("b"))
         .unionAll(edges.select(F.col(v_col).alias("a"), F.col(u_col).alias("b")))
-        .localCheckpoint(eager=True)
     )
     levels = [
-        _local_frame(
+        freeze(_local_frame(
             spark,
             [(int(s), int(s), 1) for s in dict.fromkeys(seeds)],
             "seed bigint, node bigint, sigma bigint",
-        ).localCheckpoint(eager=True)
+        ))
     ]
     seen_ck = LoopCheckpointer(keep=1)
     seen = seen_ck.step(levels[0].select("seed", "node"))
@@ -907,14 +894,13 @@ def brandes_dependency_multi(
         # exhaustion probe rides the checkpoint job (see
         # brandes_dependency) — one job per level, not two
         obs = Observation()
-        nxt = (
+        nxt = freeze(
             levels[-1]
             .join(sym, levels[-1]["node"] == sym["a"])
             .groupBy("seed", F.col("b").alias("node"))
             .agg(F.sum("sigma").cast("bigint").alias("sigma"))
             .join(seen, ["seed", "node"], "left_anti")
             .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
         )
         if int(obs.get["n"] or 0) == 0:
             break
@@ -955,7 +941,7 @@ def brandes_dependency_multi(
                 .alias("term"),
             )
         )
-        deltas[t] = (
+        deltas[t] = freeze(
             levels[t]
             .select("seed", "node")
             .join(
@@ -972,7 +958,6 @@ def brandes_dependency_multi(
                 .cast("bigint")
                 .alias("delta_micro"),
             )
-            .localCheckpoint(eager=True)
         )
     out = None
     for t, (lv, dl) in enumerate(zip(levels, deltas)):
@@ -1031,11 +1016,10 @@ def betweenness_sampled_uniform(
     entry's oracle REPLAYS the exact seed draw instead of settling
     for a rows-only check; both orders are equally uniform)."""
     spark = edges.sparkSession
-    nodes = (
+    nodes = freeze(
         edges.select(F.col(u_col).alias("n"))
         .unionAll(edges.select(F.col(v_col).alias("n")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     n_nodes = nodes.count()  # scalar probe
     k = min(k, n_nodes)
@@ -1103,16 +1087,14 @@ def hyperanf_rounds(
     relative error every 100 TB deployment accepts (lgk=4 forces that
     regime at fixture scale — the tolerance property test's lever)."""
     agg = f"hll_sketch_agg(node, {lgk})" if lgk else "hll_sketch_agg(node)"
-    sym = (
+    sym = freeze(
         edges.select(F.col(u_col).alias("a"), F.col(v_col).alias("b"))
         .unionAll(edges.select(F.col(v_col).alias("a"), F.col(u_col).alias("b")))
-        .localCheckpoint(eager=True)
     )
     nodes = sym.select(F.col("a").alias("node")).distinct()
-    sk = (
+    sk = freeze(
         nodes.groupBy("node")
         .agg(F.expr(agg).alias("sk"))
-        .localCheckpoint(eager=True)
     )
 
     def est_frame(t: int, frame: DataFrame) -> DataFrame:
@@ -1125,11 +1107,10 @@ def hyperanf_rounds(
         contrib = sym.join(sk, sym["a"] == sk["node"]).select(
             F.col("b").alias("node"), "sk"
         )
-        sk = (
+        sk = freeze(
             sk.unionByName(contrib)
             .groupBy("node")
             .agg(F.expr("hll_union_agg(sk)").alias("sk"))
-            .localCheckpoint(eager=True)
         )
         out = out.unionByName(est_frame(t, sk))
     return out
@@ -1163,16 +1144,14 @@ def hyperball_harmonic(
     integer ball estimates, engine-portable and hash-exact in the
     coupon regime; the caller divides by 6 for the centrality value."""
     agg = f"hll_sketch_agg(node, {lgk})" if lgk else "hll_sketch_agg(node)"
-    sym = (
+    sym = freeze(
         edges.select(F.col(u_col).alias("a"), F.col(v_col).alias("b"))
         .unionAll(edges.select(F.col(v_col).alias("a"), F.col(u_col).alias("b")))
-        .localCheckpoint(eager=True)
     )
     nodes = sym.select(F.col("a").alias("node")).distinct()
-    sk = (
+    sk = freeze(
         nodes.groupBy("node")
         .agg(F.expr(agg).alias("sk"))
-        .localCheckpoint(eager=True)
     )
     balls = sk.select(
         "node", F.expr("hll_sketch_estimate(sk)").alias("e0")
@@ -1181,11 +1160,10 @@ def hyperball_harmonic(
         contrib = sym.join(sk, sym["a"] == sk["node"]).select(
             F.col("b").alias("node"), "sk"
         )
-        sk = (
+        sk = freeze(
             sk.unionByName(contrib)
             .groupBy("node")
             .agg(F.expr("hll_union_agg(sk)").alias("sk"))
-            .localCheckpoint(eager=True)
         )
         balls = balls.join(
             sk.select("node", F.expr("hll_sketch_estimate(sk)").alias(f"e{t}")),

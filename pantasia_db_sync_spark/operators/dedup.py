@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import HASH_PRIME, minhash_params, portable_hash_mod, tokens_col
+from .ckpt import freeze
 
 SIMHASH_BITS = 32
 
@@ -335,7 +336,7 @@ def prefix_filter_jaccard_pairs(
 
     CONTRACT: ``id_col`` unique per row (see ``shingle_arrays``)."""
     arred = shingle_arrays(_spread(docs, id_col), id_col, text_col, n)
-    arred = arred.localCheckpoint(eager=False)  # 3 consumers: explode + 2 verifies
+    arred = freeze(arred, eager=False)  # 3 consumers: explode + 2 verifies
     exploded = arred.select(
         F.col(id_col),
         F.explode("__sh").alias("shingle"),
@@ -563,7 +564,7 @@ def levenshtein_pairs_fastss(
         "__id", F.explode(F.transform(variants, lambda v: F.xxhash64(v))).alias("__v")
     )
     if max_dist > 1:
-        idx = idx.localCheckpoint(eager=True)
+        idx = freeze(idx)
     a = idx.select(F.col("__id").alias("id_a"), "__v")
     b = idx.select(F.col("__id").alias("id_b"), "__v")
     # pair-distinct and the first verify join SHARE one exchange: the
@@ -684,7 +685,7 @@ def levenshtein_pairs_prefix_core(
     if max_dist > 1:
         # materialize once — Catalyst would re-inline the O(C²)
         # neighborhood projection into both self-join sides otherwise
-        idx = idx.localCheckpoint(eager=True)
+        idx = freeze(idx)
     a = idx.select(
         F.col("__id").alias("id_a"), F.col("__s").alias("__sa"), "__v"
     )
@@ -841,8 +842,8 @@ def minhash_lsh_pairs(
     # the chain from the optimizer. Values are identical: explode of
     # array_remove(array_distinct(...), '') is exactly shingle_frame's
     # distinct non-empty shingle multiset.
-    arr = shingle_arrays(_spread(docs, id_col), id_col, text_col, n).localCheckpoint(
-        eager=False
+    arr = freeze(
+        shingle_arrays(_spread(docs, id_col), id_col, text_col, n), eager=False
     )
     sh = arr.select(F.col(id_col), F.explode("__sh").alias("shingle"))
     sig = minhash_signatures(sh, id_col, num_hashes)
@@ -921,12 +922,12 @@ def incremental_minhash_dedup(
     # one shingle-chain evaluation per side (see minhash_lsh_pairs):
     # the exploded signature index derives from the frozen arrays frame
     # the verify step reads, instead of re-running the chain
-    arr_new = shingle_arrays(_spread(new_docs, id_col), id_col, text_col, n).localCheckpoint(
-        eager=False
+    arr_new = freeze(
+        shingle_arrays(_spread(new_docs, id_col), id_col, text_col, n), eager=False
     )
-    arr_old = shingle_arrays(
-        _spread(corpus_docs, id_col), id_col, text_col, n
-    ).localCheckpoint(eager=False)
+    arr_old = freeze(
+        shingle_arrays(_spread(corpus_docs, id_col), id_col, text_col, n), eager=False
+    )
     sh_new = arr_new.select(F.col(id_col), F.explode("__sh").alias("shingle"))
     sh_old = arr_old.select(F.col(id_col), F.explode("__sh").alias("shingle"))
     band_structs = minhash_band_structs(num_hashes, bands)
@@ -1219,8 +1220,8 @@ def stream_near_dedup_filter(
     # stream-static join is a batch frame) and derive the explode from
     # the materialized column. Explode of array_remove(array_distinct)
     # is exactly shingle_frame's non-empty distinct shingle multiset.
-    arr_c = shingle_arrays(_spread(corpus, id_col), id_col, text_col, n).localCheckpoint(
-        eager=False
+    arr_c = freeze(
+        shingle_arrays(_spread(corpus, id_col), id_col, text_col, n), eager=False
     )
     sig_c = minhash_signatures(
         arr_c.select(F.col(id_col), F.explode("__sh").alias("shingle")),

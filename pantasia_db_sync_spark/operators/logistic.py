@@ -35,6 +35,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .ckpt import freeze
+
 _ENTRIES = [
     ("a00", 0, 0), ("a01", 0, 1), ("a02", 0, 2),
     ("a11", 1, 1), ("a12", 1, 2), ("a22", 2, 2),
@@ -90,7 +92,7 @@ def logistic_irls_fit(
     One combinable aggregation job per iteration (a 10-value collect —
     the bounded driver probe the BPE/k-means trainers also use); the
     input frame is frozen once so the K passes share the scan."""
-    feats = feats.localCheckpoint(eager=False)
+    feats = freeze(feats, eager=False)
     xs = [F.col("x0"), F.col("x1"), F.col("x2")]
     b = [0.0, 0.0, 0.0]
     n = 0

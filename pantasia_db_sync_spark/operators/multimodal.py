@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .ckpt import freeze
+
 DECODE_SCHEMA = "doc_id bigint, byte_len int, width int, height int, n_frames int"
 
 
@@ -1206,9 +1208,9 @@ def image_phash_pairs(
     # from both sides, and an unfrozen plan re-runs the full BMP decode
     # + perceptual-hash kernel per branch (the cosine_near_dup_pairs
     # signature-freeze rationale, review-confirmed here too).
-    h = image_dhash_features(df, id_col, binary_col).select(
+    h = freeze(image_dhash_features(df, id_col, binary_col).select(
         "doc_id", "dhash_hi", "dhash_lo"
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     mask = F.lit(0xFFFF)
     bands = h.select(
         "doc_id", "dhash_hi", "dhash_lo",

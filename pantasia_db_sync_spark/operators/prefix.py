@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .ckpt import freeze
+
 __all__ = ["with_prefix_sums"]
 
 
@@ -59,7 +61,7 @@ def with_prefix_sums(
     )
     # freeze: the per-partition totals below and the window read the
     # SAME sampled range partitioning (see module docstring)
-    rg = rg.localCheckpoint(eager=False)
+    rg = freeze(rg, eager=False)
 
     totals = (
         rg.groupBy("__pid")

@@ -27,6 +27,7 @@ from pyspark.sql import Window
 from pyspark.sql.functions import pandas_udf
 
 from ..functions.rounding import fround
+from .ckpt import freeze
 
 
 def as_double_vec(col: Column | str) -> Column:
@@ -561,10 +562,10 @@ def cosine_near_dup_pairs(
     # unfrozen plan runs the Arrow signature kernel 3-4x (measured ~2.5s
     # of pure re-run overhead at 2k vectors). At scale the frame is
     # 16 bytes/row — materializing signatures once is the standard LSH
-    # pipeline shape; blocks are ContextCleaner-managed.
-    sig = base.withColumn("sig", lsh_signature(F.col("v"), weights)).select(
+    # pipeline shape; the blocks belong to the caller's ckpt scope.
+    sig = freeze(base.withColumn("sig", lsh_signature(F.col("v"), weights)).select(
         "id", "sig"
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     bands_arr = F.array(
         *[
             F.struct(
@@ -1220,7 +1221,7 @@ def ivfadc_topk(
     # would otherwise re-run the coarse assignment + residual fold AND
     # re-analyze its literal-heavy expression tree per consumer plan —
     # measured 9.9 → ~4 s at sf0.1 where the wall is analysis/codegen
-    resdf = resdf.localCheckpoint(eager=False)
+    resdf = freeze(resdf, eager=False)
     books = pq_fit(resdf, "__id", "res", m=m, k=k,
                    iters=pq_iters, round_digits=round_digits)
     s = len(books[0][0][1])
@@ -1358,7 +1359,7 @@ def knn_graph_mutual(
     # from both sides, and an unfrozen plan re-executes the dominant
     # scoring pass per branch (review finding; the signature-freeze
     # rationale from cosine_near_dup_pairs).
-    topk = topk.localCheckpoint(eager=False)
+    topk = freeze(topk, eager=False)
     fwd = topk.select(
         F.col("q_id").alias("a"), F.col("cand_id").alias("b"), "cos"
     )

@@ -36,7 +36,7 @@ import operator
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from .ckpt import checkpoint_rdd
+from .ckpt import freeze
 
 #: first-order-column dtypes with an order-preserving numeric projection,
 #: enabling single-job approx_percentile boundaries in strategy="sample"
@@ -67,7 +67,6 @@ def with_dense_ids(
     start: int = 1,
     num_partitions: int | None = None,
     strategy: str = "checkpoint",
-    release: list | None = None,
     first_col_range: tuple | None = None,
     rowgroup_stats: list | None = None,
     totals: list | None = None,
@@ -83,13 +82,12 @@ def with_dense_ids(
     Strategies (pick by what the *input* costs to recompute):
 
     - ``"checkpoint"`` (default, safe everywhere): bucket, rank within
-      bucket, eagerly ``localCheckpoint`` ONCE; the per-bucket counts
-      ride that job. The blocks are ContextCleaner-managed (no
-      global-CacheManager entry to leak) and double as a cache for
-      downstream consumers: the result is a projection over them.
-      Cost: one full write of the frame to block storage. With a
-      ``release`` list, the checkpointed RDD's JVM handle is appended
-      to it so the caller can free the blocks once it is done.
+      bucket, ``ckpt.freeze`` ONCE; the per-bucket counts ride that
+      job. The blocks double as a cache for downstream consumers: the
+      result is a projection over them, so it is readable only while
+      the freeze's scope is open (``operators/ckpt.py``; outside any
+      scope the ContextCleaner frees them). Cost: one full write of the
+      frame to block storage.
     - ``"sample"``: never materializes anything. Order-aligned buckets
       are derived from the row's own ``order_cols`` values against
       boundary keys collected once (one tiny column-pruned job), so
@@ -128,8 +126,6 @@ def with_dense_ids(
     period index over a time order). Each bucket is subdivided by it
     (still order-aligned), so the freeze's counts also give the rows per
     ``col`` value: ``totals`` receives those k counts instead of one.
-
-    Every handle appended to ``release`` has ``unpersist(blocking)``.
     """
     if num_partitions is None:
         num_partitions = df.sparkSession.sparkContext.defaultParallelism
@@ -147,7 +143,6 @@ def with_dense_ids(
         _bucketed(df, order_cols, num_partitions, first_col_range, split),
         [],
         order_cols,
-        release,
     )
     per_bucket = dict(counts)
     if totals is not None:
@@ -205,7 +200,6 @@ def _freeze_ranked(
     df: DataFrame,
     group_cols: list[str],
     order_cols: list[str],
-    release: list | None,
 ) -> tuple[DataFrame, list[tuple]]:
     """Rank rows within (``__pid``, *group_cols) as ``__rn``, freeze
     ONCE, and return the frozen frame with its per-(bucket, *group)
@@ -234,9 +228,7 @@ def _freeze_ranked(
         )
         .drop("__cnt")
     )
-    numbered = numbered.localCheckpoint(eager=True)
-    if release is not None:
-        release.append(checkpoint_rdd(numbered))
+    numbered = freeze(numbered)
     return numbered, [tuple(r) for r in obs.get["counts"]]
 
 
@@ -318,7 +310,6 @@ def with_dense_ids_grouped(
     first_col_range: tuple | None = None,
     totals: dict | None = None,
     split: tuple[str, int] | None = None,
-    release: list | None = None,
 ) -> DataFrame:
     """SEVERAL independent dense-id sequences from ONE bucketing and
     ONE freeze: group g's rows get ``starts[g], starts[g]+1, ...`` in
@@ -338,15 +329,13 @@ def with_dense_ids_grouped(
     folded in) picked by group and indexed by bucket. ``group_col``
     values must all be keys of ``starts``; ``totals``, when given, is
     filled with the row count per group (with ``split``, the list of
-    counts per split value). ``split`` and ``release`` work as in
-    ``with_dense_ids``."""
+    counts per split value). ``split`` works as in ``with_dense_ids``."""
     if num_partitions is None:
         num_partitions = df.sparkSession.sparkContext.defaultParallelism
     numbered, counts = _freeze_ranked(
         _bucketed(df, order_cols, num_partitions, first_col_range, split),
         [group_col],
         order_cols,
-        release,
     )
     per = {g: {} for g in starts}
     for b, g, n in counts:

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from ..durable import fsync_path, read_json, write_atomic
+from ..operators.ckpt import freeze, scope
 
 MANIFEST = "_MANIFEST.json"  # hidden from Spark's file listing (leading _)
 
@@ -477,6 +478,7 @@ class TableStore:
         cons.pop(name, None)
         write_atomic(self._constraints_path(table), cons)
 
+    @scope()  # owns the cluster_by freeze, read only by the write below
     def append(
         self,
         table: str,
@@ -516,7 +518,7 @@ class TableStore:
             # runs the caller's plan once (so a caller's `.observe()`
             # metrics also fire once); the sampler and the probe then
             # read frozen blocks.
-            df = df.localCheckpoint(eager=True)
+            df = freeze(df)
             if isinstance(cluster_by, (list, tuple)):
                 from ..operators.zorder import zorder_frame
 
@@ -895,7 +897,7 @@ class TableStore:
         another inside one commit. Returns the frozen frame so callers
         needing a row count can scan the cached partitions instead of
         re-evaluating the source."""
-        df = df.localCheckpoint(eager=False)
+        df = freeze(df, eager=False)
         keys = df.select(*key_cols).distinct()
         self.delete_facts(table, keys, commit_id)
         try:
@@ -910,6 +912,7 @@ class TableStore:
             raise
         return df
 
+    @scope()  # owns every freeze below: all are read by the staging writes
     def merge_into(
         self,
         spark: SparkSession,
@@ -1003,7 +1006,7 @@ class TableStore:
         # existing key would classify as unmatched and append WITHOUT a
         # tombstone: two visible rows for one key. One materialization
         # feeds bounds, classification, and staging alike.
-        source = source.localCheckpoint(eager=False)
+        source = freeze(source, eager=False)
         cur = self.read_facts(spark, table)
         if cur is None:
             matched = source.where(F.lit(False))
@@ -1058,8 +1061,8 @@ class TableStore:
         # (sample / rand / limit-after-shuffle) could classify a key as
         # matched for the tombstone write but not for the append write
         # inside one commit, tombstoning it without its replacement.
-        matched = matched.localCheckpoint(eager=False)
-        unmatched = unmatched.localCheckpoint(eager=False)
+        matched = freeze(matched, eager=False)
+        unmatched = freeze(unmatched, eager=False)
         n_matched = matched.count()
         n_unmatched = unmatched.count()
 
@@ -1169,20 +1172,16 @@ class TableStore:
     def _delete_frame(
         self, spark: SparkSession, table: str, watermark: int
     ) -> DataFrame | None:
-        """(key cols..., __del_max) — the highest committed tombstone
-        ≤ ``watermark`` per key. None when the table has no committed
-        deletes (the zero-cost common case: reads skip the join)."""
+        """(key cols..., __del_max) — the highest tombstone ≤
+        ``watermark`` per key: the same watermark the rows are read at,
+        which ``read_at`` does not clamp to a rolled-back pointer. None
+        when no tombstone is visible there (the zero-cost common case:
+        reads skip the join)."""
         from pyspark.sql import functions as F
 
-        ptr = self.current_version(table)
-        if ptr is None:
-            return None
-        # clamped to the live pointer, unlike the rows (_facts_frame)
         parts = [
             spark.read.parquet(d).withColumn("__del_at", F.lit(cid))
-            for _, cid, d in self._commit_dirs(
-                table, "deletes", min(watermark, ptr)
-            )
+            for _, cid, d in self._commit_dirs(table, "deletes", watermark)
         ]
         if not parts:
             return None

@@ -41,7 +41,7 @@ from pyspark.sql.types import StringType
 
 from ..functions.cardano import staking_address_udf
 from ..functions.hexstr import hex_to_string, lower_hex
-from ..operators.ckpt import checkpoint_rdd
+from ..operators.ckpt import Scope, freeze
 from ..operators.surrogate import with_dense_ids, with_dense_ids_grouped
 from .fixtures import GENESIS
 from .store import MANIFEST, TableStore
@@ -106,12 +106,12 @@ def _attach_ids(
 class _Batch:
     """Consecutive periods extracted and numbered once: the frames each
     period's commit slices by ``period``, the per-period stats, and the
-    JVM handles of the checkpoints the batch owns."""
+    scope that owns the checkpoints the frames read."""
 
     periods: list[tuple[datetime, datetime]]
     frames: dict[str, DataFrame] = field(default_factory=dict)
     stats: list[dict[str, int]] = field(default_factory=list)
-    frozen: list = field(default_factory=list)
+    scope: Scope = field(default_factory=Scope)
     committed: int = 0
 
 
@@ -400,7 +400,8 @@ class SyncEngine:
                 ahead = self._pending
                 i = ahead.index((lo, hi)) if (lo, hi) in ahead else len(ahead)
                 b = self._batch = _Batch(ahead[i : i + CATCHUP_PERIODS] or [(lo, hi)])
-                self._build_batch(b)
+                with b.scope.active():
+                    self._build_batch(b)
             stats = self._commit_period(b, commit_id)
         except BaseException:
             self._release_batch()
@@ -412,8 +413,7 @@ class SyncEngine:
     def _release_batch(self) -> None:
         """Free the open batch's checkpoint blocks, if a batch is open."""
         if self._batch is not None:
-            for h in self._batch.frozen:
-                h.unpersist(False)
+            self._batch.scope.close()
             self._batch = None
 
     def _build_batch(self, b: _Batch) -> None:
@@ -459,7 +459,7 @@ class SyncEngine:
         n: dict[str, list[int]] = {t: [] for t in ("records", *DIM_TABLES[:3])}
         records = with_dense_ids(
             records, SEQ_ORDER, id_col="seq", first_col_range=(lo, hi),
-            totals=n["records"], split=split, release=b.frozen,
+            totals=n["records"], split=split,
         )
         seq_range = (1, sum(n["records"]))
 
@@ -496,7 +496,6 @@ class SyncEngine:
         new_wallets = with_dense_ids(
             wallet_firsts, ["first_seq"], id_col="id", start=seeds["wallet"],
             first_col_range=seq_range, totals=n["wallet"], split=split,
-            release=b.frozen,
         ).select(
             "id",
             F.col("wallet_key").alias("address"),
@@ -518,7 +517,6 @@ class SyncEngine:
         new_collections = with_dense_ids(
             coll_firsts, ["first_seq"], id_col="id", start=seeds["collection"],
             first_col_range=seq_range, totals=n["collection"], split=split,
-            release=b.frozen,
         ).select(
             "id",
             "policy_id",
@@ -570,7 +568,6 @@ class SyncEngine:
         new_assets = with_dense_ids(
             new_asset_firsts, ["seq"], id_col="id", start=seeds["asset"],
             first_col_range=seq_range, totals=n["asset"], split=split,
-            release=b.frozen,
         ).select(
             "id",
             "collection_id",
@@ -616,7 +613,6 @@ class SyncEngine:
             first_col_range=seq_range,
             totals=n_facts,
             split=split,
-            release=b.frozen,
         )
 
         # ---- latest-state (D3): current wallet + asset_ext ----
@@ -626,16 +622,14 @@ class SyncEngine:
         # seq; rows of the other kind order by NULL, which max_by skips)
         tx_seq = F.when(~F.col("is_mint_tx"), F.col("seq"))
         mint_seq = F.when(F.col("is_mint_tx") & (F.col("quantity") > 0), F.col("seq"))
-        latest = (
+        latest = freeze(
             facts.groupBy("asset_id", "period")
             .agg(
                 F.max_by("row_wallet_id", tx_seq).alias("last_tx_wallet"),
                 F.max_by("id", tx_seq).alias("last_tx_id"),
                 F.max_by("id", mint_seq).alias("last_mint_id"),
             )
-            .localCheckpoint(eager=True)
         )
-        b.frozen.append(checkpoint_rdd(latest))
 
         b.stats = [
             {

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import tokens_col
 from ..operators.asof import asof_join
+from ..operators.ckpt import LoopCheckpointer, freeze
 from ..sources.catalog import load_table
 from .registry import fround, local_result, register
 
@@ -195,16 +196,15 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (partial-aggregate-friendly: Catalyst
     expands to one Expand + single shuffle, not one job per set)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("gs_lineitem_v")
     return spark.sql(
         """
         SELECT l_returnflag, l_linestatus,
                count(*) AS n,
                floor(sum(l_quantity) * 100 + 0.5) / 100 AS sum_qty
-        FROM gs_lineitem_v
+        FROM {li}
         GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-        """
+        """,
+        li=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -866,18 +866,18 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction)."""
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
-    e = (
+    # freeze: four consumers (both und legs, the m scalar, the e_in
+    # endpoint joins) would otherwise each re-run the orders ⋈
+    # lineitem join + distinct — same discipline as `lab` below
+    e = freeze(
         o.where(F.col("o_orderkey") % 10 == 0)
         .join(li, o["o_orderkey"] == li["l_orderkey"])
         .select(
             F.col("o_custkey").alias("src"),
             (F.col("l_suppkey") + _PR_OFFSET).alias("dst"),
         )
-        .distinct()
-        # freeze: four consumers (both und legs, the m scalar, the e_in
-        # endpoint joins) would otherwise each re-run the orders ⋈
-        # lineitem join + distinct — same discipline as `lab` below
-        .localCheckpoint(eager=False)
+        .distinct(),
+        eager=False,
     )
     und = e.union(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -886,9 +886,9 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # endpoint joins of e_in and the degree sum) would otherwise each
     # re-run the 3-round LPA join lineage — the bpe.py / prefix.py
     # freeze-before-multiple-consumers discipline
-    lab = graph_label_propagation(spark, sf_dir).select(
+    lab = freeze(graph_label_propagation(spark, sf_dir).select(
         F.col("node"), F.col("label")
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     m = e.agg(F.count(F.lit(1)).cast("bigint").alias("m_edges"))
     deg = und.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("d")
@@ -941,17 +941,17 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sql_multi_table_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SQL ENTRY POINT exercised end to end: this query is
-    authored as a `spark.sql(...)` string over registered temp views —
+    authored as a `spark.sql(...)` string over its input frames —
     not the DataFrame API — because the reference's entire surface is
     SQL (app/db/postgres.py embeds every query as SQL text) and a user
-    switching engines will bring SQL, not DataFrames. Same Catalyst
-    plan either way (views are lazy DataFrames; pushdown, broadcast,
+    switching engines will bring SQL, not DataFrames. The frames are
+    passed as ``spark.sql`` kwargs, not session-global temp views, so
+    concurrent builds of this query cannot race on a view name. Same
+    Catalyst plan either way (the frames are lazy; pushdown, broadcast,
     and AQE all apply), so this also pins that the repo's SQL dialect
     stays ANSI enough to share text shape with the DuckDB oracle.
     Per-nation customer/order rollup: two equi-joins (dims broadcast)
     + one combinable groupBy."""
-    for t in ("nation", "customer", "orders"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"__sql_{t}")
     return spark.sql(
         """
         SELECT n.n_name,
@@ -959,11 +959,12 @@ def sql_multi_table_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(count(o.o_orderkey) AS BIGINT) AS n_orders,
                CAST(sum(CASE WHEN o.o_orderstatus = 'F' THEN 1 ELSE 0 END)
                     AS BIGINT) AS n_finished
-        FROM __sql_nation n
-        JOIN __sql_customer c ON c.c_nationkey = n.n_nationkey
-        LEFT JOIN __sql_orders o ON o.o_custkey = c.c_custkey
+        FROM {nation} n
+        JOIN {customer} c ON c.c_nationkey = n.n_nationkey
+        LEFT JOIN {orders} o ON o.o_custkey = c.c_custkey
         GROUP BY n.n_name
-        """
+        """,
+        **{t: load_table(spark, sf_dir, t) for t in ("nation", "customer", "orders")},
     )
 
 
@@ -3662,7 +3663,7 @@ def tpch_q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFra
         F.broadcast(p.select("p_partkey")),
         F.col("l_partkey") == F.col("p_partkey"),
     ).select("l_partkey", "l_quantity", "l_extendedprice")
-    li_f = li_f.localCheckpoint(eager=False)  # consumed by both branches
+    li_f = freeze(li_f, eager=False)  # consumed by both branches
     thr = li_f.groupBy(F.col("l_partkey").alias("t_partkey")).agg(
         (F.avg("l_quantity") * 0.2).alias("qty_threshold")
     )
@@ -6708,18 +6709,17 @@ def graph_deterministic_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = li.select(F.col("l_orderkey").alias("k"), F.col("l_suppkey").alias("u"))
     b = li.select(F.col("l_orderkey").alias("k"), F.col("l_suppkey").alias("v"))
     e = a.join(b, "k").where(F.col("u") < F.col("v")).select("u", "v").distinct()
-    sym = e.select(F.col("u").alias("a"), F.col("v").alias("b")).unionAll(
+    sym = freeze(e.select(F.col("u").alias("a"), F.col("v").alias("b")).unionAll(
         e.select(F.col("v").alias("a"), F.col("u").alias("b"))
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     from ..functions.text import portable_hash60
 
-    cur = (
+    cur = freeze(
         sym.select(F.col("a").alias("node"))
         .distinct()
         .orderBy("node")
         .limit(5)
         .select(F.col("node").alias("s"), "node")
-        .localCheckpoint(eager=True)
     )
     legs = [cur.select("s", F.lit(0).cast("int").alias("step"), "node")]
     for t in range(1, 5):
@@ -6736,7 +6736,7 @@ def graph_deterministic_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(":"),
             F.lpad(F.col("b").cast("string"), 10, "0"),
         )
-        cur = (
+        cur = freeze(
             cur.join(sym, cur["node"] == sym["a"])
             .select("s", key.alias("k"))
             .groupBy("s")
@@ -6744,7 +6744,6 @@ def graph_deterministic_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(
                 "s", F.substring("k", 22, 10).cast("bigint").alias("node")
             )
-            .localCheckpoint(eager=True)
         )
         legs.append(cur.select("s", F.lit(t).cast("int").alias("step"), "node"))
     out = legs[0]
@@ -7174,16 +7173,16 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = li.select(F.col("l_orderkey").alias("k"), F.col("l_suppkey").alias("u"))
     b = li.select(F.col("l_orderkey").alias("k"), F.col("l_suppkey").alias("v"))
     e = a.join(b, "k").where(F.col("u") < F.col("v")).select("u", "v").distinct()
-    e = e.localCheckpoint(eager=False)  # freeze: feeds deg + wedge legs
-    deg = (
+    e = freeze(e, eager=False)  # freeze: feeds deg + wedge legs
+    # freeze: three consumers (the du/dv orientation joins inside
+    # _oriented_triangles and the final degree join) — without this
+    # the union+groupBy over the edge list is planned three times
+    deg = freeze(
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))
         .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-        # freeze: three consumers (the du/dv orientation joins inside
-        # _oriented_triangles and the final degree join) — without this
-        # the union+groupBy over the edge list is planned three times
-        .localCheckpoint(eager=False)
+        .agg(F.count(F.lit(1)).cast("bigint").alias("d")),
+        eager=False,
     )
     pt = _per_node_triangles(e, deg=deg)
     j = deg.join(pt, "node", "left").select(
@@ -8268,13 +8267,11 @@ def graph_hyperanf_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact audit: all-pairs frontier growth (seed = every node), the
     # multi_bfs composite-key loop with a DataFrame seed frame — no
     # driver-side node collect
-    sym = (
+    sym = freeze(
         e.select(F.col("u").alias("a"), F.col("v").alias("b"))
         .unionAll(e.select(F.col("v").alias("a"), F.col("u").alias("b")))
-        .localCheckpoint(eager=True)
     )
     nodes = sym.select(F.col("a").alias("node")).distinct()
-    from ..operators.ckpt import LoopCheckpointer
 
     ck = LoopCheckpointer()
     dist = ck.step(
@@ -8375,13 +8372,11 @@ def graph_hyperball_harmonic(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = a.join(b, "k").where(F.col("u") < F.col("v")).select("u", "v").distinct()
     rounds = 3
     est = hyperball_harmonic(e, rounds=rounds)
-    sym = (
+    sym = freeze(
         e.select(F.col("u").alias("a"), F.col("v").alias("b"))
         .unionAll(e.select(F.col("v").alias("a"), F.col("u").alias("b")))
-        .localCheckpoint(eager=True)
     )
     nodes = sym.select(F.col("a").alias("node")).distinct()
-    from ..operators.ckpt import LoopCheckpointer
 
     ck = LoopCheckpointer()
     dist = ck.step(
@@ -8604,15 +8599,15 @@ def graph_hits_micro(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop with a normalization cross."""
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
-    e = (
+    e = freeze(
         o.where(F.col("o_orderkey") % 10 == 0)
         .join(li, o["o_orderkey"] == li["l_orderkey"])
         .select(
             F.col("o_custkey").alias("c"),
             (F.col("l_suppkey") + _PR_OFFSET).alias("s"),
         )
-        .distinct()
-        .localCheckpoint(eager=False)  # freeze: 2 joins per round
+        .distinct(),  # freeze: 2 joins per round
+        eager=False,
     )
     micro = 1_000_000
     a = e.select(F.col("s").alias("node")).distinct().select(

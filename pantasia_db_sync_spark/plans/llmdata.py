@@ -21,6 +21,7 @@ from ..functions.text import (
     portable_hash_mod,
     tokens_col,
 )
+from ..operators.ckpt import freeze
 from ..operators.dedup import (
     containment_pairs,
     exact_dedup,
@@ -3357,7 +3358,7 @@ def ann_matryoshka_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rnk") <= 5)
         .select("dim", "q_id", "cand_id")
     )
-    topk = topk.localCheckpoint(eager=False)  # truth + 3 legs share it
+    topk = freeze(topk, eager=False)  # truth + 3 legs share it
     truth = topk.where(F.col("dim") == 64).select(
         F.col("q_id").alias("t_q"), F.col("cand_id").alias("t_c")
     )

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.ckpt import freeze
 from ..sources.catalog import load_table
 from .registry import fround, register
 
@@ -178,7 +179,7 @@ def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_name", "cost_micro",
         )
     )
-    cand = cand.localCheckpoint(eager=False)  # consumed by both branches
+    cand = freeze(cand, eager=False)  # consumed by both branches
     best = cand.groupBy(F.col("p_partkey").alias("b_partkey")).agg(
         F.min("cost_micro").alias("best_micro")
     )
@@ -339,7 +340,7 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("val_micro")
         )
     )
-    ps = ps.localCheckpoint(eager=False)  # consumed by both branches
+    ps = freeze(ps, eager=False)  # consumed by both branches
     total = ps.agg(F.sum("val_micro").alias("total"))
     return (
         ps.join(F.broadcast(total))
@@ -440,7 +441,7 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             _micro(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4)
         ).alias("total_micro")
     )
-    rev = rev.localCheckpoint(eager=False)  # consumed by both branches
+    rev = freeze(rev, eager=False)  # consumed by both branches
     best = rev.agg(F.max("total_micro").alias("best_micro"))
     winners = rev.join(F.broadcast(best)).where(
         F.col("total_micro") == F.col("best_micro")

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import STOPWORDS, portable_hash60, tokens_col
+from ..operators.ckpt import freeze
 from ..operators.components import connected_components
 from ..operators.dedup import _spread, minhash_lsh_pairs
 from ..operators.similarity import as_double_vec, lit_double_vec
@@ -608,11 +609,11 @@ def text_ngram_novelty_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # RDD-probe _spread and reverted — with the stats-probe form it
     # wins 3.1s -> 1.7s (round 17; the other three re-tested reverted
     # sites stayed losses and remain unspread)
-    sh = (
+    sh = freeze(
         _spread(d.where(F.size(t) >= 3), "doc_id")
         .select("doc_id", F.explode(grams).alias("g"))
-        .distinct()
-        .localCheckpoint(eager=False)  # 2 consumers: firsts + join back
+        .distinct(),  # 2 consumers: firsts + join back
+        eager=False,
     )
     firstd = sh.groupBy("g").agg(F.min("doc_id").alias("first_doc"))
     novel = F.sum(
@@ -781,7 +782,7 @@ def corpus_decontaminate_spans_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # freeze-once: the benchmark side and the training side both read
     # this explode (see dedup_span_extend)
-    win_rows = win_rows.localCheckpoint(eager=False)
+    win_rows = freeze(win_rows, eager=False)
     bench_spans = win_rows.where(is_bench).select("span").distinct()
     hit = (
         win_rows.where(~is_bench)
@@ -1216,7 +1217,7 @@ def dedup_span_extend_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the semi-join back both consume it, and recomputing means a
     # second corpus scan + explode (measured 4.2 -> 2.8s at sf0.1 on
     # the scrub twin; block-write volume ~= one shuffle of the frame)
-    e = e.localCheckpoint(eager=False)
+    e = freeze(e, eager=False)
     dupspans = (
         e.groupBy("span")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -1398,7 +1399,7 @@ def dedup_span_scrub_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.posexplode(wins).alias("pos", "span")
     )
     # freeze-once: canonical groupBy + join back (see dedup_span_extend)
-    e = e.localCheckpoint(eager=False)
+    e = freeze(e, eager=False)
     firsts = (
         e.groupBy("span")
         .agg(
@@ -2535,7 +2536,7 @@ def corpus_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # freeze-once: dbc feeds THREE consumers (raw marginal, target
     # marginal, per-doc weights) — without it each would replay the
     # corpus explode + shuffle
-    dbc = dbc.localCheckpoint(eager=False)
+    dbc = freeze(dbc, eager=False)
     raw = dbc.groupBy("bucket").agg(F.sum("cnt").cast("bigint").alias("cr"))
     tgt = (
         dbc.where(F.pmod(F.col("doc_id"), 10) == 0)

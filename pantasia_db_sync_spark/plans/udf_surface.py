@@ -29,6 +29,7 @@ from pyspark.sql.functions import pandas_udf, udtf
 
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
+from ..operators.ckpt import freeze
 from ..sources.catalog import load_table
 from .registry import fround, register
 
@@ -134,10 +135,10 @@ def udtf_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     in a LATERAL join. Surface demo only — production tokenization is
     the JVM-side `explode(split(...))` (see llmdata text ops)."""
     spark.udtf.register("tokenize_udtf", _Tokenize)
-    load_table(spark, sf_dir, "part").createOrReplaceTempView("udtf_part_v")
     return spark.sql(
         "SELECT p.p_partkey, t.token "
-        "FROM udtf_part_v p, LATERAL tokenize_udtf(p.p_name) t"
+        "FROM {part} p, LATERAL tokenize_udtf(p.p_name) t",
+        part=load_table(spark, sf_dir, "part"),
     )
 
 
@@ -1210,7 +1211,7 @@ def stream_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "bucket")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     )
-    dbc = dbc.localCheckpoint(eager=False)
+    dbc = freeze(dbc, eager=False)
     raw = dbc.groupBy("bucket").agg(F.sum("cnt").cast("bigint").alias("cr"))
     tgt = (
         dbc.where(F.pmod(F.col("doc_id"), 10) == 0)

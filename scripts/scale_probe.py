@@ -141,6 +141,7 @@ def main() -> None:
     replicas = int(os.environ.get("SPARK_GRAFT_PROBE_REPLICAS", "5"))
     reps = int(os.environ.get("REPS", "2"))
 
+    from pantasia_db_sync_spark.operators.ckpt import scope
     from pantasia_db_sync_spark.plans import QUERIES
     from pantasia_db_sync_spark.session import get_spark
 
@@ -150,36 +151,23 @@ def main() -> None:
         spark, replicas, tables=("documents", "embeddings", "customer", "lineitem")
     )
 
-    baseline_ids: set = set()
-    it0 = spark.sparkContext._jsc.getPersistentRDDs().keySet().iterator()
-    while it0.hasNext():
-        baseline_ids.add(it0.next())
-
-    def cleanup() -> None:
-        import gc as _pygc
-
-        _pygc.collect()
-        it = spark.sparkContext._jsc.getPersistentRDDs().entrySet().iterator()
-        while it.hasNext():
-            e = it.next()
-            if e.getKey() not in baseline_ids:
-                e.getValue().unpersist(False)
-        spark.sparkContext._jvm.System.gc()
-
-    timings = {}
-    for name in PROBE_QUERIES:
-        spark.sparkContext.setJobDescription(f"scale-probe:{name}")
-        QUERIES[name](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()  # warm
-        runs = []
-        for _ in range(reps):
-            cleanup()
+    def run(name: str) -> float:
+        # the scope releases the query's blocks after the timer stopped
+        with scope():
             t0 = time.perf_counter()
             QUERIES[name](spark, sf_dir).write.format("noop").mode(
                 "overwrite"
             ).save()
-            runs.append(time.perf_counter() - t0)
+            return time.perf_counter() - t0
+
+    timings = {}
+    for name in PROBE_QUERIES:
+        spark.sparkContext.setJobDescription(f"scale-probe:{name}")
+        run(name)  # warm
+        runs = []
+        for _ in range(reps):
+            spark.sparkContext._jvm.System.gc()  # same heap state per run
+            runs.append(run(name))
         timings[name] = round(statistics.median(runs), 3)
         print(f"# {name}: {timings[name]:.2f}s (n={reps})", file=sys.stderr, flush=True)
     print(

@@ -4,8 +4,9 @@ Usage: python3 scripts/time_queries.py name [name ...]
 Env: SPARK_GRAFT_SF_DIR (default sf0.1), REPS (default 3).
 
 Same methodology as bench.py (noop sink, unrecorded warm-up, median of
-REPS, jvm GC between queries) but scoped to the named queries so an
-optimization loop can iterate in seconds instead of a full suite run.
+REPS, one ckpt scope per run, jvm GC between runs) but scoped to the
+named queries so an optimization loop can iterate in seconds instead of
+a full suite run.
 """
 
 from __future__ import annotations
@@ -23,6 +24,7 @@ def main() -> None:
     reps = int(os.environ.get("REPS", "3"))
     names = sys.argv[1:]
 
+    from pantasia_db_sync_spark.operators.ckpt import scope
     from pantasia_db_sync_spark.session import get_spark
     from pantasia_db_sync_spark.plans import QUERIES
 
@@ -31,34 +33,17 @@ def main() -> None:
 
     def materialize(name: str) -> float:
         spark.sparkContext.setJobDescription(name)
-        t0 = time.perf_counter()
-        QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
-    baseline_ids: set = set()
-    it0 = spark.sparkContext._jsc.getPersistentRDDs().keySet().iterator()
-    while it0.hasNext():
-        baseline_ids.add(it0.next())
-
-    def cleanup() -> None:
-        # same hygiene as bench.py jvm_gc(): drop the previous query's
-        # remaining localCheckpoint blocks (scoped to ids created after
-        # session start, round 17), then full GC
-        import gc as _pygc
-
-        _pygc.collect()
-        it = spark.sparkContext._jsc.getPersistentRDDs().entrySet().iterator()
-        while it.hasNext():
-            e = it.next()
-            if e.getKey() not in baseline_ids:
-                e.getValue().unpersist(False)
-        spark.sparkContext._jvm.System.gc()
+        # the scope releases the query's blocks after the timer stopped
+        with scope():
+            t0 = time.perf_counter()
+            QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+            return time.perf_counter() - t0
 
     for name in names:
         materialize(name)  # warm
         runs = []
         for _ in range(reps):
-            cleanup()
+            spark.sparkContext._jvm.System.gc()  # same heap state per run
             runs.append(materialize(name))
         runs.sort()
         print(

@@ -158,7 +158,9 @@ def test_dense_ids_split_counts_per_period(spark, rows, start, parts, ranged, cu
     leaves every id as the row_number() reference has it and reports
     the rows numbered per period, for both numberings — the contract
     that lets the sync number a batch of periods once and take each
-    period's stats from the freeze. The checkpoints go to ``release``."""
+    period's stats from the freeze. The two checkpoints belong to the
+    enclosing scope."""
+    from pantasia_db_sync_spark.operators.ckpt import scope
     from pantasia_db_sync_spark.operators.surrogate import (
         with_dense_ids_grouped,
     )
@@ -177,29 +179,27 @@ def test_dense_ids_split_counts_per_period(spark, rows, start, parts, ranged, cu
         id_col="id", num_partitions=parts, split=("p", k),
         first_col_range=(0, 50) if ranged else None,
     )
-    release: list = []
-    totals: list = []
-    got = with_dense_ids(df, ["k", "v"], start=start, totals=totals, release=release, **kw)
-    want = _id_rows(_row_number_ids(df, ["k", "v"], start), ["k", "v"])
-    assert _id_rows(got, ["k", "v"]) == want
-    assert totals == [sum(period(r[0]) == i for r in rows) for i in range(k)]
+    with scope() as s:
+        totals: list = []
+        got = with_dense_ids(df, ["k", "v"], start=start, totals=totals, **kw)
+        want = _id_rows(_row_number_ids(df, ["k", "v"], start), ["k", "v"])
+        assert _id_rows(got, ["k", "v"]) == want
+        assert totals == [sum(period(r[0]) == i for r in rows) for i in range(k)]
 
-    starts = {True: start, False: 1}
-    grouped: dict = {}
-    got_g = with_dense_ids_grouped(
-        df, ["k", "v"], "g", starts, totals=grouped, release=release, **kw
-    )
-    ref = _row_number_ids(df, ["k", "v"], starts, group_col="g")
-    assert sorted((r["g"], r["id"], r["k"], r["v"]) for r in got_g.collect()) == sorted(
-        (r["g"], r["id"], r["k"], r["v"]) for r in ref.collect()
-    )
-    assert grouped == {
-        g: [sum(period(r[0]) == i and r[2] == g for r in rows) for i in range(k)]
-        for g in (True, False)
-    }
-    assert len(release) == 2
-    for h in release:
-        h.unpersist(False)
+        starts = {True: start, False: 1}
+        grouped: dict = {}
+        got_g = with_dense_ids_grouped(
+            df, ["k", "v"], "g", starts, totals=grouped, **kw
+        )
+        ref = _row_number_ids(df, ["k", "v"], starts, group_col="g")
+        assert sorted((r["g"], r["id"], r["k"], r["v"]) for r in got_g.collect()) == sorted(
+            (r["g"], r["id"], r["k"], r["v"]) for r in ref.collect()
+        )
+        assert grouped == {
+            g: [sum(period(r[0]) == i and r[2] == g for r in rows) for i in range(k)]
+            for g in (True, False)
+        }
+        assert len(s) == 2
 
 
 @settings(**SETTINGS)

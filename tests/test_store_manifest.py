@@ -1624,6 +1624,29 @@ def test_rollback_facts_coexists_with_snapshots(spark, tmp_path):
     assert store.branch_info("_SNAPSHOT_before_rollback.json") is None
 
 
+def test_read_at_after_rollback_keeps_snapshot_tombstones(spark, tmp_path):
+    """``read_at`` replays a snapshot that sits above a rolled-back
+    pointer: its tombstones are read at the same watermark as its rows,
+    so a row deleted at or below the snapshot stays deleted. The live
+    read still sees the rolled-back state."""
+    store = TableStore(str(tmp_path / "store"))
+
+    def keys(df):
+        return sorted(r.k for r in df.collect())
+
+    store.append("t", spark.createDataFrame([(1,), (2,), (3,)], "k long"), commit_id=1)
+    store.commit_append("t", 1)
+    store.append("t", spark.createDataFrame([(4,)], "k long"), commit_id=2)
+    store.delete_facts("t", spark.createDataFrame([(3,)], "k long"), 2)
+    store.commit_append("t", 2)
+    store.snapshot("snap")
+    assert keys(store.read_at(spark, "t", "snap")) == [1, 2, 4]
+
+    store.rollback_facts("t", 1)
+    assert keys(store.read_at(spark, "t", "snap")) == [1, 2, 4]
+    assert keys(store.read_facts(spark, "t")) == [1, 2, 3]
+
+
 def test_check_constraints_gate_appends_with_rollback(spark, tmp_path):
     """Delta-style CHECK constraints (round 11): validation rides the
     staging write as Observation metrics (no extra pass), a violating
