@@ -21,8 +21,10 @@ warm-up pass, then REPS (default 3) recorded passes; the reported number
 is the MEDIAN and the per-query min/max spread rides in
 ``queries_spread`` so a sandbox-wide environmental shift (seen in round
 4: 18/18 queries "slower" with zero code changes) is distinguishable
-from a real regression. Each pass materializes through the noop sink
-(full plan execution, all columns, no disk).
+from a real regression. Every pass is ``plans.run_query`` (build plus
+noop-sink materialization in its own checkpoint scope) and the recorded
+passes are ``plans.timed_runs`` (a full JVM GC before each, untimed),
+the same timer ``scripts/time_queries.py`` and ``scale_probe.py`` use.
 
 Per-query calibration (round-14 change, VERDICT r13 item 1): the
 synthetic host-speed probe runs immediately BEFORE each headline query
@@ -189,31 +191,16 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
 
-    from pantasia_db_sync_spark.operators.ckpt import scope
     from pantasia_db_sync_spark.session import get_spark
-    from pantasia_db_sync_spark.plans import QUERIES
+    from pantasia_db_sync_spark.plans import materialize, run_query, timed_runs
 
     spark = get_spark(app_name="pantasia-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    def materialize(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
-
-    def timed(fn) -> float:
-        t0 = time.perf_counter()
-        fn()
-        return time.perf_counter() - t0
-
-    def timed_query(name: str, d: str) -> float:
-        # one scope per query: it releases the query's checkpoint
-        # blocks and broadcasts when it closes, after the timer stopped
-        with scope():
-            return timed(lambda: materialize(QUERIES[name](spark, d)))
-
     # Warm-up: one full unrecorded pass over the whole suite so JVM JIT,
     # codegen caches, parquet footers, and broadcast machinery are hot.
     for name in HEADLINE:
-        timed_query(name, sf_dir)
+        run_query(spark, name, sf_dir)
 
     # Calibration: a fixed synthetic workload (range -> hash-agg ->
     # noop, no repo code, no IO) measuring THIS RUN's host speed.
@@ -221,16 +208,18 @@ def main() -> None:
     # hours under external load (r5-commit code re-measured 2.8x its
     # recorded sync wall in a loaded window with zero code change) —
     # divide query walls by calibration_sec to compare across rounds.
-    def calibration_work() -> None:
+    def calibration() -> float:
+        t0 = time.perf_counter()
         materialize(
             spark.range(0, 50_000_000, 1, 32)
             .selectExpr("id % 9973 AS k", "id AS v")
             .groupBy("k")
             .sum("v")
         )
+        return time.perf_counter() - t0
 
-    calibration_work()  # warm
-    cal_runs = sorted(timed(calibration_work) for _ in range(3))
+    calibration()  # warm
+    cal_runs = sorted(calibration() for _ in range(3))
     calibration_sec = round(statistics.median(cal_runs), 3)
     try:
         loadavg_1m = round(os.getloadavg()[0], 2)
@@ -275,16 +264,9 @@ def main() -> None:
         # the query's measured reps share its host-load window and the
         # median is robust to one spike.
         qcal[name] = round(
-            statistics.median(timed(calibration_work) for _ in range(3)), 3
+            statistics.median(calibration() for _ in range(3)), 3
         )
-        # the full GC runs between REPS as well (round 17): each rep
-        # starts from the same heap state, outside the timed region
-        runs = []
-        for _i in range(REPS):
-            if _i:
-                jvm_gc()
-            runs.append(timed_query(name, sf_dir))
-        runs.sort()
+        runs = timed_runs(spark, name, sf_dir, REPS)
         timings[name] = round(statistics.median(runs), 3)
         spread[name] = [round(runs[0], 3), round(runs[-1], 3)]
         print(
@@ -377,12 +359,8 @@ def main() -> None:
             # a cold-page-cache / external-load spike as "10.97s" where
             # the warm steady state re-measured at 3.5s — same noise
             # class the sync-10x spread fix addresses
-            timed_query(name, dir10)  # warm
-            runs = []
-            for _ in range(3):
-                jvm_gc()
-                runs.append(timed_query(name, dir10))
-            runs.sort()
+            run_query(spark, name, dir10)  # warm
+            runs = timed_runs(spark, name, dir10, 3)
             dt = statistics.median(runs)
             dedup10[name] = round(dt, 3)
             ratio = dt / timings[name]

@@ -298,8 +298,8 @@ def kcore(
 
     ``rounds=None`` (the user-facing contract at scale) peels to the
     FIXPOINT: rounds run until one removes nothing, detected by the
-    edge count of the freshly checkpointed frame — a free scalar probe
-    off already-materialized partitions, so convergence costs one
+    edge count each checkpoint job observes (the initial freeze's
+    included) — no count job of its own, so convergence costs one
     no-op round, never a recount of unmaterialized plans. An integer
     ``rounds`` caps the peeling instead; that form is engine-portable
     (the oracle replays the same rounds as chained CTE stages) and is
@@ -313,30 +313,36 @@ def kcore(
     where dense near-dup communities live, rank-robust unlike raw
     degree."""
     # the symmetric edge list IS the evolving state here (peeled each
-    # round): track it so superseded rounds' blocks are freed; keep=2
-    # because the fixpoint probe counts the PREVIOUS round's frame
+    # round): track it so superseded rounds' blocks are freed
     ck = LoopCheckpointer()
-    sym = ck.step(
-        edges.select(F.col(u_col).alias("a"), F.col(v_col).alias("b")).unionAll(
-            edges.select(F.col(v_col).alias("a"), F.col(u_col).alias("b"))
-        )
-    )
+
+    def step(s: DataFrame, obs: Observation | None = None) -> DataFrame:
+        if obs is not None:
+            # the edge count rides the checkpoint job (the
+            # connected_components Observation move) — the fixed-point
+            # probe cost one extra count job per round
+            s = s.observe(obs, F.count(F.lit(1)).alias("n"))
+        return ck.step(s)
 
     def peel(s: DataFrame, obs: Observation | None = None) -> DataFrame:
         deg = s.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
         keep = deg.where(F.col("deg") >= k).select("a")
-        out = s.join(keep, "a", "left_semi").join(
-            keep.withColumnRenamed("a", "b"), "b", "left_semi"
+        return step(
+            s.join(keep, "a", "left_semi").join(
+                keep.withColumnRenamed("a", "b"), "b", "left_semi"
+            ),
+            obs,
         )
-        if obs is not None:
-            # surviving-edge count rides the checkpoint job (the
-            # connected_components Observation move) — the fixed-point
-            # probe cost one extra count job per round
-            out = out.observe(obs, F.count(F.lit(1)).alias("n"))
-        return ck.step(out)
 
+    obs = Observation() if rounds is None else None
+    sym = step(
+        edges.select(F.col(u_col).alias("a"), F.col(v_col).alias("b")).unionAll(
+            edges.select(F.col(v_col).alias("a"), F.col(u_col).alias("b"))
+        ),
+        obs,
+    )
     if rounds is None:
-        prev = sym.count()
+        prev = int(obs.get["n"] or 0)
         while True:
             obs = Observation()
             sym = peel(sym, obs)

@@ -417,7 +417,12 @@ def _spread(df: DataFrame, *key_cols: str) -> DataFrame:
     scan-level frames — why six round-16 sites reverted the spread).
     For a scan+project frame the estimate is the parquet file bytes, so
     the split arithmetic matches what the scan planner would do; the
-    decision only gates a performance rewrite, never results."""
+    decision only gates a performance rewrite, never results.
+
+    The estimate is the PRE-FILTER size: without CBO a Filter's size
+    estimate is its child's, so a selective filter above a large scan
+    reads as large and can miss a spread it would have earned. The
+    probe executes nothing, so it can never double-run the frame."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     max_split = _conf_bytes(

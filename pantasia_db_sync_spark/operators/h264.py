@@ -2431,15 +2431,6 @@ def decode_avc_sample(sample: bytes, cfg: dict) -> dict:
     return _decode_picture_group(slices, cfg)
 
 
-def _decode_one_nal(nal: bytes, cfg: dict) -> dict | None:
-    """Single-NAL convenience: parameter sets return None; a coded
-    slice NAL must be a complete (single-slice) picture."""
-    info = _classify_nal(nal, cfg)
-    if info is None:
-        return None
-    return _decode_picture_group([info], cfg)
-
-
 def decode_annexb(data: bytes) -> list[dict]:
     """Decode a raw Annex-B H.264 elementary stream; returns one
     frame dict per coded PICTURE (a picture is one or more slices —

@@ -87,10 +87,6 @@ def norm_col(a: Column) -> Column:
     return F.sqrt(dot_col(a, a))
 
 
-def cosine_col(a: Column, b: Column) -> Column:
-    return dot_col(a, b) / (norm_col(a) * norm_col(b))
-
-
 def brute_force_topk(
     vectors: DataFrame,
     queries: DataFrame,

@@ -1,10 +1,13 @@
 """Query library: every SURVEY.md §2 operator as a registered query.
 
 Importing this package populates the registry consumed by
-``__spark_entry__.queries()`` / ``oracle_sql()``.
+``__spark_entry__.queries()`` / ``oracle_sql()``, and exports the one
+way to time a query (``run_query``, ``timed_runs``) and to check it
+against its oracle (``parity_failure``).
 """
 
 from .registry import ORACLES, QUERIES  # noqa: F401
+from .registry import materialize, parity_failure, run_query, timed_runs  # noqa: F401
 
 # Import side effects register all queries.
 from . import relational  # noqa: E402,F401

@@ -13,15 +13,26 @@ Cross-engine parity rules encoded here once so every query obeys them:
 - cast DuckDB integer sums to BIGINT (DuckDB ``sum(int)`` → HUGEINT,
   Spark → LongType);
 - deterministic tie-breaks on every top-k / offset query.
+
+This module is also the one place that runs a query the two ways its
+users need: timed through the noop sink (``run_query``, ``timed_runs``)
+and checked against its oracle (``parity_failure``).
 """
 
 from __future__ import annotations
 
+import decimal
+import math
+import os
+import time
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.rounding import fround, sql_round  # noqa: F401  (re-export)
+from ..operators.ckpt import scope
+from ..sources.catalog import TABLES
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -84,3 +95,101 @@ def local_result(spark: SparkSession, rows: list, schema) -> DataFrame:
     keeps tasks meaningful at any plausible result size)."""
     slices = max(1, min(spark.sparkContext.defaultParallelism, len(rows) // 65536 + 1))
     return spark.createDataFrame(spark.sparkContext.parallelize(rows, slices), schema)
+
+
+def materialize(df: DataFrame) -> None:
+    """Execute ``df``'s whole plan through the noop sink: every column
+    of every row is computed, nothing is written."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def run_query(spark: SparkSession, name: str, sf_dir: str) -> float:
+    """Wall seconds to build query ``name`` on ``sf_dir`` and
+    materialize it. Its jobs carry ``name`` as their description. The
+    query runs in its own ``ckpt.scope()``, and the timer stops before
+    the scope closes, so releasing its blocks is not timed."""
+    spark.sparkContext.setJobDescription(name)
+    with scope():
+        t0 = time.perf_counter()
+        materialize(QUERIES[name](spark, sf_dir))
+        return time.perf_counter() - t0
+
+
+def timed_runs(spark: SparkSession, name: str, sf_dir: str, reps: int) -> list[float]:
+    """``reps`` walls of ``run_query``, sorted. A full JVM GC runs
+    before each, outside the timer, so every run starts from a
+    comparable heap (a long session's accumulated state otherwise
+    pushes GC into later runs). Callers wanting a warm-up call
+    ``run_query`` once first."""
+    walls = []
+    for _ in range(reps):
+        spark.sparkContext._jvm.System.gc()
+        walls.append(run_query(spark, name, sf_dir))
+    return sorted(walls)
+
+
+class ParityFailure(NamedTuple):
+    """Which parts of a query's result differ from its oracle's;
+    ``message`` names the query and the first difference."""
+
+    columns_match: bool
+    rows_match: bool
+    values_match: bool
+    message: str
+
+
+def _norm_cell(v):
+    # NaN never equals itself, -0.0 prints apart from 0.0, and DuckDB
+    # returns DECIMAL where Spark returns double
+    if isinstance(v, float):
+        return "NaN" if math.isnan(v) else v + 0.0
+    if isinstance(v, decimal.Decimal):
+        return float(v)
+    return v
+
+
+def _norm_rows(cols: list[str], rows) -> list[tuple]:
+    """Cells in column-name order, rows sorted: the order-insensitive
+    form both results are compared in."""
+    order = sorted(range(len(cols)), key=lambda i: cols[i])
+    return sorted((tuple(_norm_cell(r[i]) for i in order) for r in rows), key=repr)
+
+
+def parity_failure(spark: SparkSession, name: str, sf_dir: str) -> ParityFailure | None:
+    """Run query ``name`` and its DuckDB oracle over the parquet tables
+    in ``sf_dir``; None when the column names, the row count and the
+    order-insensitive values (compared by ``repr``, so an int never
+    equals a float) all match.
+
+    Each call opens its own DuckDB connection, so calls may run on
+    concurrent threads. Only the catalog tables present under
+    ``sf_dir`` get a view, so a directory may hold just the tables its
+    queries read."""
+    import duckdb  # registry users that never check parity do not load it
+
+    sdf = QUERIES[name](spark, sf_dir)
+    s_cols = list(sdf.columns)
+    s_rows = _norm_rows(s_cols, sdf.collect())
+    with duckdb.connect() as con:
+        for t in TABLES:
+            path = os.path.join(sf_dir, f"{t}.parquet")
+            if os.path.exists(path):
+                con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
+        res = con.execute(ORACLES[name])
+        d_cols = [d[0] for d in res.description]
+        d_rows = _norm_rows(d_cols, res.fetchall())
+
+    columns = sorted(s_cols) == sorted(d_cols)
+    rows = len(s_rows) == len(d_rows)
+    mismatches = [
+        (i, a, b) for i, (a, b) in enumerate(zip(s_rows, d_rows)) if repr(a) != repr(b)
+    ]
+    if columns and rows and not mismatches:
+        return None
+    if not columns:
+        message = f"{name}: column mismatch {sorted(s_cols)} vs {sorted(d_cols)}"
+    elif not rows:
+        message = f"{name}: row count {len(s_rows)} vs {len(d_rows)}"
+    else:
+        message = f"{name}: first mismatches {mismatches[:3]}"
+    return ParityFailure(columns, rows, rows and not mismatches, message)

@@ -38,27 +38,47 @@ from .registry import fround, register
 # active SparkContext that workers don't have.
 
 
-def _run_stream_to_frame(spark: SparkSession, writer, name: str, tmp_dir: str) -> DataFrame:
-    """Start a memory-sink streaming query, wait for availableNow
-    completion (asserted — a timeout must fail loudly, never return a
-    silently partial table), then DETACH the result: the sink rows are
-    re-wrapped as a local DataFrame so the uniquely-named sink view and
-    the temp source dir can be dropped immediately instead of leaking
-    one per invocation."""
+def _drain(spark: SparkSession, writer, work: str, finish=lambda: None, view=None):
+    """Run the streaming ``writer`` to completion and return
+    ``finish()``, called while ``work`` (the query's temp source and
+    state dir) still exists. A timeout fails loudly, never returning a
+    silently partial table. However the run ends (timeout, a batch
+    failure re-raised by ``awaitTermination``, a failing ``finish``),
+    the query is stopped, the memory sink's ``view`` dropped and
+    ``work`` removed."""
     import shutil
 
-    q = writer.queryName(name).start()
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError(f"streaming query {name} did not finish within 300s")
-    sink = spark.table(name)
-    # The memory sink already stores its rows ON the driver, so this
-    # collect adds no new driver-memory exposure — it just detaches the
-    # rows from the sink so the sink can be dropped.
-    out = spark.createDataFrame(sink.collect(), sink.schema)
-    spark.catalog.dropTempView(name)
-    shutil.rmtree(tmp_dir, ignore_errors=True)
-    return out
+    try:
+        q = writer.start()
+        try:
+            if not q.awaitTermination(300):
+                raise RuntimeError(
+                    f"streaming query {q.name or q.id} did not finish within 300s"
+                )
+        finally:
+            q.stop()
+        return finish()
+    finally:
+        if view is not None:
+            spark.catalog.dropTempView(view)
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def _run_stream_to_frame(spark: SparkSession, writer, name: str, tmp_dir: str) -> DataFrame:
+    """Run a memory-sink streaming query named ``name`` through
+    ``_drain``, then DETACH the result: the sink rows are re-wrapped as
+    a local DataFrame so the uniquely-named sink view and the temp
+    source dir can be dropped immediately instead of leaking one per
+    invocation."""
+
+    def detach() -> DataFrame:
+        sink = spark.table(name)
+        # The memory sink already stores its rows ON the driver, so this
+        # collect adds no new driver-memory exposure — it just detaches
+        # the rows from the sink so the sink can be dropped.
+        return spark.createDataFrame(sink.collect(), sink.schema)
+
+    return _drain(spark, writer.queryName(name), tmp_dir, detach, view=name)
 
 
 @pandas_udf(DoubleType())
@@ -902,16 +922,13 @@ def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()
         )
 
-    q = (
+    _drain(
+        spark,
         events_stream(spark, src_dir, max_files_per_trigger=1)
         .writeStream.foreachBatch(merge)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
+        work,
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("stream_hll_distinct did not finish within 300s")
-    shutil.rmtree(work, ignore_errors=True)
 
     from pyspark.sql.types import BinaryType
 
@@ -1015,35 +1032,35 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    q = (
+    def result() -> DataFrame:
+        latest = state.read(spark).select("key", "op", "value")
+        base = _lt(spark, sf_dir, "customer").select(
+            F.col("c_custkey").alias("key"), F.col("c_acctbal").alias("val")
+        )
+        merged = base.alias("b").join(
+            latest.alias("l"), F.col("b.key") == F.col("l.key"), "full_outer"
+        )
+        out = merged.where(F.col("l.op").isNull() | (F.col("l.op") != "D")).select(
+            F.coalesce(F.col("b.key"), F.col("l.key")).alias("key"),
+            fround(
+                F.when(F.col("l.key").isNull(), F.col("b.val")).otherwise(
+                    F.col("l.value")
+                ),
+                2,
+            ).alias("val"),
+            F.when(F.col("l.key").isNull(), "base").otherwise("cdc").alias("src"),
+        )
+        # detach from the temp dirs before cleanup
+        return spark.createDataFrame(out.collect(), out.schema)
+
+    return _drain(
+        spark,
         events_stream(spark, src_dir, max_files_per_trigger=1)
         .writeStream.foreachBatch(merge)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
+        work,
+        result,
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("stream_cdc_apply did not finish within 300s")
-
-    latest = state.read(spark).select("key", "op", "value")
-    base = _lt(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("key"), F.col("c_acctbal").alias("val")
-    )
-    merged = base.alias("b").join(
-        latest.alias("l"), F.col("b.key") == F.col("l.key"), "full_outer"
-    )
-    out = merged.where(F.col("l.op").isNull() | (F.col("l.op") != "D")).select(
-        F.coalesce(F.col("b.key"), F.col("l.key")).alias("key"),
-        fround(
-            F.when(F.col("l.key").isNull(), F.col("b.val")).otherwise(F.col("l.value")),
-            2,
-        ).alias("val"),
-        F.when(F.col("l.key").isNull(), "base").otherwise("cdc").alias("src"),
-    )
-    # detach from the temp dirs before cleanup
-    res = spark.createDataFrame(out.collect(), out.schema)
-    shutil.rmtree(work, ignore_errors=True)
-    return res
 
 @register(
     "stream_merge_into",
@@ -1124,23 +1141,21 @@ def stream_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         store.commit_append("latest", cid)
 
-    q = (
+    def result() -> DataFrame:
+        out = store.read_facts(spark, "latest").select(
+            "key", fround(F.col("value"), 2).alias("val")
+        )
+        # detach from the temp dirs before cleanup
+        return spark.createDataFrame(out.collect(), out.schema)
+
+    return _drain(
+        spark,
         events_stream(spark, src_dir, max_files_per_trigger=1)
         .writeStream.foreachBatch(merge)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
+        work,
+        result,
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("stream_merge_into did not finish within 300s")
-
-    out = store.read_facts(spark, "latest").select(
-        "key", fround(F.col("value"), 2).alias("val")
-    )
-    # detach from the temp dirs before cleanup
-    res = spark.createDataFrame(out.collect(), out.schema)
-    shutil.rmtree(work, ignore_errors=True)
-    return res
 
 
 @register(
@@ -1336,18 +1351,15 @@ def stream_cms_heavyhitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()
         )
 
-    q = (
+    _drain(
+        spark,
         spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src_dir)
         .writeStream.foreachBatch(merge)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
+        work,
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("stream_cms_heavyhitters did not finish within 300s")
-    shutil.rmtree(work, ignore_errors=True)
 
     sketch = (
         spark.createDataFrame(

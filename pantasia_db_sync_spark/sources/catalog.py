@@ -30,10 +30,6 @@ TABLES = (
 )
 
 
-def default_sf_dir() -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def _nanos_timestamp_cols(path: str) -> list[str]:
     """Columns stored as parquet TIMESTAMP(NANOS) — Spark reads them as
     int64 nanos (``spark.sql.legacy.parquet.nanosAsLong``); we restore

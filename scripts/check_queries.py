@@ -1,5 +1,6 @@
 """Targeted oracle verification: named queries only, full_correctness
-methodology (plain session, DuckDB oracle, order-insensitive value hash).
+methodology (plain session, DuckDB oracle, order-insensitive values,
+all through ``plans.parity_failure``).
 
 Usage: python3 scripts/check_queries.py name [name ...]
 Env: SPARK_GRAFT_TEST_SF_DIR (default sf0.01).
@@ -16,12 +17,11 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from full_correctness import SF_DIR, TABLES, _value_hash  # noqa: E402
+from full_correctness import SF_DIR  # noqa: E402
 
 
 def main() -> int:
     names = sys.argv[1:]
-    import duckdb
     from pyspark.sql import SparkSession
 
     spark = (
@@ -31,11 +31,9 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
     import __spark_entry__ as m
+    from pantasia_db_sync_spark.plans import parity_failure
 
     Q, O = m.queries(), m.oracle_sql()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
     n_fail = 0
     for name in names:
         if name not in Q:
@@ -43,25 +41,12 @@ def main() -> int:
             n_fail += 1
             continue
         try:
-            sdf = Q[name](spark, SF_DIR)
-            s_cols = list(sdf.columns)
-            s_rows = [tuple(r) for r in sdf.collect()]
             if name not in O:
-                print(f"{name}: no oracle ({len(s_rows)} rows)")
+                print(f"{name}: no oracle ({Q[name](spark, SF_DIR).count()} rows)")
                 continue
-            res = con.execute(O[name])
-            d_cols = [d[0] for d in res.description]
-            d_rows = res.fetchall()
-            ok = (
-                len(s_rows) == len(d_rows)
-                and sorted(s_cols) == sorted(d_cols)
-                and _value_hash(s_cols, s_rows) == _value_hash(d_cols, d_rows)
-            )
-            print(
-                f"{name}: {'PASS' if ok else 'FAIL'} "
-                f"(spark {len(s_rows)} rows, oracle {len(d_rows)})"
-            )
-            n_fail += not ok
+            failure = parity_failure(spark, name, SF_DIR)
+            print(f"FAIL {failure.message}" if failure else f"{name}: PASS")
+            n_fail += failure is not None
         except Exception as e:  # noqa: BLE001 — report and keep going
             print(f"{name}: ERROR {type(e).__name__}: {e}"[:300])
             n_fail += 1

@@ -4,55 +4,26 @@ Runs EVERY registered query against its DuckDB oracle at sf0.01 in
 driver style — a plain SparkSession, no tuned confs — and writes
 CORRECTNESS_FULL_r{N}.json with per-query rows_match / schema_match /
 hash_match / err, so parity for new round-N registrations ships as a
-checked-in artifact rather than a claim. Queries without an oracle get
-the driver's weaker rows-only check (runs, >= 0 rows, stable schema).
+checked-in artifact rather than a claim. The comparison is
+``plans.parity_failure``, the one the oracle tests run; hash_match
+records whether the order-insensitive values matched. Queries without
+an oracle get the driver's weaker rows-only check (the query runs).
 
 Usage: python3 scripts/full_correctness.py [round_number]
 """
 
 from __future__ import annotations
 
-import hashlib
 import json
-import math
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb
 from pyspark.sql import SparkSession
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
-def _norm_cell(v):
-    if v is None:
-        return None
-    if isinstance(v, bool):
-        return bool(v)
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return v + 0.0
-    import decimal
-
-    if isinstance(v, decimal.Decimal):
-        return float(v)
-    return v
-
-
-def _value_hash(cols, rows) -> str:
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    normed = sorted(
-        [tuple(_norm_cell(r[i]) for i in order) for r in rows], key=repr
-    )
-    return hashlib.sha256(repr(normed).encode()).hexdigest()[:16]
 
 
 def main() -> int:
@@ -63,36 +34,25 @@ def main() -> int:
         .getOrCreate()
     )
     import __spark_entry__ as m
+    from pantasia_db_sync_spark.plans import parity_failure
 
     Q, O = m.queries(), m.oracle_sql()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
-        )
     results = {}
     n_pass = n_fail = n_weak = 0
     t0 = time.time()
     for name in sorted(Q):
         rec: dict = {"err": None}
         try:
-            sdf = Q[name](spark, SF_DIR)
-            s_cols = list(sdf.columns)
-            s_rows = [tuple(r) for r in sdf.collect()]
             if name in O:
-                res = con.execute(O[name])
-                d_cols = [d[0] for d in res.description]
-                d_rows = res.fetchall()
-                rec["rows_match"] = len(s_rows) == len(d_rows)
-                rec["schema_match"] = sorted(s_cols) == sorted(d_cols)
-                rec["hash_match"] = _value_hash(s_cols, s_rows) == _value_hash(
-                    d_cols, d_rows
-                )
-                ok = rec["rows_match"] and rec["schema_match"] and rec["hash_match"]
+                failure = parity_failure(spark, name, SF_DIR)
+                rec["rows_match"] = failure is None or failure.rows_match
+                rec["schema_match"] = failure is None or failure.columns_match
+                rec["hash_match"] = failure is None or failure.values_match
+                ok = failure is None
             else:
                 rec["weak_rows_only"] = True
-                rec["rows"] = len(s_rows)
-                ok = len(s_rows) >= 0
+                rec["rows"] = Q[name](spark, SF_DIR).count()
+                ok = True
                 n_weak += 1
         except Exception as e:  # noqa: BLE001 — artifact records the error
             rec["err"] = f"{type(e).__name__}: {e}"[:300]

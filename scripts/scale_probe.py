@@ -24,7 +24,6 @@ import json
 import os
 import statistics
 import sys
-import time
 from functools import reduce
 
 from pyspark.sql import DataFrame
@@ -141,8 +140,7 @@ def main() -> None:
     replicas = int(os.environ.get("SPARK_GRAFT_PROBE_REPLICAS", "5"))
     reps = int(os.environ.get("REPS", "2"))
 
-    from pantasia_db_sync_spark.operators.ckpt import scope
-    from pantasia_db_sync_spark.plans import QUERIES
+    from pantasia_db_sync_spark.plans import run_query, timed_runs
     from pantasia_db_sync_spark.session import get_spark
 
     spark = get_spark(app_name="scale-probe")
@@ -151,23 +149,10 @@ def main() -> None:
         spark, replicas, tables=("documents", "embeddings", "customer", "lineitem")
     )
 
-    def run(name: str) -> float:
-        # the scope releases the query's blocks after the timer stopped
-        with scope():
-            t0 = time.perf_counter()
-            QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            return time.perf_counter() - t0
-
     timings = {}
     for name in PROBE_QUERIES:
-        spark.sparkContext.setJobDescription(f"scale-probe:{name}")
-        run(name)  # warm
-        runs = []
-        for _ in range(reps):
-            spark.sparkContext._jvm.System.gc()  # same heap state per run
-            runs.append(run(name))
+        run_query(spark, name, sf_dir)  # warm
+        runs = timed_runs(spark, name, sf_dir, reps)
         timings[name] = round(statistics.median(runs), 3)
         print(f"# {name}: {timings[name]:.2f}s (n={reps})", file=sys.stderr, flush=True)
     print(

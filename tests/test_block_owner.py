@@ -139,15 +139,13 @@ def test_decontaminate_bloom_under_scope_leaves_no_blocks(spark):
     of the query outlives the scope."""
     from pyspark.broadcast import Broadcast
 
-    from pantasia_db_sync_spark.plans import QUERIES
+    from pantasia_db_sync_spark.plans import QUERIES, materialize
 
     jvm = spark.sparkContext._jvm
     bm = jvm.org.apache.spark.SparkEnv.get().blockManager()
     before = _persistent_ids(spark)
     with ckpt.scope() as s:
-        QUERIES["corpus_decontaminate_bloom"](spark, SF_DIR).write.format(
-            "noop"
-        ).mode("overwrite").save()
+        materialize(QUERIES["corpus_decontaminate_bloom"](spark, SF_DIR))
         held = list(s._held)
     bcs = [h for h in held if isinstance(h, Broadcast)]
     rdds = {h.id() for h in held if not isinstance(h, Broadcast)}

@@ -11,13 +11,11 @@ holds where the stock fixtures can't exercise it.
 
 from __future__ import annotations
 
-import math
 import os
 
-import duckdb
 import pytest
 
-from pantasia_db_sync_spark.plans import ORACLES, QUERIES
+from pantasia_db_sync_spark.plans import QUERIES, parity_failure
 
 from conftest import SF_DIR
 
@@ -46,44 +44,14 @@ def null_text_dir(tmp_path_factory):
     return str(d)
 
 
-def _norm_cell(v):
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else v + 0.0
-    return v
-
-
-def _run_both(spark, name, sf_dir):
-    sdf = QUERIES[name](spark, sf_dir)
-    s_rows = [tuple(r) for r in sdf.collect()]
-    con = duckdb.connect()
-    path = os.path.join(sf_dir, "documents.parquet")
-    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}'")
-    res = con.execute(ORACLES[name])
-    d_cols = [c[0] for c in res.description]
-    d_rows = [tuple(r) for r in res.fetchall()]
-    return list(sdf.columns), s_rows, d_cols, d_rows
-
-
 @pytest.mark.parametrize("name", ["quality_filter_verdict", "corpus_prepare"])
 def test_null_text_parity(spark, name, null_text_dir):
-    s_cols, s_rows, d_cols, d_rows = _run_both(spark, name, null_text_dir)
-
-    def norm(cols, rows):
-        order = sorted(range(len(cols)), key=lambda i: cols[i])
-        return sorted(cols), sorted(
-            (tuple(_norm_cell(r[i]) for i in order) for r in rows), key=repr
-        )
-
-    sc, sr = norm(s_cols, s_rows)
-    dc, dr = norm(d_cols, d_rows)
-    assert sc == dc
-    assert len(sr) == len(dr), f"{name}: {len(sr)} vs {len(dr)} rows"
-    bad = [(a, b) for a, b in zip(sr, dr) if a != b]
-    assert not bad, f"{name}: first mismatches {bad[:3]}"
+    failure = parity_failure(spark, name, null_text_dir)
+    assert failure is None, failure.message
 
     # the NULL-text doc is excluded by rule, not misclassified;
     # the EMPTY-text doc stays in scope (it's a real too-short doc)
-    ids = {r[s_cols.index("doc_id")] for r in s_rows}
+    ids = {r["doc_id"] for r in QUERIES[name](spark, null_text_dir).collect()}
     assert 10_000_001 not in ids
     assert 10_000_002 in ids
 
@@ -139,12 +107,8 @@ def test_dq_expectations_detect_planted_violations(spark, bad_events_dir):
         "event_type_in_domain": 1,
         "ts_in_range": 1,
     }, got
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{os.path.join(bad_events_dir, 'events.parquet')}'"
-    )
-    oracle = dict(con.execute(ORACLES["dq_expectations"]).fetchall())
-    assert oracle == got
+    failure = parity_failure(spark, "dq_expectations", bad_events_dir)
+    assert failure is None, failure.message
 
 
 @pytest.fixture(scope="module")
@@ -195,19 +159,5 @@ def test_second_granularity_parity_on_boundary_timestamps(spark, name, boundary_
     must agree between engines even when sub-second parts straddle an
     hour boundary, events share a calendar second, or a user_id is
     NULL — cases the stock fixtures never exercise."""
-    sdf = QUERIES[name](spark, boundary_ts_dir)
-    s_rows = sorted([tuple(r) for r in sdf.collect()], key=repr)
-    con = duckdb.connect()
-    path = os.path.join(boundary_ts_dir, "events.parquet")
-    con.execute(f"CREATE VIEW events AS SELECT * FROM '{path}'")
-    res = con.execute(ORACLES[name])
-    order = sorted(range(len(sdf.columns)), key=lambda i: sdf.columns[i])
-    d_cols = [c[0] for c in res.description]
-    dorder = sorted(range(len(d_cols)), key=lambda i: d_cols[i])
-    d_rows = sorted(
-        [tuple(_norm_cell(r[i]) for i in dorder) for r in res.fetchall()], key=repr
-    )
-    s_rows = sorted(
-        [tuple(_norm_cell(t[i]) for i in order) for t in s_rows], key=repr
-    )
-    assert s_rows == d_rows, name
+    failure = parity_failure(spark, name, boundary_ts_dir)
+    assert failure is None, failure.message

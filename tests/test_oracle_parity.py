@@ -1,85 +1,19 @@
 """Local mirror of the driver's DuckDB-oracle differential check.
 
-For every registered query with an oracle: run the Spark DataFrame and
-the DuckDB SQL over the same parquet tables, then compare row count,
-column names, and order-insensitive values (floats exact — queries are
-designed to round on both sides; see plans/registry.py rules).
+For every registered query with an oracle, ``plans.parity_failure``
+runs the Spark DataFrame and the DuckDB SQL over the same parquet
+tables, then compares row count, column names, and order-insensitive
+values (floats exact — queries are designed to round on both sides;
+see plans/registry.py rules).
 """
 
 from __future__ import annotations
 
-import math
-import os
-
-import duckdb
 import pytest
 
-from pantasia_db_sync_spark.plans import ORACLES, QUERIES
-from pantasia_db_sync_spark.sources.catalog import TABLES
+from pantasia_db_sync_spark.plans import ORACLES, QUERIES, parity_failure
 
 from conftest import SF_DIR
-
-
-def _duck(sf_dir: str):
-    con = duckdb.connect()
-    for t in TABLES:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
-    return con
-
-
-def _norm_cell(v):
-    if v is None:
-        return None
-    if isinstance(v, bool):
-        return bool(v)
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        # collapse -0.0 / 0.0
-        return v + 0.0
-    try:
-        import decimal
-
-        if isinstance(v, decimal.Decimal):
-            return float(v)
-    except ImportError:  # pragma: no cover
-        pass
-    return v
-
-
-def _norm_rows(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = [tuple(_norm_cell(r[i]) for i in order) for r in rows]
-    return sorted(cols), sorted(out, key=repr)
-
-
-def _parity_failure(spark, name: str) -> str | None:
-    """Full spark-vs-oracle comparison for one query; None on parity,
-    the assertion message otherwise."""
-    fn = QUERIES[name]
-    sdf = fn(spark, SF_DIR)
-    spark_rows = [tuple(r) for r in sdf.collect()]
-    spark_cols = list(sdf.columns)
-
-    con = _duck(SF_DIR)
-    res = con.execute(ORACLES[name])
-    duck_cols = [d[0] for d in res.description]
-    duck_rows = [tuple(r) for r in res.fetchall()]
-
-    s_cols, s_rows = _norm_rows(spark_cols, spark_rows)
-    d_cols, d_rows = _norm_rows(duck_cols, duck_rows)
-
-    if s_cols != d_cols:
-        return f"{name}: column mismatch {s_cols} vs {d_cols}"
-    if len(s_rows) != len(d_rows):
-        return f"{name}: row count {len(s_rows)} vs {len(d_rows)}"
-    mismatches = [
-        (i, a, b) for i, (a, b) in enumerate(zip(s_rows, d_rows)) if a != b
-    ]
-    if mismatches:
-        return f"{name}: first mismatches {mismatches[:3]}"
-    return None
 
 
 @pytest.fixture(scope="module")
@@ -97,7 +31,8 @@ def parity_results(spark):
 
     def check(name: str):
         try:
-            return name, _parity_failure(spark, name)
+            failure = parity_failure(spark, name, SF_DIR)
+            return name, None if failure is None else failure.message
         except Exception as e:  # surface build/run crashes as failures
             return name, f"{name}: {type(e).__name__}: {e}"
 

@@ -2981,14 +2981,24 @@ def test_kcore_fixpoint_peels_cascades_and_matches_capped(spark):
     1-round cap keeps chain remnants while the fixpoint sheds them
     all; a cap >= the cascade depth equals the fixpoint exactly; and
     every surviving node's REPORTED degree is its degree in the
-    induced surviving subgraph, all >= k."""
+    induced surviving subgraph, all >= k. The fixpoint's edge counts
+    ride the checkpoint jobs, the initial freeze's too: building it
+    runs 21 jobs (23 when the initial count was a job of its own)."""
     from pantasia_db_sync_spark.operators.components import kcore
 
     clique = [(i, j) for i in range(5) for j in range(i + 1, 5)]
     chain = [(0, 7), (7, 6), (6, 5)]  # 5 peels r1, 6 peels r2, 7 peels r3
     df = spark.createDataFrame(clique + chain, "u long, v long")
 
-    fix = {r.node: r.degree for r in kcore(df, k=2, rounds=None).collect()}
+    tracker = spark.sparkContext.statusTracker()
+
+    def last_job_id() -> int:
+        return max(tracker.getJobIdsForGroup(None), default=-1)
+
+    before = last_job_id()
+    fixpoint = kcore(df, k=2, rounds=None)
+    assert last_job_id() - before <= 21
+    fix = {r.node: r.degree for r in fixpoint.collect()}
     assert fix == {0: 4, 1: 4, 2: 4, 3: 4, 4: 4}, fix
 
     # cascade unfinished after 1 round: node 7 still reports degree 2

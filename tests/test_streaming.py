@@ -301,3 +301,38 @@ def test_stream_near_dedup_state_bounded(spark, tmp_path):
     assert state_rows[-1] <= 2 < n_batches
     assert max(state_rows) <= 2
     spark.catalog.dropTempView("snd_state")
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "stream_tumbling_window",  # memory sink: a temp view per run
+        "stream_hll_distinct",
+        "stream_cdc_apply",
+        "stream_merge_into",
+        "stream_cms_heavyhitters",
+    ],
+)
+def test_stream_builder_cleans_up_when_the_stream_fails(
+    spark, sf_dir, tmp_path, monkeypatch, name
+):
+    """A streaming builder whose query does not finish raises, and
+    still stops the query, drops its sink view and removes its temp
+    dir."""
+    import tempfile
+
+    from pyspark.sql.streaming import StreamingQuery
+
+    from pantasia_db_sync_spark.plans import QUERIES
+
+    def temp_views() -> set[str]:
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    views = temp_views()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", lambda self, timeout=None: False)
+    with pytest.raises(RuntimeError, match="did not finish"):
+        QUERIES[name](spark, sf_dir)
+    assert [p.name for p in tmp_path.iterdir() if p.name.startswith("stream_")] == []
+    assert temp_views() == views
+    assert not spark.streams.active
