@@ -12,21 +12,68 @@ walk + frame timing — the video path), RIFF/PCM WAV (audio sample
 pass + rfft spectral features), plus perceptual hashing (dHash) and a
 real box-average resize over decoded pixels. The original
 deterministic stubs remain for formats that genuinely need native
-codecs (JPEG/MP4) — honest placeholders, clearly marked. All paths
-share the same plumbing: Arrow batches in, embarrassingly parallel
-across partitions, one vectorized pass per blob.
+codecs (JPEG/MP4) — honest placeholders, clearly marked.
+
+The module's only Arrow plumbing is two helpers: ``_per_id`` renders
+one encoded blob per id (the ``synthetic_*`` fixtures) and
+``_per_blob`` runs a per-blob codec that yields zero or more output
+rows. Every operator below that runs Python per row hands a codec call
+to one of them: Arrow batches in, embarrassingly parallel across
+partitions, one pass per blob.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import _parse_datatype_string
 
 from .ckpt import freeze
+
+
+def _per_id(df: DataFrame, id_col: str, encode: Callable[[int], bytes]) -> DataFrame:
+    """``doc_id bigint, content binary``: one ``encode(doc_id)`` blob
+    per row of ``df``."""
+    src = df.select(F.col(id_col).alias("doc_id"))
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids = pdf["doc_id"]
+            yield pd.DataFrame(
+                {"doc_id": ids.values, "content": [encode(int(i)) for i in ids]}
+            )
+
+    return src.mapInPandas(gen, schema="doc_id bigint, content binary")
+
+
+def _per_blob(
+    df: DataFrame,
+    id_col: str,
+    binary_col: str,
+    rows: Callable[[int, bytes], Iterable[dict]],
+    schema: str,
+) -> DataFrame:
+    """Run ``rows(doc_id, blob)`` over ``binary_col``: each dict it
+    yields becomes one output row of ``schema``, with ``doc_id`` filled
+    in. Keys outside the schema are dropped. The column names are
+    resolved here on the driver, because workers cannot parse DDL."""
+    names = _parse_datatype_string(schema).names
+    src = df.select(F.col(id_col).alias("doc_id"), F.col(binary_col).alias("content"))
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = []
+            for i, c in zip(pdf["doc_id"], pdf["content"]):
+                i = int(i)
+                out.extend({**r, "doc_id": i} for r in rows(i, bytes(c)))
+            yield pd.DataFrame(out, columns=names)
+
+    return src.mapInPandas(gen, schema=schema)
+
 
 DECODE_SCHEMA = "doc_id bigint, byte_len int, width int, height int, n_frames int"
 
@@ -70,21 +117,12 @@ def decode_stub_features(
     at 100 TB throughput scales with executors (repartition upstream to
     balance batch sizes for heavy codecs).
     """
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(binary_col).alias("content"))
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                fake_decode_features(int(i), bytes(c))
-                for i, c in zip(pdf["doc_id"], pdf["content"])
-            ]
-            out = pd.DataFrame(
-                feats, columns=["byte_len", "width", "height", "n_frames"]
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].values)
-            yield out
+    def rows(i: int, blob: bytes) -> list[dict]:
+        n, w, h, f = fake_decode_features(i, blob)
+        return [{"byte_len": n, "width": w, "height": h, "n_frames": f}]
 
-    return src.mapInPandas(extract, schema=DECODE_SCHEMA)
+    return _per_blob(df, id_col, binary_col, rows, DECODE_SCHEMA)
 
 
 RESIZE_SCHEMA = "doc_id bigint, orig_len int, thumb_len int, thumb_head_hex string"
@@ -98,28 +136,14 @@ def resize_stub(
     produces the new binary AND reports its metadata; only metadata +
     a head-bytes hex leave the operator so the oracle can mirror it
     byte-for-byte from the source blob."""
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(binary_col).alias("content"))
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, olens, tlens, heads = [], [], [], []
-            for i, c in zip(pdf["doc_id"], pdf["content"]):
-                b = bytes(c)
-                thumb = b[::stride]
-                ids.append(int(i))
-                olens.append(len(b))
-                tlens.append(len(thumb))
-                heads.append(thumb[:4].hex())
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "orig_len": olens,
-                    "thumb_len": tlens,
-                    "thumb_head_hex": heads,
-                }
-            )
+    def rows(i: int, blob: bytes) -> list[dict]:
+        thumb = blob[::stride]
+        return [
+            {"orig_len": len(blob), "thumb_len": len(thumb), "thumb_head_hex": thumb[:4].hex()}
+        ]
 
-    return src.mapInPandas(resize, schema=RESIZE_SCHEMA)
+    return _per_blob(df, id_col, binary_col, rows, RESIZE_SCHEMA)
 
 
 FRAME_SCHEMA = "doc_id bigint, frame_idx int, frame_offset int, frame_len int"
@@ -133,29 +157,20 @@ def frame_sample_stub(
     shape a real codec UDF needs (a batch of N inputs yields ΣnFrames
     rows). Frame count/offsets are the deterministic fake (real path:
     av/ffmpeg seek table); the batch plumbing is real."""
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(binary_col).alias("content"))
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, offs, lens = [], [], [], []
-            for i, c in zip(pdf["doc_id"], pdf["content"]):
-                n = len(bytes(c))
-                n_frames = int(i) % 5 + 1
-                flen = n // n_frames
-                for k in range(n_frames):
-                    ids.append(int(i))
-                    idxs.append(k)
-                    offs.append(k * flen)
-                    lens.append(flen)
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_idx": idxs, "frame_offset": offs, "frame_len": lens}
-            )
+    def rows(i: int, blob: bytes) -> list[dict]:
+        n_frames = i % 5 + 1
+        flen = len(blob) // n_frames
+        return [
+            {"frame_idx": k, "frame_offset": k * flen, "frame_len": flen}
+            for k in range(n_frames)
+        ]
 
-    return src.mapInPandas(sample, schema=FRAME_SCHEMA)
+    return _per_blob(df, id_col, binary_col, rows, FRAME_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
-# BMP: one REAL codec (pure Python, no deps) behind the same plumbing
+# BMP: one REAL codec (pure Python, no deps)
 # ---------------------------------------------------------------------------
 
 import struct
@@ -226,45 +241,14 @@ def decode_bmp(content: bytes) -> dict:
 def decode_bmp_features(
     df: DataFrame, id_col: str = "doc_id", binary_col: str = "content"
 ) -> DataFrame:
-    """mapInPandas over a binary column with the REAL BMP decoder —
-    identical batch plumbing to decode_stub_features, but the bytes are
-    actually parsed (headers, padding, raster walk)."""
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(binary_col).alias("content"))
+    """mapInPandas over a binary column with the REAL BMP decoder: the
+    bytes are actually parsed (headers, padding, raster walk)."""
+    return _per_blob(df, id_col, binary_col, lambda i, b: [decode_bmp(b)], BMP_SCHEMA)
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, c in zip(pdf["doc_id"], pdf["content"]):
-                d = decode_bmp(bytes(c))
-                rows.append(
-                    (
-                        int(i),
-                        d["byte_len"],
-                        d["width"],
-                        d["height"],
-                        d["bpp"],
-                        d["channels"],
-                        d["mean_r"],
-                        d["mean_g"],
-                        d["mean_b"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "byte_len",
-                    "width",
-                    "height",
-                    "bpp",
-                    "channels",
-                    "mean_r",
-                    "mean_g",
-                    "mean_b",
-                ],
-            )
 
-    return src.mapInPandas(extract, schema=BMP_SCHEMA)
+def _solid_rgb(i: int) -> tuple[int, int, int]:
+    """The id-derived fill color of the solid BMP/PNG/GIF fixtures."""
+    return (i * 3) % 256, (i * 5) % 256, (i * 7) % 256
 
 
 def synthetic_bmp_frame(
@@ -276,21 +260,7 @@ def synthetic_bmp_frame(
     so the encoded fixture rides in-flight — the bytes are REAL BMP
     streams produced by :func:`encode_bmp`, and the paired oracle
     predicts header/raster values from the same id arithmetic."""
-    src = df.select(F.col(id_col).alias("doc_id"))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            content = [
-                encode_bmp(
-                    int(i) % 21 + 1,
-                    int(i) % 13 + 1,
-                    ((int(i) * 3) % 256, (int(i) * 5) % 256, (int(i) * 7) % 256),
-                )
-                for i in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "content": content})
-
-    return src.mapInPandas(gen, schema="doc_id bigint, content binary")
+    return _per_id(df, id_col, lambda i: encode_bmp(i % 21 + 1, i % 13 + 1, _solid_rgb(i)))
 
 
 # ---------------------------------------------------------------------------
@@ -448,45 +418,9 @@ def decode_png(content: bytes) -> dict:
 def decode_png_features(
     df: DataFrame, id_col: str = "doc_id", binary_col: str = "content"
 ) -> DataFrame:
-    """mapInPandas over a binary column with the REAL PNG decoder —
-    identical Arrow batch plumbing to decode_bmp_features, but the
+    """mapInPandas over a binary column with the REAL PNG decoder: the
     stream is an actually-compressed wire format (inflate + unfilter)."""
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(binary_col).alias("content"))
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, c in zip(pdf["doc_id"], pdf["content"]):
-                d = decode_png(bytes(c))
-                rows.append(
-                    (
-                        int(i),
-                        d["width"],
-                        d["height"],
-                        d["bit_depth"],
-                        d["color_type"],
-                        d["channels"],
-                        d["mean_r"],
-                        d["mean_g"],
-                        d["mean_b"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "width",
-                    "height",
-                    "bit_depth",
-                    "color_type",
-                    "channels",
-                    "mean_r",
-                    "mean_g",
-                    "mean_b",
-                ],
-            )
-
-    return src.mapInPandas(extract, schema=PNG_SCHEMA)
+    return _per_blob(df, id_col, binary_col, lambda i, b: [decode_png(b)], PNG_SCHEMA)
 
 
 def synthetic_png_frame(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -494,21 +428,7 @@ def synthetic_png_frame(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     input row, dimensions/color from the id (same arithmetic as the BMP
     twin so the oracle predicts header/raster values; heights ≥3
     exercise the None/Sub/Up filter cycle)."""
-    src = df.select(F.col(id_col).alias("doc_id"))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            content = [
-                encode_png(
-                    int(i) % 21 + 1,
-                    int(i) % 13 + 1,
-                    ((int(i) * 3) % 256, (int(i) * 5) % 256, (int(i) * 7) % 256),
-                )
-                for i in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "content": content})
-
-    return src.mapInPandas(gen, schema="doc_id bigint, content binary")
+    return _per_id(df, id_col, lambda i: encode_png(i % 21 + 1, i % 13 + 1, _solid_rgb(i)))
 
 
 # ---------------------------------------------------------------------------
@@ -753,58 +673,17 @@ def decode_gif(content: bytes) -> dict:
 def decode_gif_features(
     df: DataFrame, id_col: str = "doc_id", binary_col: str = "content"
 ) -> DataFrame:
-    """mapInPandas over a binary column with the REAL GIF decoder —
-    same Arrow batch plumbing as the BMP/PNG twins; the wire format
-    here is dictionary-compressed (LZW), completing the trio of
-    raster / deflate / dictionary codecs."""
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(binary_col).alias("content"))
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, c in zip(pdf["doc_id"], pdf["content"]):
-                d = decode_gif(bytes(c))
-                rows.append(
-                    (
-                        int(i),
-                        d["width"],
-                        d["height"],
-                        d["n_colors"],
-                        d["mean_r"],
-                        d["mean_g"],
-                        d["mean_b"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_colors",
-                    "mean_r", "mean_g", "mean_b",
-                ],
-            )
-
-    return src.mapInPandas(extract, schema=GIF_SCHEMA)
+    """mapInPandas over a binary column with the REAL GIF decoder: the
+    wire format here is dictionary-compressed (LZW), completing the trio
+    of raster / deflate / dictionary codecs."""
+    return _per_blob(df, id_col, binary_col, lambda i, b: [decode_gif(b)], GIF_SCHEMA)
 
 
 def synthetic_gif_frame(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Real encoded bytes for the GIF path: one solid-color GIF per
     input row, id-derived dimensions/color (same arithmetic as the
     BMP/PNG twins so the oracle predicts every output)."""
-    src = df.select(F.col(id_col).alias("doc_id"))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            content = [
-                encode_gif(
-                    int(i) % 21 + 1,
-                    int(i) % 13 + 1,
-                    ((int(i) * 3) % 256, (int(i) * 5) % 256, (int(i) * 7) % 256),
-                )
-                for i in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "content": content})
-
-    return src.mapInPandas(gen, schema="doc_id bigint, content binary")
+    return _per_id(df, id_col, lambda i: encode_gif(i % 21 + 1, i % 13 + 1, _solid_rgb(i)))
 
 
 # ---------------------------------------------------------------------------
@@ -914,25 +793,9 @@ def decode_wav(content: bytes) -> dict:
 def decode_wav_features(
     df: DataFrame, id_col: str = "doc_id", binary_col: str = "content"
 ) -> DataFrame:
-    """mapInPandas over a binary column with the REAL WAV decoder —
-    same Arrow batch plumbing as the image codecs; the sample pass is
-    numpy-vectorized per blob."""
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(binary_col).alias("content"))
-
-    cols = [
-        "byte_len", "sample_rate", "channels", "bits", "n_frames",
-        "duration_ms", "rms", "peak", "mean",
-    ]
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, c in zip(pdf["doc_id"], pdf["content"]):
-                d = decode_wav(bytes(c))
-                rows.append((int(i), *(d[k] for k in cols)))
-            yield pd.DataFrame(rows, columns=["doc_id", *cols])
-
-    return src.mapInPandas(extract, schema=WAV_SCHEMA)
+    """mapInPandas over a binary column with the REAL WAV decoder; the
+    sample pass is numpy-vectorized per blob."""
+    return _per_blob(df, id_col, binary_col, lambda i, b: [decode_wav(b)], WAV_SCHEMA)
 
 
 def synthetic_wav_frame(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -941,23 +804,14 @@ def synthetic_wav_frame(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     paired oracle predicts every decoded feature arithmetically
     (square wave ⇒ rms = amplitude exactly, mean = 0 for the even
     frame count)."""
-    src = df.select(F.col(id_col).alias("doc_id"))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rates = (8000, 16000, 44100)
-        for pdf in batches:
-            content = [
-                encode_wav(
-                    rates[int(i) % 3],
-                    int(i) % 2 + 1,
-                    (int(i) % 250 + 50) * 2,
-                    (int(i) * 97) % 30000 + 1,
-                )
-                for i in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "content": content})
-
-    return src.mapInPandas(gen, schema="doc_id bigint, content binary")
+    rates = (8000, 16000, 44100)
+    return _per_id(
+        df,
+        id_col,
+        lambda i: encode_wav(
+            rates[i % 3], i % 2 + 1, (i % 250 + 50) * 2, (i * 97) % 30000 + 1
+        ),
+    )
 
 
 def encode_wav_gapped(
@@ -1035,25 +889,15 @@ def audio_segments_features(
     window: int = 64,
     threshold: float = 0.5,
 ) -> DataFrame:
-    """mapInPandas VAD over a binary WAV column — same Arrow plumbing
-    as the other codecs; numpy-vectorized per blob."""
-    src = df.select(
-        F.col(id_col).alias("doc_id"), F.col(binary_col).alias("content")
+    """mapInPandas VAD over a binary WAV column; numpy-vectorized per
+    blob."""
+    return _per_blob(
+        df,
+        id_col,
+        binary_col,
+        lambda i, b: [audio_segments(b, window, threshold)],
+        AUDIO_SEG_SCHEMA,
     )
-    cols = [
-        "n_segments", "voiced_frames", "silence_frames",
-        "seg_start_sum", "voiced_ratio",
-    ]
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, c in zip(pdf["doc_id"], pdf["content"]):
-                d = audio_segments(bytes(c), window, threshold)
-                rows.append((int(i), *(d[k] for k in cols)))
-            yield pd.DataFrame(rows, columns=["doc_id", *cols])
-
-    return src.mapInPandas(extract, schema=AUDIO_SEG_SCHEMA)
 
 
 def synthetic_gapped_wav_frame(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1062,23 +906,13 @@ def synthetic_gapped_wav_frame(df: DataFrame, id_col: str = "doc_id") -> DataFra
     (64), so the paired oracle predicts every output arithmetically:
     s = i%4+2 segments of (i%3+1)·64 frames with (i%2+1)·64-frame gaps
     at amplitude (i·131)%20000+500."""
-    src = df.select(F.col(id_col).alias("doc_id"))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            content = [
-                encode_wav_gapped(
-                    16000,
-                    int(i) % 4 + 2,
-                    (int(i) % 3 + 1) * 64,
-                    (int(i) % 2 + 1) * 64,
-                    (int(i) * 131) % 20000 + 500,
-                )
-                for i in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "content": content})
-
-    return src.mapInPandas(gen, schema="doc_id bigint, content binary")
+    return _per_id(
+        df,
+        id_col,
+        lambda i: encode_wav_gapped(
+            16000, i % 4 + 2, (i % 3 + 1) * 64, (i % 2 + 1) * 64, (i * 131) % 20000 + 500
+        ),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1175,20 +1009,13 @@ def image_dhash_features(
     df: DataFrame, id_col: str = "doc_id", binary_col: str = "content"
 ) -> DataFrame:
     """mapInPandas computing the perceptual hash from real decoded
-    pixels — same Arrow batch plumbing as the codec features."""
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(binary_col).alias("content"))
+    pixels."""
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, c in zip(pdf["doc_id"], pdf["content"]):
-                w, h, hi, lo = image_dhash(bytes(c))
-                rows.append((int(i), w, h, hi, lo))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "dhash_hi", "dhash_lo"]
-            )
+    def rows(i: int, blob: bytes) -> list[dict]:
+        w, h, hi, lo = image_dhash(blob)
+        return [{"width": w, "height": h, "dhash_hi": hi, "dhash_lo": lo}]
 
-    return src.mapInPandas(extract, schema=DHASH_SCHEMA)
+    return _per_blob(df, id_col, binary_col, rows, DHASH_SCHEMA)
 
 
 def image_phash_pairs(
@@ -1255,22 +1082,17 @@ def synthetic_patterned_bmp(
     the paired oracle recomputes the exact hash in SQL. Scale runs grow
     ``period`` with the corpus so near-dup GROUP SIZE stays fixed and
     the true answer grows linearly."""
-    src = df.select(F.col(id_col).alias("doc_id"))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            content = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                grid = [
-                    [((i % period + 1) * (x + 3) * (y + 7) * 13 + i // period) % 256
-                     for x in range(9)]
-                    for y in range(8)
-                ]
-                content.append(encode_bmp_gray(grid))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "content": content})
+    def encode(i: int) -> bytes:
+        return encode_bmp_gray(
+            [
+                [((i % period + 1) * (x + 3) * (y + 7) * 13 + i // period) % 256
+                 for x in range(9)]
+                for y in range(8)
+            ]
+        )
 
-    return src.mapInPandas(gen, schema="doc_id bigint, content binary")
+    return _per_id(df, id_col, encode)
 
 
 AUDIO_SPECTRUM_SCHEMA = (
@@ -1290,35 +1112,23 @@ def audio_spectrum_features(
     concentrates all energy at Nyquist (X[N/2] = amplitude * N, every
     other bin 0), so the paired oracle predicts the whole spectrum
     arithmetically while the operator path runs an actual FFT."""
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(binary_col).alias("content"))
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, c in zip(pdf["doc_id"], pdf["content"]):
-                meta, samples = wav_meta_and_samples(bytes(c))
-                ch0 = samples[:: meta["channels"]]
-                spec = np.abs(np.fft.rfft(ch0))
-                k = int(np.argmax(spec))
-                rows.append(
-                    (
-                        int(i),
-                        len(ch0),
-                        k,
-                        k * meta["sample_rate"] / len(ch0),
-                        float(spec[k]),
-                        float(spec[0]),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_frames", "dominant_bin", "dominant_freq_hz",
-                    "peak_mag", "dc_mag",
-                ],
-            )
+    def rows(i: int, blob: bytes) -> list[dict]:
+        meta, samples = wav_meta_and_samples(blob)
+        ch0 = samples[:: meta["channels"]]
+        spec = np.abs(np.fft.rfft(ch0))
+        k = int(np.argmax(spec))
+        return [
+            {
+                "n_frames": len(ch0),
+                "dominant_bin": k,
+                "dominant_freq_hz": k * meta["sample_rate"] / len(ch0),
+                "peak_mag": float(spec[k]),
+                "dc_mag": float(spec[0]),
+            }
+        ]
 
-    return src.mapInPandas(extract, schema=AUDIO_SPECTRUM_SCHEMA)
+    return _per_blob(df, id_col, binary_col, rows, AUDIO_SPECTRUM_SCHEMA)
 
 
 RESIZE_BMP_SCHEMA = (
@@ -1338,41 +1148,33 @@ def resize_bmp_real(
     spec-compliant BMP, and report the output's dimensions, byte length
     and gray mean — the thumbnail operation resize_stub fakes, done on
     actual pixels. Arrow-batched mapInPandas; embarrassingly parallel."""
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(binary_col).alias("content"))
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, c in zip(pdf["doc_id"], pdf["content"]):
-                grid = decode_bmp_gray_grid(bytes(c))
-                h, w = len(grid), len(grid[0])
-                ow, oh = (w + factor - 1) // factor, (h + factor - 1) // factor
-                small = [
-                    [
-                        _box_mean(
-                            grid,
-                            x0=gx * factor, x1=min((gx + 1) * factor, w),
-                            y0=gy * factor, y1=min((gy + 1) * factor, h),
-                        )
-                        for gx in range(ow)
-                    ]
-                    for gy in range(oh)
-                ]
-                out = encode_bmp_gray(
-                    [[int(round(v)) for v in row] for row in small]
+    def rows(i: int, blob: bytes) -> list[dict]:
+        grid = decode_bmp_gray_grid(blob)
+        h, w = len(grid), len(grid[0])
+        ow, oh = (w + factor - 1) // factor, (h + factor - 1) // factor
+        small = [
+            [
+                _box_mean(
+                    grid,
+                    x0=gx * factor, x1=min((gx + 1) * factor, w),
+                    y0=gy * factor, y1=min((gy + 1) * factor, h),
                 )
-                d = decode_bmp(out)
-                mean = (d["mean_r"] + d["mean_g"] + d["mean_b"]) / 3.0
-                rows.append((int(i), w, h, ow, oh, len(out), mean))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "src_w", "src_h", "out_w", "out_h",
-                    "out_byte_len", "out_mean",
-                ],
-            )
+                for gx in range(ow)
+            ]
+            for gy in range(oh)
+        ]
+        out = encode_bmp_gray([[int(round(v)) for v in row] for row in small])
+        d = decode_bmp(out)
+        return [
+            {
+                "src_w": w, "src_h": h, "out_w": ow, "out_h": oh,
+                "out_byte_len": len(out),
+                "out_mean": (d["mean_r"] + d["mean_g"] + d["mean_b"]) / 3.0,
+            }
+        ]
 
-    return src.mapInPandas(resize, schema=RESIZE_BMP_SCHEMA)
+    return _per_blob(df, id_col, binary_col, rows, RESIZE_BMP_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1532,18 +1334,9 @@ def video_frame_features(
     """mapInPandas over an animated-GIF binary column: one output row
     per decoded frame (variable rows per input — the true video-codec
     UDF shape), with real timing metadata and per-frame channel means."""
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(binary_col).alias("content"))
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["frame_idx", "delay_cs", "width", "height", "mean_r", "mean_g", "mean_b"]
-        for pdf in batches:
-            rows = []
-            for i, c in zip(pdf["doc_id"], pdf["content"]):
-                for fr in decode_gif_frames(bytes(c)):
-                    rows.append((int(i), *(fr[k] for k in cols)))
-            yield pd.DataFrame(rows, columns=["doc_id", *cols])
-
-    return src.mapInPandas(extract, schema=VIDEO_FRAMES_SCHEMA)
+    return _per_blob(
+        df, id_col, binary_col, lambda i, b: decode_gif_frames(b), VIDEO_FRAMES_SCHEMA
+    )
 
 
 def synthetic_animated_gif(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1551,28 +1344,20 @@ def synthetic_animated_gif(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     4-color palette, per-frame solid color cycling through the palette,
     and a real centisecond delay — every decoded feature is oracle
     arithmetic while the bytes are genuine GIF89a."""
-    src = df.select(F.col(id_col).alias("doc_id"))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            content = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                palette = [
-                    ((i * 3 + j * 11) % 256, (i * 5 + j * 13) % 256, (i * 7 + j * 17) % 256)
-                    for j in range(4)
-                ]
-                n_frames = i % 4 + 2
-                content.append(
-                    encode_gif_animated(
-                        i % 11 + 2, i % 7 + 2, palette,
-                        [(i + f) % 4 for f in range(n_frames)],
-                        (i % 10 + 1) * 5,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "content": content})
+    def encode(i: int) -> bytes:
+        palette = [
+            ((i * 3 + j * 11) % 256, (i * 5 + j * 13) % 256, (i * 7 + j * 17) % 256)
+            for j in range(4)
+        ]
+        n_frames = i % 4 + 2
+        return encode_gif_animated(
+            i % 11 + 2, i % 7 + 2, palette,
+            [(i + f) % 4 for f in range(n_frames)],
+            (i % 10 + 1) * 5,
+        )
 
-    return src.mapInPandas(gen, schema="doc_id bigint, content binary")
+    return _per_id(df, id_col, encode)
 
 
 # ---------------------------------------------------------------------------
@@ -2349,19 +2134,9 @@ def synthetic_jpeg_frame(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     JPEG per row, dims/level from id arithmetic (widths 1..21, heights
     1..13 exercise partial edge blocks and multi-block rasters; gray
     (id*11)%256 covers the full level range)."""
-    src = df.select(F.col(id_col).alias("doc_id"))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            content = [
-                encode_jpeg_gray(
-                    int(i) % 21 + 1, int(i) % 13 + 1, (int(i) * 11) % 256
-                )
-                for i in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "content": content})
-
-    return src.mapInPandas(gen, schema="doc_id bigint, content binary")
+    return _per_id(
+        df, id_col, lambda i: encode_jpeg_gray(i % 21 + 1, i % 13 + 1, (i * 11) % 256)
+    )
 
 
 def synthetic_jpeg_progressive_frame(
@@ -2371,19 +2146,11 @@ def synthetic_jpeg_progressive_frame(
     SOF2 stream per row (the four-scan DC/AC first+refine script, EOBn
     runs included), dims/level from the same id arithmetic as the
     baseline twin — widths 1..21, heights 1..13, gray (id*11)%256."""
-    src = df.select(F.col(id_col).alias("doc_id"))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            content = [
-                encode_jpeg_gray_progressive(
-                    int(i) % 21 + 1, int(i) % 13 + 1, (int(i) * 11) % 256
-                )
-                for i in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "content": content})
-
-    return src.mapInPandas(gen, schema="doc_id bigint, content binary")
+    return _per_id(
+        df,
+        id_col,
+        lambda i: encode_jpeg_gray_progressive(i % 21 + 1, i % 13 + 1, (i * 11) % 256),
+    )
 
 
 def decode_jpeg_features(
@@ -2391,29 +2158,13 @@ def decode_jpeg_features(
 ) -> DataFrame:
     """mapInPandas over a binary column with the REAL JPEG decoder
     (baseline SOF0 and progressive SOF2 alike — decode_jpeg dispatches
-    on the SOF marker) — Arrow-batched, embarrassingly parallel, same
-    shape as the BMP/PNG twins."""
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(binary_col).alias("content"))
+    on the SOF marker) — Arrow-batched, embarrassingly parallel."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, content in zip(pdf["doc_id"], pdf["content"]):
-                d = decode_jpeg(bytes(content))
-                rows.append(
-                    (
-                        int(i),
-                        d["width"],
-                        d["height"],
-                        d["channels"],
-                        float(d["mean_gray"]),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "channels", "mean_gray"]
-            )
+    def rows(i: int, blob: bytes) -> list[dict]:
+        d = decode_jpeg(blob)
+        return [dict(d, mean_gray=float(d["mean_gray"]))]
 
-    return src.mapInPandas(gen, schema=JPEG_SCHEMA)
+    return _per_blob(df, id_col, binary_col, rows, JPEG_SCHEMA)
 
 
 def _put_dc_block(w: "_BitWriter", dc: int, pred: int) -> int:
@@ -2490,23 +2241,13 @@ def synthetic_jpeg_420_frame(df: DataFrame, id_col: str = "doc_id") -> DataFrame
     chroma-subsampled JPEG per row. Widths 1..37 x heights 1..29 cover
     every MCU edge case — partial Y blocks, partial chroma blocks, and
     images smaller than one 16x16 MCU in either axis."""
-    src = df.select(F.col(id_col).alias("doc_id"))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            content = [
-                encode_jpeg_color_420(
-                    int(i) % 37 + 1,
-                    int(i) % 29 + 1,
-                    (int(i) * 11) % 256,
-                    (int(i) * 5) % 256,
-                    (int(i) * 7) % 256,
-                )
-                for i in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "content": content})
-
-    return src.mapInPandas(gen, schema="doc_id bigint, content binary")
+    return _per_id(
+        df,
+        id_col,
+        lambda i: encode_jpeg_color_420(
+            i % 37 + 1, i % 29 + 1, (i * 11) % 256, (i * 5) % 256, (i * 7) % 256
+        ),
+    )
 
 
 def decode_jpeg_420_features(
@@ -2516,33 +2257,19 @@ def decode_jpeg_420_features(
     — the decoder's MCU walk handles 4:2:0/4:2:2/4:4:4 uniformly),
     emitting per-plane means over each component's OWN subsampled
     crop."""
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(binary_col).alias("content"))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, content in zip(pdf["doc_id"], pdf["content"]):
-                d = decode_jpeg(bytes(content))
-                rows.append(
-                    (
-                        int(i),
-                        d["width"],
-                        d["height"],
-                        d["channels"],
-                        float(d["mean_y"]),
-                        float(d["mean_cb"]),
-                        float(d["mean_cr"]),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "channels",
-                    "mean_y", "mean_cb", "mean_cr",
-                ],
+    def rows(i: int, blob: bytes) -> list[dict]:
+        d = decode_jpeg(blob)
+        return [
+            dict(
+                d,
+                mean_y=float(d["mean_y"]),
+                mean_cb=float(d["mean_cb"]),
+                mean_cr=float(d["mean_cr"]),
             )
+        ]
 
-    return src.mapInPandas(gen, schema=JPEG_420_SCHEMA)
+    return _per_blob(df, id_col, binary_col, rows, JPEG_420_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -2680,58 +2407,24 @@ def synthetic_exif_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """One real Exif APP1 byte stream per row, every field derived from
     the id (the read-only-fixture pattern of synthetic_bmp_frame); odd
     ids render big-endian MM so BOTH byte orders ship in every run."""
-    src = df.select(F.col(id_col).alias("doc_id"))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            content = [
-                encode_exif(
-                    make=f"CAM{int(i) % 10}",
-                    orientation=int(i) % 8 + 1,
-                    xres=(72 + int(i) % 4, 1 + int(i) % 3),
-                    datetime_str=f"2024:01:{int(i) % 28 + 1:02d} 12:00:00",
-                    big_endian=bool(int(i) % 2),
-                )
-                for i in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "content": content})
-
-    return src.mapInPandas(gen, schema="doc_id bigint, content binary")
+    return _per_id(
+        df,
+        id_col,
+        lambda i: encode_exif(
+            make=f"CAM{i % 10}",
+            orientation=i % 8 + 1,
+            xres=(72 + i % 4, 1 + i % 3),
+            datetime_str=f"2024:01:{i % 28 + 1:02d} 12:00:00",
+            big_endian=bool(i % 2),
+        ),
+    )
 
 
 def decode_exif_features(
     df: DataFrame, id_col: str = "doc_id", binary_col: str = "content"
 ) -> DataFrame:
-    """mapInPandas over a binary column with the REAL Exif parser —
-    the same Arrow batch plumbing as decode_bmp_features."""
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(binary_col).alias("content"))
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, c in zip(pdf["doc_id"], pdf["content"]):
-                d = decode_exif(bytes(c))
-                rows.append(
-                    (
-                        int(i),
-                        d["byte_order"],
-                        d["n_entries"],
-                        d["make"],
-                        d["orientation"],
-                        d["xres_num"],
-                        d["xres_den"],
-                        d["datetime"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "byte_order", "n_entries", "make",
-                    "orientation", "xres_num", "xres_den", "datetime",
-                ],
-            )
-
-    return src.mapInPandas(extract, schema=EXIF_SCHEMA)
+    """mapInPandas over a binary column with the REAL Exif parser."""
+    return _per_blob(df, id_col, binary_col, lambda i, b: [decode_exif(b)], EXIF_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -2782,56 +2475,35 @@ def bmp_entropy_features(
     integer NANO-units and the per-image entropy is the order-free
     integer sum, so the oracle can replay the identical arithmetic
     per histogram value."""
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(binary_col).alias("content"))
 
-    import math as _math
+    def rows(i: int, b: bytes) -> list[dict]:
+        w = struct.unpack_from("<i", b, 18)[0]
+        h = struct.unpack_from("<i", b, 22)[0]
+        off = struct.unpack_from("<I", b, 10)[0]
+        row_len = w * 3
+        pad = (4 - row_len % 4) % 4
+        counts = [0] * 256
+        pos = off
+        for _ in range(h):
+            for x in range(w):
+                counts[b[pos + 3 * x]] += 1  # blue == gray here
+            pos += row_len + pad
+        n = w * h
+        term_sum = 0
+        for cnt in counts:
+            if cnt:
+                p = cnt / n
+                term_sum += math.floor(-p * math.log(p) * 1e9 + 0.5)
+        return [{"width": w, "height": h, "n_pixels": n, "entropy_nats": term_sum / 1e9}]
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, c in zip(pdf["doc_id"], pdf["content"]):
-                b = bytes(c)
-                w = struct.unpack_from("<i", b, 18)[0]
-                h = struct.unpack_from("<i", b, 22)[0]
-                off = struct.unpack_from("<I", b, 10)[0]
-                row_len = w * 3
-                pad = (4 - row_len % 4) % 4
-                counts = [0] * 256
-                pos = off
-                for _ in range(h):
-                    for x in range(w):
-                        counts[b[pos + 3 * x]] += 1  # blue == gray here
-                    pos += row_len + pad
-                n = w * h
-                term_sum = 0
-                for cnt in counts:
-                    if cnt:
-                        p = cnt / n
-                        term_sum += _math.floor(-p * _math.log(p) * 1e9 + 0.5)
-                rows.append((int(i), w, h, n, term_sum / 1e9))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "width", "height", "n_pixels", "entropy_nats"],
-            )
-
-    return src.mapInPandas(extract, schema=ENTROPY_SCHEMA)
+    return _per_blob(df, id_col, binary_col, rows, ENTROPY_SCHEMA)
 
 
 def synthetic_gradient_frame(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """One gradient BMP per row, dimensions from the id (the
     synthetic_bmp_frame fixture pattern, but NON-solid rasters so the
     entropy is nontrivial and still oracle-predictable)."""
-    src = df.select(F.col(id_col).alias("doc_id"))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            content = [
-                encode_bmp_gradient(int(i) % 21 + 1, int(i) % 13 + 1)
-                for i in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "content": content})
-
-    return src.mapInPandas(gen, schema="doc_id bigint, content binary")
+    return _per_id(df, id_col, lambda i: encode_bmp_gradient(i % 21 + 1, i % 13 + 1))
 
 
 # ---------------------------------------------------------------------------
@@ -3026,59 +2698,21 @@ def synthetic_mp4_frame(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """One MP4 metadata skeleton per row, every field from id
     arithmetic: duration (id%97+1)*500 ms, width (id%32+1)*16,
     height (id%18+1)*16, audio track iff id is even."""
-    src = df.select(F.col(id_col).alias("doc_id"))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            content = [
-                encode_mp4_meta(
-                    (int(i) % 97 + 1) * 500,
-                    (int(i) % 32 + 1) * 16,
-                    (int(i) % 18 + 1) * 16,
-                    int(i) % 2 == 0,
-                )
-                for i in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "content": content})
-
-    return src.mapInPandas(gen, schema="doc_id bigint, content binary")
+    return _per_id(
+        df,
+        id_col,
+        lambda i: encode_mp4_meta(
+            (i % 97 + 1) * 500, (i % 32 + 1) * 16, (i % 18 + 1) * 16, i % 2 == 0
+        ),
+    )
 
 
 def decode_mp4_features(
     df: DataFrame, id_col: str = "doc_id", binary_col: str = "content"
 ) -> DataFrame:
     """mapInPandas over a binary column with the real ISO-BMFF walk —
-    Arrow-batched, zero shuffle, the Exif/codec plumbing shape."""
-    src = df.select(
-        F.col(id_col).alias("doc_id"), F.col(binary_col).alias("content")
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, content in zip(pdf["doc_id"], pdf["content"]):
-                d = decode_mp4_meta(bytes(content))
-                rows.append(
-                    (
-                        int(i),
-                        d["major_brand"],
-                        d["timescale"],
-                        d["duration_ms"],
-                        d["n_tracks"],
-                        d["video_width"],
-                        d["video_height"],
-                        d["handlers"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "major_brand", "timescale", "duration_ms",
-                    "n_tracks", "video_width", "video_height", "handlers",
-                ],
-            )
-
-    return src.mapInPandas(gen, schema=MP4_SCHEMA)
+    Arrow-batched, zero shuffle."""
+    return _per_blob(df, id_col, binary_col, lambda i, b: [decode_mp4_meta(b)], MP4_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -3487,24 +3121,13 @@ def synthetic_mjpeg_mp4_frame(df: DataFrame, id_col: str = "doc_id") -> DataFram
     doc_id%3+2 frames, frame dims (id%21+1) x (id%13+1) — the same
     partial-edge-block coverage as the still-JPEG fixtures — and frame
     k's gray level (id*11 + 29*k) % 256."""
-    src = df.select(F.col(id_col).alias("doc_id"))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            content = [
-                encode_mp4_mjpeg(
-                    int(i) % 21 + 1,
-                    int(i) % 13 + 1,
-                    [
-                        (int(i) * 11 + 29 * k) % 256
-                        for k in range(int(i) % 3 + 2)
-                    ],
-                )
-                for i in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "content": content})
-
-    return src.mapInPandas(gen, schema="doc_id bigint, content binary")
+    return _per_id(
+        df,
+        id_col,
+        lambda i: encode_mp4_mjpeg(
+            i % 21 + 1, i % 13 + 1, [(i * 11 + 29 * k) % 256 for k in range(i % 3 + 2)]
+        ),
+    )
 
 
 def encode_mp4_avc(
@@ -3617,20 +3240,13 @@ def synthetic_avc_mp4_frame(
     cluster; at real corpus scale the input splits already provide
     this and Catalyst elides nothing (the chain stays map-only per
     partition)."""
-    src = df.select(F.col(id_col).alias("doc_id")).repartition(
-        32, "doc_id"
-    )
+    src = df.select(F.col(id_col).alias("doc_id")).repartition(32, "doc_id")
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            content = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h, grays = _avc_fixture_params(i, coding)
-                content.append(encode_mp4_avc(w, h, grays, coding=coding))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "content": content})
+    def encode(i: int) -> bytes:
+        w, h, grays = _avc_fixture_params(i, coding)
+        return encode_mp4_avc(w, h, grays, coding=coding)
 
-    return src.mapInPandas(gen, schema="doc_id bigint, content binary")
+    return _per_id(src, "doc_id", encode)
 
 
 def _avc_fixture_params(i: int, coding: str) -> tuple[int, int, list[int]]:
@@ -3694,55 +3310,37 @@ def check_mp4_avc_textured(
     mapInPandas, map-only, zero shuffle."""
     from . import h264
 
-    src = df.select(
-        F.col(id_col).alias("doc_id"), F.col(binary_col).alias("content")
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, content in zip(pdf["doc_id"], pdf["content"]):
-                i = int(i)
-                w, h, seeds = _avc_fixture_params(i, coding)
-                qp, debl = (30, True) if coding == "deblocked" else (12, False)
-                ipp_planes = ms_plane = None
-                if coding == "ipp":
-                    ipp_planes = h264.encode_ipp_stream(
-                        w, h, int(seeds[0]), len(seeds), qp=30,
-                        deblock=True, num_refs=2, weighted=True,
-                    )[3]
-                elif coding == "multislice":
-                    _, ms_plane, _ = h264.encode_textured_multislice_idr(
-                        w, h, int(seeds[0]), int(seeds[1]), qp=30,
-                        deblock_idc=int(seeds[2]),
-                    )
-                for k, fr in enumerate(decode_mp4_samples(bytes(content))):
-                    if ipp_planes is not None:
-                        expected = ipp_planes[k]
-                    elif ms_plane is not None:
-                        expected = ms_plane
-                    else:
-                        _, expected, _ = h264.encode_textured_i4x4_idr(
-                            w, h, seeds[k], qp, deblock=debl
-                        )
-                    mismatch = int(np.count_nonzero(fr["y"] != expected))
-                    rows.append(
-                        (i, fr["frame_idx"], fr["width"], fr["height"],
-                         mismatch)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame_idx", "width", "height", "mismatch_px",
-                ],
+    def rows(i: int, blob: bytes) -> Iterator[dict]:
+        w, h, seeds = _avc_fixture_params(i, coding)
+        qp, debl = (30, True) if coding == "deblocked" else (12, False)
+        ipp_planes = ms_plane = None
+        if coding == "ipp":
+            ipp_planes = h264.encode_ipp_stream(
+                w, h, int(seeds[0]), len(seeds), qp=30,
+                deblock=True, num_refs=2, weighted=True,
+            )[3]
+        elif coding == "multislice":
+            _, ms_plane, _ = h264.encode_textured_multislice_idr(
+                w, h, int(seeds[0]), int(seeds[1]), qp=30,
+                deblock_idc=int(seeds[2]),
             )
+        for k, fr in enumerate(decode_mp4_samples(blob)):
+            if ipp_planes is not None:
+                expected = ipp_planes[k]
+            elif ms_plane is not None:
+                expected = ms_plane
+            else:
+                _, expected, _ = h264.encode_textured_i4x4_idr(
+                    w, h, seeds[k], qp, deblock=debl
+                )
+            yield dict(fr, mismatch_px=int(np.count_nonzero(fr["y"] != expected)))
 
-    return src.mapInPandas(
-        gen,
-        schema=(
-            "doc_id bigint, frame_idx int, width int, height int, "
-            "mismatch_px int"
-        ),
+    return _per_blob(
+        df,
+        id_col,
+        binary_col,
+        rows,
+        "doc_id bigint, frame_idx int, width int, height int, mismatch_px int",
     )
 
 
@@ -3759,31 +3357,6 @@ def decode_mp4_frame_features(
     pixels chain (decode_mp4_samples): Arrow-batched, zero shuffle, one
     output row per decoded frame — the video twin of the animated-GIF
     frame extractor."""
-    src = df.select(
-        F.col(id_col).alias("doc_id"), F.col(binary_col).alias("content")
+    return _per_blob(
+        df, id_col, binary_col, lambda i, b: decode_mp4_samples(b), MP4_FRAMES_SCHEMA
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, content in zip(pdf["doc_id"], pdf["content"]):
-                for fr in decode_mp4_samples(bytes(content)):
-                    rows.append(
-                        (
-                            int(i),
-                            fr["frame_idx"],
-                            fr["width"],
-                            fr["height"],
-                            fr["mean_gray"],
-                            fr["sample_bytes"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame_idx", "width", "height",
-                    "mean_gray", "sample_bytes",
-                ],
-            )
-
-    return src.mapInPandas(gen, schema=MP4_FRAMES_SCHEMA)

@@ -999,9 +999,8 @@ def multimodal_decode_jpeg_progressive_q(
     inserts, interleaved progressive DC for color — are pinned by
     hand-assembled spec-byte streams in tests/test_properties.py
     (progressive plane == baseline plane, exact float equality).
-    Same mapInPandas plumbing as every codec; decode_jpeg dispatches
-    on the SOF marker so mixed baseline/progressive corpora need no
-    routing. Reference analogue: the image/files columns
+    decode_jpeg dispatches on the SOF marker so mixed
+    baseline/progressive corpora need no routing. Reference analogue: the image/files columns
     (app/db/postgres.py:144-145)."""
     from ..operators.multimodal import (
         decode_jpeg_features,
@@ -1079,9 +1078,11 @@ def multimodal_decode_mixed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     row: detected format, dimensions, channel count, and the first
     channel's mean (R for the color formats, gray for JPEG) — every
     value id-predictable because each per-format fixture is the same
-    closed-form render its dedicated query uses. Same Arrow-batched
-    mapInPandas plumbing; one pass, no shuffle."""
+    closed-form render its dedicated query uses. One Python pass per
+    row renders the fixture and decodes it; map-only, no shuffle."""
     from ..operators.multimodal import (
+        _per_blob,
+        _solid_rgb,
         encode_bmp,
         encode_jpeg_gray,
         encode_jpeg_gray_progressive,
@@ -1089,57 +1090,51 @@ def multimodal_decode_mixed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         real_image_decode,
     )
 
-    d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 300)
-    src = d.select("doc_id")
+    def encode(i: int) -> bytes:
+        w, h = i % 21 + 1, i % 13 + 1
+        if i % 4 == 0:
+            return encode_bmp(w, h, _solid_rgb(i))
+        if i % 4 == 1:
+            return encode_png(w, h, _solid_rgb(i))
+        if i % 4 == 2:
+            return encode_jpeg_gray(w, h, (i * 11) % 256)
+        return encode_jpeg_gray_progressive(w, h, (i * 11) % 256)
 
-    def gen(batches):
-        import pandas as pd
+    def rows(i: int, _: bytes) -> list[dict]:
+        blob = encode(i)
+        dec = real_image_decode(blob)
+        if blob[:2] == b"BM":
+            fmt = "bmp"
+        elif blob[:4] == b"\x89PNG":
+            fmt = "png"
+        else:
+            fmt = "jpeg_progressive" if dec.get("progressive") else "jpeg"
+        mean_c0 = dec.get("mean_r", dec.get("mean_gray"))
+        return [
+            {
+                "fmt": fmt,
+                "width": dec["width"],
+                "height": dec["height"],
+                "channels": dec.get("channels", 3),
+                "mean_c0": float(mean_c0),
+            }
+        ]
 
-        for pdf in batches:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = i % 21 + 1, i % 13 + 1
-                rgb = ((i * 3) % 256, (i * 5) % 256, (i * 7) % 256)
-                if i % 4 == 0:
-                    content = encode_bmp(w, h, rgb)
-                elif i % 4 == 1:
-                    content = encode_png(w, h, rgb)
-                elif i % 4 == 2:
-                    content = encode_jpeg_gray(w, h, (i * 11) % 256)
-                else:
-                    content = encode_jpeg_gray_progressive(
-                        w, h, (i * 11) % 256
-                    )
-                dec = real_image_decode(content)
-                if content[:2] == b"BM":
-                    fmt = "bmp"
-                elif content[:4] == b"\x89PNG":
-                    fmt = "png"
-                else:
-                    fmt = (
-                        "jpeg_progressive"
-                        if dec.get("progressive")
-                        else "jpeg"
-                    )
-                mean_c0 = dec.get("mean_r", dec.get("mean_gray"))
-                rows.append(
-                    (i, fmt, dec["width"], dec["height"],
-                     dec.get("channels", 3), float(mean_c0))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "fmt", "width", "height", "channels", "mean_c0",
-                ],
-            )
-
-    return src.mapInPandas(
-        gen,
-        schema=(
-            "doc_id bigint, fmt string, width int, height int, "
-            "channels int, mean_c0 double"
-        ),
+    # The input blob is empty: each row renders its own fixture in the
+    # decode pass. Rendering in a separate _per_id stage adds a second
+    # Python worker pass per task: +20-45 ms on this ~0.2 s query at sf0.1
+    # (4-vCPU VM, local[4]).
+    d = (
+        load_table(spark, sf_dir, "documents")
+        .where(F.col("doc_id") < 300)
+        .select("doc_id", F.lit(b"").alias("content"))
+    )
+    return _per_blob(
+        d,
+        "doc_id",
+        "content",
+        rows,
+        "doc_id bigint, fmt string, width int, height int, channels int, mean_c0 double",
     )
 
 
@@ -3549,8 +3544,7 @@ def multimodal_exif_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     mark, magic 42, IFD0 walk, ASCII/SHORT/RATIONAL type dispatch, and
     the inline-vs-offset value rule. Orientation/resolution/capture-time
     gates run on metadata like this long before any pixel decode, so the
-    parse is map-only over the binary column — the same Arrow batch
-    plumbing as the five pixel codecs. The oracle predicts every field
+    parse is map-only over the binary column. The oracle predicts every field
     from the id arithmetic; a hand-written spec-bytes fixture
     (tests/test_properties.py) keeps encoder and parser from sharing a
     hidden layout bug. Reference analogue: opaque image bytea columns
@@ -3909,8 +3903,7 @@ def multimodal_mp4_meta_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Sample/pixel DECODE (H.264 etc.) remains the one honest
     NotImplementedError in the image dispatcher — this closes the
     metadata half of the MP4 gate, the part a data pipeline actually
-    needs. Same Arrow-batched mapInPandas plumbing as the five image
-    codecs; map-only, zero shuffle. Reference analogue: opaque media
+    needs. Map-only, zero shuffle. Reference analogue: opaque media
     bytea columns (app/db/postgres.py:144-145)."""
     from ..operators.multimodal import decode_mp4_features, synthetic_mp4_frame
 

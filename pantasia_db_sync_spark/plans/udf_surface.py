@@ -31,7 +31,7 @@ from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from ..operators.ckpt import freeze
 from ..sources.catalog import load_table
-from .registry import fround, register
+from .registry import fround, local_result, register
 
 # Type OBJECTS, not DDL strings: workers import this module too (pickled
 # grouped-map funcs reference it), and parsing a DDL string needs an
@@ -76,7 +76,7 @@ def _run_stream_to_frame(spark: SparkSession, writer, name: str, tmp_dir: str) -
         # The memory sink already stores its rows ON the driver, so this
         # collect adds no new driver-memory exposure — it just detaches
         # the rows from the sink so the sink can be dropped.
-        return spark.createDataFrame(sink.collect(), sink.schema)
+        return local_result(spark, sink.collect(), sink.schema)
 
     return _drain(spark, writer.queryName(name), tmp_dir, detach, view=name)
 
@@ -794,7 +794,7 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         q.stop()
     sink = spark.table(name)
-    out = spark.createDataFrame(sink.collect(), sink.schema)
+    out = local_result(spark, sink.collect(), sink.schema)
     spark.catalog.dropTempView(name)
     return out
 
@@ -1051,7 +1051,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("l.key").isNull(), "base").otherwise("cdc").alias("src"),
         )
         # detach from the temp dirs before cleanup
-        return spark.createDataFrame(out.collect(), out.schema)
+        return local_result(spark, out.collect(), out.schema)
 
     return _drain(
         spark,
@@ -1146,7 +1146,7 @@ def stream_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
             "key", fround(F.col("value"), 2).alias("val")
         )
         # detach from the temp dirs before cleanup
-        return spark.createDataFrame(out.collect(), out.schema)
+        return local_result(spark, out.collect(), out.schema)
 
     return _drain(
         spark,

@@ -13,7 +13,11 @@ import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Spark's Python workers import the package too; they inherit
+# PYTHONPATH, not the driver's sys.path
+os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
 
 MARKS = [
     ("Exchange", re.compile(r"\bExchange (hash|range|Single|RoundRobin)")),

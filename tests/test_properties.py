@@ -1185,6 +1185,47 @@ def test_bmp_decoder_rejects_degenerate_dims():
             decode_bmp(bytes(bad))
 
 
+_PER_BLOB_SCHEMA = "doc_id bigint, n int, half double"
+
+
+def test_per_blob_keeps_exactly_the_rows_the_codec_yields(spark):
+    """``_per_blob`` with a codec that yields no row for some blobs
+    (and two for others) returns exactly the rows yielded, ``doc_id``
+    filled in and typed per the schema. A key outside the schema (an
+    object Arrow cannot encode) never reaches Arrow, and batches whose
+    blobs all yield nothing still carry the schema's columns."""
+    from pantasia_db_sync_spark.operators.multimodal import _per_blob
+
+    df = spark.createDataFrame(
+        [(i, bytes([i]) * i) for i in range(6)], "doc_id int, content binary"
+    )
+
+    def rows(i: int, blob: bytes) -> list[dict]:
+        return [{"n": len(blob), "half": len(blob) // 2, "extra": object()}] * (i % 3)
+
+    out = _per_blob(df, "doc_id", "content", rows, _PER_BLOB_SCHEMA)
+    assert out.dtypes == [("doc_id", "bigint"), ("n", "int"), ("half", "double")]
+    assert sorted(map(tuple, out.collect())) == [
+        (1, 1, 0.0), (2, 2, 1.0), (2, 2, 1.0), (4, 4, 2.0), (5, 5, 2.0), (5, 5, 2.0),
+    ]
+    none = _per_blob(df, "doc_id", "content", lambda i, b: [], _PER_BLOB_SCHEMA).toPandas()
+    assert len(none) == 0 and list(none.columns) == ["doc_id", "n", "half"]
+
+
+def test_per_id_and_per_blob_on_empty_input(spark):
+    """No input rows: both helpers give a 0-row frame with the schema's
+    columns."""
+    from pantasia_db_sync_spark.operators.multimodal import _per_blob, _per_id
+
+    empty = spark.createDataFrame([], "doc_id bigint, content binary")
+    ids = _per_id(empty, "doc_id", lambda i: b"x").toPandas()
+    assert len(ids) == 0 and list(ids.columns) == ["doc_id", "content"]
+    blobs = _per_blob(
+        empty, "doc_id", "content", lambda i, b: [{"n": 1, "half": 0.5}], _PER_BLOB_SCHEMA
+    ).toPandas()
+    assert len(blobs) == 0 and list(blobs.columns) == ["doc_id", "n", "half"]
+
+
 def test_lsh_signature_null_vector_propagates(spark):
     """A NULL embedding yields a NULL signature (not a crashed batch),
     and >2^53 signatures survive exactly (no float round-trip)."""

@@ -8,6 +8,11 @@ corpus builder lazily) — and checks, with the repo root and
 ``scripts/`` on ``sys.path`` as the scripts arrange for themselves,
 that each module resolves and each imported name exists. It starts no
 Spark session.
+
+One test does run a script: ``check_queries.py`` on a Python-UDF query
+from a directory other than the repo root, with no ``PYTHONPATH``, so
+the Spark Python workers find the package only if the script exports
+the root for them.
 """
 
 from __future__ import annotations
@@ -15,6 +20,9 @@ from __future__ import annotations
 import ast
 import importlib
 import importlib.util
+import os
+import subprocess
+import sys
 from pathlib import Path
 
 import pytest
@@ -57,7 +65,24 @@ def _unresolved(module: str, name: str | None) -> str | None:
 def test_script_imports_resolve(path, monkeypatch):
     monkeypatch.syspath_prepend(str(ROOT / "scripts"))
     monkeypatch.syspath_prepend(str(ROOT))
+    # importing a script exports the repo root on PYTHONPATH; undo it
+    # after the test
+    monkeypatch.setenv("PYTHONPATH", os.environ.get("PYTHONPATH", ""))
     problems = sorted(
         {p for m, n in _imports(path) if (p := _unresolved(m, n)) is not None}
     )
     assert not problems, f"{path.name}: {problems}"
+
+
+def test_check_queries_runs_a_python_udf_query_outside_the_repo_root(tmp_path, sf_dir):
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_TEST_SF_DIR"] = sf_dir
+    r = subprocess.run(
+        [sys.executable, str(ROOT / "scripts" / "check_queries.py"), "grouped_map_zscore"],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert r.returncode == 0 and "grouped_map_zscore: PASS" in r.stdout, r.stdout + r.stderr[-2000:]
